@@ -3,13 +3,15 @@ fixed pipeline (``src/lib.rs:30-65``), re-expressed Spark-first.
 
 Design (SURVEY.md §3.3 "Spark lifecycle"):
 
-* a file-list DataFrame (one row per input file) is repartitioned so each file
-  becomes one Spark task — parallelism across files/executors replaces the
-  reference's 8 hard-coded worker threads (``src/lib.rs:169,237``);
-* inside each task, ``mapInPandas`` runs the stdlib streaming reader
-  (:mod:`.xlsx` / :mod:`.xlsb`) and yields pandas chunks of ``batch_size``
-  rows — Arrow carries them to the JVM as columnar batches, replacing the
-  reference's hand-rolled RecordBatch pivot (``src/lib.rs:403-439``);
+* a task list (one row per workbook, or per byte range of one large sheet)
+  is built with explicit-slice ``parallelize`` so each row becomes one Spark
+  task — parallelism across files/executors replaces the reference's 8
+  hard-coded worker threads (``src/lib.rs:169,237``);
+* inside each task, ``mapInArrow`` runs :func:`read_workbook`, the one task
+  reader: the stdlib streaming scan (:mod:`.xlsx` / :mod:`.xlsb`) densified
+  into ``batch_size``-row Arrow batches, replacing the reference's
+  hand-rolled RecordBatch pivot (``src/lib.rs:403-439``). The ``excel``
+  DataSource (:mod:`.datasource`) runs the same reader per partition;
 * the output schema is inferred on the driver from the FIRST file's header row
   using the exact reference naming rules (``build_headers``), and is all
   nullable strings (``src/lib.rs:229-234``).
@@ -23,20 +25,22 @@ materialization of data ever happens.
 from __future__ import annotations
 
 import glob
+import itertools
 import os
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..errors import DataToParquetError
 from ..kernels import build_headers
-from .xlsx import XlsxWorkbook, _fast_path_eligible, walk_rows, walk_rows_fast
+from .xlsx import XlsxWorkbook
 
 __all__ = [
     "read_excel",
     "read_excel_all_sheets",
+    "read_workbook",
     "scan_sheet",
     "open_workbook",
     "DEFAULT_BATCH_SIZE",
@@ -62,17 +66,43 @@ def open_workbook(path: str):
     )
 
 
-def _batch_to_pdf(batch: list[list[str | None]], cols: list[str]) -> pd.DataFrame:
-    """Row-major batch -> pandas via C-level transpose. Positional columns
-    (set_axis, not a dict) so duplicate header names — which the reference's
-    naming rules can legitimately produce, e.g. ``a, a_2, a`` -> ``a, a_2,
-    a_2`` — survive instead of collapsing."""
-    n_cols = len(cols)
-    columns = list(zip(*batch)) if batch else [[] for _ in range(n_cols)]
-    pdf = pd.DataFrame(
-        {i: pd.Series(c, dtype=object) for i, c in enumerate(columns)}
-    )
-    return pdf.set_axis(cols, axis=1)
+def expand_paths(paths: str | list[str]) -> list[str]:
+    """Globs and directories (a directory means every workbook in it) to a
+    sorted file list; a pattern or directory matching nothing is an error."""
+    out: list[str] = []
+    for p in [paths] if isinstance(paths, str) else paths:
+        if os.path.isdir(p):
+            found = sorted(
+                glob.glob(os.path.join(p, "*.xlsx"))
+                + glob.glob(os.path.join(p, "*.xlsb"))
+            )
+        elif any(ch in p for ch in "*?["):
+            found = sorted(glob.glob(p))
+        else:
+            found = [p]
+        if not found:
+            raise DataToParquetError(f"no Excel files match {p!r}")
+        out.extend(found)
+    if not out:
+        raise DataToParquetError("no input paths")
+    return out
+
+
+def uniquify(names: list[str]) -> list[str]:
+    """``__dupN``-suffix the residual collisions of the reference naming
+    rules (``a, a_2, a`` -> ``a, a_2, a_2``): Spark's Arrow leg needs
+    unique column names."""
+    seen: dict[str, int] = {}
+    unique = []
+    for name in names:
+        k = seen.get(name, 0)
+        seen[name] = k + 1
+        unique.append(name if k == 0 else f"{name}__dup{k}")
+    return unique
+
+
+def string_schema(names: list[str]) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
 
 
 def _sheet_geometry(wb, sheet: str, skip_rows: int):
@@ -86,11 +116,34 @@ def _sheet_geometry(wb, sheet: str, skip_rows: int):
     return c0, c1 - c0 + 1, r0 + skip_rows
 
 
+def _dense_batches(
+    rows, start_col: int, num_cols: int, batch_size: int
+) -> Iterator[list[list[str | None]]]:
+    """Sparse rows -> ``batch_size``-row batches of dense rows over the
+    header's column span: absent cell → None (NULL), present-but-empty cell
+    → ``""`` (``src/lib.rs:398`` vs ``:428-433``); cells beyond the header
+    width are dropped (``src/lib.rs:424-425``)."""
+    end_col = start_col + num_cols
+    buf: list[list[str | None]] = []
+    for _, cells in rows:
+        dense: list[str | None] = [None] * num_cols
+        for col, s in cells:
+            if start_col <= col < end_col:
+                dense[col - start_col] = s
+        buf.append(dense)
+        if len(buf) >= batch_size:
+            yield buf
+            buf = []
+    if buf:
+        yield buf
+
+
 def scan_sheet(
     wb,
     sheet: str,
     skip_rows: int = 0,
     batch_size: int = DEFAULT_BATCH_SIZE,
+    span: tuple[int, int, int] | None = None,
 ) -> tuple[list[str], Iterator[list[list[str | None]]]]:
     """Stream one sheet: returns (headers, iterator of row-batches).
 
@@ -100,20 +153,21 @@ def scan_sheet(
       (``src/lib.rs:162,206-223``);
     * the header row is stringified and run through ``build_headers``
       (``src/lib.rs:441-465``);
-    * data rows densify sparsely-present cells over the header's column span:
-      absent cell → None (NULL), present-but-empty cell → ``""``
-      (``src/lib.rs:398`` vs ``:428-433``);
-    * cells beyond the header width are dropped (``src/lib.rs:424-425``);
-    * batches carry ``batch_size`` rows (``src/main.rs:31-32``).
+    * data rows are densified by :func:`_dense_batches` into batches of
+      ``batch_size`` rows (``src/main.rs:31-32``).
+
+    ``span`` restricts an .xlsx scan to one byte range of the sheet part
+    (see ``XlsxWorkbook.iter_rows_str``); a range past the header row
+    yields placeholder headers, which the split path ignores.
     """
     start_col, num_cols, header_row_idx = _sheet_geometry(wb, sheet, skip_rows)
 
-    rows = wb.iter_rows_str(sheet)
+    rows = wb.iter_rows_str(sheet, span) if span else wb.iter_rows_str(sheet)
 
     # --- header phase -----------------------------------------------------
     header_cells: dict[int, str] = {}
     first_row: int | None = None
-    pending_row: tuple[int, list[tuple[int, str]]] | None = None
+    pending: list[tuple[int, list[tuple[int, str]]]] = []
     for row, cells in rows:
         if first_row is None:
             first_row = row
@@ -124,7 +178,7 @@ def scan_sheet(
         if row == header_row_idx:
             header_cells = dict(cells)
             continue
-        pending_row = (row, cells)
+        pending.append((row, cells))
         break
 
     if header_row_idx is None:  # empty sheet
@@ -138,30 +192,8 @@ def scan_sheet(
         num_cols = max(header_cells) - start_col + 1
 
     headers = build_headers(header_cells, num_cols, start_col)
-
-    def batches() -> Iterator[list[list[str | None]]]:
-        import itertools
-
-        end_col = start_col + num_cols
-        buf: list[list[str | None]] = []
-        src = (
-            itertools.chain([pending_row], rows)
-            if pending_row is not None
-            else rows
-        )
-        for _, cells in src:
-            dense: list[str | None] = [None] * num_cols
-            for col, s in cells:
-                if start_col <= col < end_col:  # width truncation (O9)
-                    dense[col - start_col] = s
-            buf.append(dense)
-            if len(buf) >= batch_size:
-                yield buf
-                buf = []
-        if buf:
-            yield buf
-
-    return headers, batches()
+    rows = itertools.chain(pending, rows)
+    return headers, _dense_batches(rows, start_col, num_cols, batch_size)
 
 
 def infer_schema(
@@ -176,9 +208,39 @@ def infer_schema(
         headers, _ = scan_sheet(wb, sheet, skip_rows, batch_size=1)
     if not headers:
         raise DataToParquetError(f"no header row found in {path!r}")
-    return T.StructType(
-        [T.StructField(h, T.StringType(), True) for h in headers]
-    )
+    return string_schema(headers)
+
+
+def read_workbook(
+    path: str,
+    sheet_name: str | None,
+    sheet_index: int | None,
+    skip_rows: int,
+    batch_size: int,
+    names: list[str],
+    span: tuple[int, int, int] | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """The one task reader: one workbook (or one byte range of it) as Arrow
+    batches of nullable strings named ``names``, positionally.
+
+    A whole-workbook read first checks the file's header row against
+    ``names`` (same-position columns must not be silently remapped); a
+    byte-range read skips the check, which the split planner made once on
+    the driver.
+    """
+    with open_workbook(path) as wb:
+        sheet = wb.resolve_sheet(sheet_name, sheet_index)
+        headers, batches = scan_sheet(wb, sheet, skip_rows, batch_size, span)
+        if span is None and uniquify(headers) != names:
+            raise DataToParquetError(
+                f"{path!r}: header row {headers} does not match the "
+                f"schema {names}"
+            )
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, type=pa.string()) for col in zip(*batch)],
+                names=names,
+            )
 
 
 def read_excel(
@@ -199,102 +261,60 @@ def read_excel(
     first file), mirroring "one conversion = one schema". Passing ``schema``
     (all nullable strings, names = expected header row) skips the driver-side
     inference open — callers that already parsed the workbook (e.g.
-    :func:`read_excel_all_sheets`) avoid re-opening it; executor tasks still
-    validate each file's actual header row against it.
+    :func:`read_excel_all_sheets`) avoid re-opening it; each file's actual
+    header row is still validated against it.
+
+    Duplicate header names (the reference's ``a, a_2, a`` collision) survive
+    positionally: the Arrow leg runs on :func:`uniquify`-ed names and the
+    duplicates are restored afterwards via ``toDF``.
     """
-    if isinstance(paths, str):
-        paths = [paths]
-    # expand globs / directories (a directory means every workbook in it)
-    expanded: list[str] = []
-    for p in paths:
-        if os.path.isdir(p):
-            expanded.extend(
-                sorted(
-                    glob.glob(os.path.join(p, "*.xlsx"))
-                    + glob.glob(os.path.join(p, "*.xlsb"))
-                )
-            )
-        elif any(ch in p for ch in "*?["):
-            expanded.extend(sorted(glob.glob(p)))
-        else:
-            expanded.append(p)
-    paths = expanded
-    if not paths:
-        raise DataToParquetError("no input paths")
+    paths = expand_paths(paths)
     for p in paths:
         open_workbook(p).close()  # validate extensions + readability up front
 
     caller_schema = schema is not None
     if schema is None:
         schema = infer_schema(paths[0], sheet_name, sheet_index, skip_rows)
-    n_cols = len(schema)
     out_names = schema.fieldNames()
-    if len(set(out_names)) < n_cols:
-        # The reference's naming rules can collide (`a, a_2, a` → a, a_2,
-        # a_2). PySpark's pandas-result verification de-duplicates field
-        # names through a set, so the mapInPandas leg must run with unique
-        # internal names; the duplicates are restored afterwards via toDF.
-        seen: dict[str, int] = {}
-        unique = []
-        for name in out_names:
-            k = seen.get(name, 0)
-            seen[name] = k + 1
-            unique.append(name if k == 0 else f"{name}__dup{k}")
-        schema = T.StructType(
-            [T.StructField(u, T.StringType(), True) for u in unique]
-        )
+    names = uniquify(out_names)
 
-    def reader(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in iterator:
-            for path in pdf["path"]:
-                with open_workbook(path) as wb:
-                    sheet = wb.resolve_sheet(sheet_name, sheet_index)
-                    headers, batches = scan_sheet(
-                        wb, sheet, skip_rows, batch_size
-                    )
-                    if headers != out_names:
-                        raise DataToParquetError(
-                            f"{path!r}: header row {headers} does not match "
-                            f"the schema inferred from the first file "
-                            f"{out_names}"
-                        )
-                    for batch in batches:
-                        yield _batch_to_pdf(batch, cols)
-
-    def _restore_names(df: DataFrame) -> DataFrame:
-        return df if schema.fieldNames() == out_names else df.toDF(*out_names)
-
+    tasks = [(p, None) for p in paths]
     if len(paths) == 1 and paths[0].lower().endswith(".xlsx"):
-        split = _read_single_xlsx_split(
-            spark,
+        spans = _split_spans(
+            spark.sparkContext.defaultParallelism,
             paths[0],
-            schema,
             sheet_name,
             sheet_index,
             skip_rows,
-            batch_size,
-            # split fragments never see the header row, so a CALLER-passed
-            # schema is validated against it inside the split's single
-            # workbook open (the streaming `reader` checks per task;
-            # without this a stale schema silently mislabels columns —
-            # r9 review); the inferred-schema path needs no re-check
-            expected_headers=out_names if caller_schema else None,
+            # split ranges never see the header row, so a CALLER-passed
+            # schema is validated once on the driver (without this a stale
+            # schema silently mislabels columns — r9 review); an inferred
+            # one was read from this very header row
+            names if caller_schema else None,
         )
-        if split is not None:
-            return _restore_names(split)
+        if spans is not None:
+            tasks = [(paths[0], span) for span in spans]
 
-    # One slice per workbook via parallelize — an explicit-slices local
+    def reader(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for path, span in zip(*(c.to_pylist() for c in batch.columns)):
+                yield from read_workbook(
+                    path, sheet_name, sheet_index, skip_rows, batch_size,
+                    names, span,
+                )
+
+    # One slice per task via parallelize — an explicit-slices local
     # collection is already perfectly distributed, where the equivalent
     # createDataFrame(...).repartition(n) pays a full extra shuffle stage
     # (measured: 1.11 s -> 0.52 s for the 16-file fleet parse at the bench
-    # fixture size). On a real cluster the file list is driver-side either
-    # way; one task per file remains the unit of parallelism.
-    files = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths], len(paths)),
-        T.StructType([T.StructField("path", T.StringType())]),
-    )
-    return _restore_names(files.mapInPandas(reader, schema))
+    # fixture size), and a range repartition adds a sampling job on top.
+    # The task list is driver-side either way; one task per file (or per
+    # byte range) remains the unit of parallelism. Slice order is row order.
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(tasks, len(tasks)),
+        "path string, span array<long>",
+    ).mapInArrow(reader, string_schema(names))
+    return df if names == out_names else df.toDF(*out_names)
 
 
 def read_excel_all_sheets(
@@ -366,12 +386,7 @@ def read_excel_all_sheets(
             sheet_name=name,
             skip_rows=skip_rows,
             batch_size=batch_size,
-            schema=T.StructType(
-                [
-                    T.StructField(h, T.StringType(), True)
-                    for h in headers[name]
-                ]
-            ),
+            schema=string_schema(headers[name]),
         ).withColumn(sheet_column, F.lit(name))
         out = (
             part
@@ -381,149 +396,69 @@ def read_excel_all_sheets(
     return out
 
 
-def _read_single_xlsx_split(
-    spark: SparkSession,
+def _split_spans(
+    n_tasks: int,
     path: str,
-    schema: T.StructType,
     sheet_name: str | None,
     sheet_index: int | None,
     skip_rows: int,
-    batch_size: int,
-    expected_headers: list[str] | None = None,
-) -> DataFrame | None:
-    """Parallelize ONE large .xlsx across tasks by splitting the sheet XML
-    at ``<row`` boundaries.
+    expected: list[str] | None,
+) -> list[tuple[int, int, int]] | None:
+    """Plan the parallel read of ONE large .xlsx: ``(head, lo, hi)`` byte
+    ranges of the inflated sheet part, aligned on ``<row`` boundaries, one
+    per task (the ``span`` of :func:`read_workbook`).
 
-    The deflate stream itself can't be range-read, so the driver inflates
-    the sheet part once to a scratch file (bytes, no parsing — cheap), scans
-    for row-start offsets with C-speed ``bytes.find``, and hands each task a
-    byte range aligned on whole ``<row>`` elements. Tasks wrap their slice
-    in a synthetic root and run the same ``walk_rows`` decoder (namespace-
-    free fragments), so semantics are identical to the streaming path — the
+    The deflate stream can't be range-read, so the driver inflates the part
+    once (bytes, no parsing) and finds row starts with C-speed
+    ``bytes.find``. No copy is written anywhere: each task re-opens the
+    workbook it already needs for shared strings, inflates the part up to
+    its own range (``ZipExtFile.seek``) and parses the range behind the
+    part's own first ``head`` bytes, so it runs on any master and the same
+    decoder tiers see the same namespaces as the streaming path — the
     golden tests run through both.
 
-    Returns None for small sheets (single-task streaming path is faster).
+    ``expected`` (the caller's uniquified schema names) is checked against
+    the header row here, once. Returns None for small sheets (the
+    single-task streaming path is faster) and for sheets whose geometry or
+    row numbering only the streaming path can resolve.
     """
-    import tempfile
-
-    # the scratch file lives on the driver's local disk — executors can only
-    # read it in local mode (cluster mode would need a shared scratch FS)
-    if not spark.sparkContext.master.startswith("local"):
-        return None
-
     with XlsxWorkbook(path) as wb:
         sheet = wb.resolve_sheet(sheet_name, sheet_index)
-        member = dict(wb._sheet_targets)[sheet]
-        info = wb._zip.getinfo(member)
-        if info.file_size < SPLIT_THRESHOLD_BYTES:
+        member = wb._member(sheet)
+        if wb._zip.getinfo(member).file_size < SPLIT_THRESHOLD_BYTES:
             return None
-        dims = wb.dimensions(sheet)
-        if dims is None:
+        if wb.dimensions(sheet) is None:
             # no declared dimension box → geometry must be inferred from the
-            # cell stream; only the streaming path implements that
+            # header row, which only the first range sees
             return None
-        # split fragments index columns positionally and never see the
-        # header row, so a CALLER-passed schema is validated here on the
-        # already-open workbook (one header-row scan, no extra open —
-        # the streaming path's per-task check has no split equivalent)
-        if expected_headers is not None:
+        if expected is not None:
             actual, _ = scan_sheet(wb, sheet, skip_rows, batch_size=1)
-            if actual != expected_headers:
+            if uniquify(actual) != expected:
                 raise DataToParquetError(
                     f"{path!r}: header row {actual} does not match the "
-                    f"provided schema {expected_headers}"
+                    f"provided schema {expected}"
                 )
         data = wb._zip.read(member)
 
-    # fragments re-number r-less rows from 0, which would corrupt the
+    # a range re-numbers r-less rows from 0, which would corrupt the
     # header-relative indexing — require explicit r attributes throughout
     # (every mainstream writer emits them; fall back to streaming otherwise)
     if data.count(b"<row ") != data.count(b"<row r="):
         return None
-
-    # geometry + header row resolved driver-side (header text already went
-    # into `schema` via infer_schema)
     start = data.find(b"<sheetData")
     end = data.rfind(b"</sheetData>")
     if start < 0 or end < 0:
         return None
-    body_start = data.find(b"<row", start)
-    if body_start < 0 or body_start > end:
+    head = data.find(b"<row", start)
+    if head < 0 or head > end:
         return None
 
-    n_splits = max(1, min(spark.sparkContext.defaultParallelism, 64))
-    approx = max(1, (end - body_start) // n_splits)
-    offsets = [body_start]
-    pos = body_start
+    approx = max(1, (end - head) // max(1, min(n_tasks, 64)))
+    offsets = [head]
     while True:
-        nxt = data.find(b"<row", pos + approx)
+        nxt = data.find(b"<row", offsets[-1] + approx)
         if nxt < 0 or nxt >= end:
             break
         offsets.append(nxt)
-        pos = nxt
     offsets.append(end)
-
-    scratch = tempfile.NamedTemporaryFile(
-        prefix="d2p_sheet_", suffix=".xml", delete=False
-    )
-    scratch.write(data)
-    scratch.close()
-    scratch_path = scratch.name
-    import atexit
-
-    atexit.register(lambda: os.path.exists(scratch_path) and os.remove(scratch_path))
-    # eligibility proved once driver-side over the WHOLE sheet buffer; every
-    # fragment inherits it
-    use_fast = _fast_path_eligible(data)
-    del data
-
-    (r0, c0), (_, c1) = dims  # dims presence checked above
-    start_col, num_cols = c0, c1 - c0 + 1
-    header_row_idx = r0 + skip_rows
-
-    ranges = [
-        (scratch_path, offsets[i], offsets[i + 1], i)
-        for i in range(len(offsets) - 1)
-    ]
-    cols = [f.name for f in schema.fields]
-    n_cols = len(cols)
-    sst_source = path
-
-    def frag_reader(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        sst: list[str] | None = None
-        for pdf in iterator:
-            for xml_path, lo, hi, _idx in pdf.itertuples(index=False):
-                if sst is None:
-                    with XlsxWorkbook(sst_source) as wb2:
-                        sst = wb2._shared_strings()
-                with open(xml_path, "rb") as f:
-                    f.seek(lo)
-                    frag = f.read(hi - lo)
-                wrapped = b"<sheetData>" + frag + b"</sheetData>"
-                end_col = start_col + num_cols
-                buf: list[list[str | None]] = []
-                rows_iter = (
-                    walk_rows_fast(frag, sst)
-                    if use_fast
-                    else walk_rows(io.BytesIO(wrapped), "", sst)
-                ) or walk_rows(io.BytesIO(wrapped), "", sst)
-                for row, cells in rows_iter:
-                    if row <= header_row_idx:
-                        continue  # leading rows + header (driver-side)
-                    dense: list[str | None] = [None] * num_cols
-                    for col, s in cells:
-                        if start_col <= col < end_col:
-                            dense[col - start_col] = s
-                    buf.append(dense)
-                    if len(buf) >= batch_size:
-                        yield _batch_to_pdf(buf, cols)
-                        buf = []
-                if buf:
-                    yield _batch_to_pdf(buf, cols)
-
-    rdf = spark.createDataFrame(
-        ranges, "xml_path string, lo long, hi long, idx int"
-    ).repartitionByRange(len(ranges), "idx")
-    return rdf.mapInPandas(frag_reader, schema)
+    return [(head, lo, hi) for lo, hi in zip(offsets, offsets[1:])]

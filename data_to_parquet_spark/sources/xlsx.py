@@ -8,17 +8,25 @@ present but valueless cells are emitted as Empty (→ ``""`` downstream, while
 absent cells densify to NULL — the reference's critical null-vs-empty-string
 distinction, ``src/lib.rs:398`` vs ``:428-433``).
 
-Memory profile: ``ElementTree.iterparse`` with element eviction keeps only one
-``<row>`` subtree resident; the shared-strings table is loaded up front (as
-calamine also does). That bounds per-task memory at O(row + sst), which is the
-same bound the reference claims (``README.md:9``). Exception: sheet parts up
-to ``_FAST_BUFFER_LIMIT`` take the find-based fast path, which buffers the
-whole (inflated) part — per-task memory is then O(min(sheet, limit) + sst);
-larger sheets keep the streaming bound.
+Decoder tiers. :func:`walk_buffer` picks one per in-memory buffer: the
+find-based walker when :func:`_fast_path_eligible` proves its
+preconditions, else the ElementTree walker. Inside the find-based walker
+each row first tries the strict single-regex tokenizer and falls back to
+the generic find-based cell split. All three tiers hand every ``<v>``
+text to the one ``t=`` decoder, :func:`decode_value`, and must emit the
+ElementTree walker's stream exactly (the differential tests pin this).
+
+Memory bound: sheet parts up to ``_FAST_BUFFER_LIMIT`` are inflated into
+one buffer, so per-task memory is O(min(sheet, limit) + sst). Larger parts
+stream through ``ElementTree.iterparse`` with element eviction, which keeps
+one ``<row>`` subtree resident: O(row + sst), the bound the reference
+claims (``README.md:9``). A split-path task holds only its own byte range
+of the part, O(sheet / tasks + sst).
 """
 
 from __future__ import annotations
 
+import io
 import re
 import zipfile
 from typing import Iterator
@@ -26,7 +34,7 @@ from xml.etree import ElementTree as ET
 
 from ..errors import DataToParquetError
 from ..kernels import _ERROR_TOKENS as _XLSX_ERR_TOKENS
-from ..kernels import CellValue
+from ..kernels import format_float
 
 __all__ = ["XlsxWorkbook", "parse_cell_ref", "parse_dimension"]
 
@@ -41,18 +49,53 @@ _PKG_REL_NS = (
 _CELL_REF_RE = re.compile(r"^([A-Z]+)(\d+)$")
 
 
-def walk_rows(stream, ns: str, sst: list[str]):
-    """Row-subtree walker over SpreadsheetML ``<row>`` elements: yields
-    (row_idx, [(col, normalized_string), ...]) per physically-present row.
+def decode_value(t: str | None, v: str, sst: list[str]) -> str:
+    """Normalized string of a cell's non-empty ``<v>`` text under its
+    ``t=`` type (ECMA-376 §18.18.11 ST_CellType), per the reference
+    stringify rules (``src/lib.rs:387-400``)."""
+    if t is None or t == "n":
+        # int fast path (calamine parses i64 first, f64 fallback)
+        digits = v[1:] if v[0] == "-" else v
+        if digits.isdigit():
+            # canonical form passes through untouched; "007"/"-0"
+            # renormalize via int()
+            if (
+                len(digits) <= 18
+                and (digits == "0" or digits[0] != "0")
+                and v != "-0"
+            ):
+                return v
+            iv = int(v)
+            if -(2**63) <= iv < 2**63:
+                return str(iv)
+            # beyond i64 → f64 like calamine
+        try:
+            return format_float(float(v))
+        except ValueError:
+            return v
+    if t == "s":
+        try:
+            return sst[int(v)]
+        except (ValueError, IndexError):
+            return v
+    if t == "b":
+        return "false" if v in ("0", "false", "FALSE") else "true"
+    if t == "e":
+        return _XLSX_ERR_TOKENS.get(v, v)
+    return v  # "str", "d", unknown -> literal text
 
-    ``ns`` is the element-namespace prefix (``{...spreadsheetml...}`` for a
-    full worksheet part, ``""`` for re-parsed XML fragments that lost the
-    default-namespace declaration — see excel.py's large-file split path).
-    """
-    from ..kernels import format_float
 
-    ROW, C, V, IS = f"{ns}row", f"{ns}c", f"{ns}v", f"{ns}is"
-    err_tokens = _XLSX_ERR_TOKENS
+def _text_of(elem: ET.Element) -> str:
+    """Concatenated text of all <t> descendants (rich-text runs)."""
+    return "".join(t.text or "" for t in elem.iter(f"{_MAIN_NS}t"))
+
+
+def walk_rows(stream, sst: list[str]):
+    """ElementTree row walker over a SpreadsheetML worksheet document:
+    yields (row_idx, [(col, normalized_string), ...]) per physically-present
+    ``<row>``. This is the reference tier the faster ones are tested
+    against."""
+    ROW, C, V, IS = (f"{_MAIN_NS}{tag}" for tag in ("row", "c", "v", "is"))
     row_counter = -1
     for _, el in ET.iterparse(stream):  # end events only
         if el.tag != ROW:
@@ -76,64 +119,21 @@ def walk_rows(stream, ns: str, sst: list[str]):
                 col = acc - 1
             else:
                 col += 1
-            # decode cell to its normalized string
-            t = c.get("t")
-            v = None
-            is_el = None
-            for child in c:
-                tag = child.tag
-                if tag == V:
-                    v = child.text
+            s = ""  # present-but-empty unless a <v>/<is> child holds text
+            for child in c:  # first direct v/is child wins
+                if child.tag == V:
+                    if child.text:
+                        s = decode_value(c.get("t"), child.text, sst)
                     break
-                if tag == IS:
-                    is_el = child
+                if child.tag == IS:
+                    s = _text_of(child)
                     break
-            if is_el is not None:
-                out.append((col, "".join(tt.text or "" for tt in is_el.iter(f"{ns}t"))))
-                continue
-            if v is None:
-                out.append((col, ""))  # present-but-empty -> ""
-                continue
-            if t is None or t == "n":
-                # int fast path (calamine parses i64 first, f64 fallback)
-                digits = v[1:] if v[0] == "-" else v
-                if digits.isdigit():
-                    # canonical form passes through untouched; "007"/"-0"
-                    # renormalize via int()
-                    if (
-                        len(digits) <= 18
-                        and (digits == "0" or digits[0] != "0")
-                        and v != "-0"
-                    ):
-                        out.append((col, v))
-                        continue
-                    iv = int(v)
-                    if -(2**63) <= iv < 2**63:
-                        out.append((col, str(iv)))
-                        continue
-                    # beyond i64 → f64 like calamine
-                try:
-                    out.append((col, format_float(float(v))))
-                except ValueError:
-                    out.append((col, v))
-            elif t == "s":
-                try:
-                    out.append((col, sst[int(v)]))
-                except (ValueError, IndexError):
-                    out.append((col, v))
-            elif t == "b":
-                out.append(
-                    (col, "false" if v in ("0", "false", "FALSE") else "true")
-                )
-            elif t == "e":
-                out.append((col, err_tokens.get(v, v)))
-            else:  # "str", "d", unknown -> literal text
-                out.append((col, v))
+            out.append((col, s))
         yield row_counter, out
         el.clear()
 
 
-# --- regex fast path -------------------------------------------------------
+# --- find-based fast path --------------------------------------------------
 # SpreadsheetML from real producers (Excel, openpyxl, this repo's fixture
 # writer) declares the main namespace as the DEFAULT namespace and never by
 # prefix, never uses CDATA/comments/PIs inside sheet parts, and is UTF-8.
@@ -143,17 +143,18 @@ def walk_rows(stream, ns: str, sst: list[str]):
 # disqualifies the buffer and the ET walker runs instead, so the fast path
 # can never be silently wrong: it either proves its preconditions or defers.
 
-# Per-task inflate-to-memory bound for the fast path. Deliberately small:
-# with one task per workbook, every concurrent task may hold buffer + decoded
-# text (~3× this) at once, so the cap — not O(row) streaming — becomes the
-# per-task memory bound whenever the fast path engages. Sheets above the cap
-# use the streaming ET walker (or the XML-split path for single large files).
+# Per-task inflate-to-memory bound for whole sheet parts. Deliberately
+# small: with one task per workbook, every concurrent task may hold buffer +
+# decoded text (~3× this) at once. Larger parts stream through the ET walker
+# (or the split path's byte ranges for single large files).
 _FAST_BUFFER_LIMIT = 32 * 1024 * 1024
 _MAIN_NS_URI = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _XMLNS_PREFIX_RE = re.compile(rb'xmlns:[A-Za-z0-9_]+="([^"]*)"')
 _ROW_TAIL = " />\t\r\n"
 _ROW_R_RE = re.compile(r'\br="(\d+)"')
 _T_TEXT_RE = re.compile(r"<t(?:\s[^>]*)?>(.*?)</t>", re.S)
+# a cell start tag, not a rich-text run property such as <color>/<charset>
+_CELL_SPLIT_RE = re.compile(r"<c(?=[\s/>])")
 
 
 def _fast_path_eligible(data: bytes) -> bool:
@@ -207,14 +208,12 @@ _STRICT_CELL_RE = re.compile(
 
 
 def _decode_strict_cells(
-    body: str, sst: list[str], format_float
+    body: str, sst: list[str]
 ) -> list[tuple[int, str]] | None:
     """Decode a ``<row>`` body via :data:`_STRICT_CELL_RE`; None when the
-    matches do not tile the body exactly (caller falls back). The decode
-    branches mirror the generic walker's t-dispatch verbatim."""
+    matches do not tile the body exactly (caller falls back)."""
     out: list[tuple[int, str]] = []
     pos = 0
-    err_tokens = _XLSX_ERR_TOKENS
     for m in _STRICT_CELL_RE.finditer(body):
         if m.start() != pos:
             return None
@@ -223,60 +222,81 @@ def _decode_strict_cells(
         acc = 0
         for ch in letters:
             acc = acc * 26 + (ord(ch) - 64)
-        col = acc - 1
         if istext is not None:
-            out.append((col, istext))
-            continue
-        if not v:  # self-closing or empty <v> → present-but-empty
-            out.append((col, ""))
-            continue
-        if t is None or t == "n":
-            digits = v[1:] if v[0] == "-" else v
-            if digits.isdigit():
-                if (
-                    len(digits) <= 18
-                    and (digits == "0" or digits[0] != "0")
-                    and v != "-0"
-                ):
-                    out.append((col, v))
-                    continue
-                iv = int(v)
-                if -(2**63) <= iv < 2**63:
-                    out.append((col, str(iv)))
-                    continue
-            try:
-                out.append((col, format_float(float(v))))
-            except ValueError:
-                out.append((col, v))
-        elif t == "s":
-            try:
-                out.append((col, sst[int(v)]))
-            except (ValueError, IndexError):
-                out.append((col, v))
-        elif t == "b":
-            out.append(
-                (col, "false" if v in ("0", "false", "FALSE") else "true")
-            )
-        elif t == "e":
-            out.append((col, err_tokens.get(v, v)))
-        else:  # "str", "d", unknown → literal text
-            out.append((col, v))
+            out.append((acc - 1, istext))
+        elif not v:  # self-closing or empty <v> → present-but-empty
+            out.append((acc - 1, ""))
+        else:
+            out.append((acc - 1, decode_value(t, v, sst)))
     if pos != len(body):
         return None
     return out
 
 
-def walk_rows_fast(data: bytes, sst: list[str]):
-    """Regex row walker over a whole sheet-part buffer. Same contract as
-    :func:`walk_rows`; only called when ``_fast_path_eligible`` proved the
-    preconditions. Returns None (pre-iteration) if decoding fails."""
-    from ..kernels import format_float
+def _decode_cells(body: str, sst: list[str]) -> list[tuple[int, str]]:
+    """Generic find-based decode of a ``<row>`` body: splitting on ``<c``
+    start tags isolates cells, because inside ``<row>`` the schema-valid
+    children are only ``<c>`` (``<extLst>`` is excluded by eligibility).
+    All parsing after the split is C-speed str.find/slice."""
+    out: list[tuple[int, str]] = []
+    col = -1
+    for part in _CELL_SPLIT_RE.split(body)[1:]:
+        gt = part.find(">")
+        attrs = part[:gt]
+        ri = attrs.find(' r="')
+        if ri != -1:
+            # identical arithmetic to walk_rows' manual A1 parse
+            acc = 0
+            for ch in attrs[ri + 4 : attrs.index('"', ri + 4)]:
+                o = ord(ch)
+                if o < 65 or o > 90:
+                    break
+                acc = acc * 26 + (o - 64)
+            col = acc - 1
+        else:
+            col += 1
+        if attrs.endswith("/"):  # self-closing <c/> → present-empty
+            out.append((col, ""))
+            continue
+        content = part[gt + 1 :]
+        # ET semantics: first direct v/is child wins
+        vpos = content.find("<v")
+        ipos = content.find("<is")
+        if ipos != -1 and (vpos == -1 or ipos < vpos):
+            out.append(
+                (
+                    col,
+                    "".join(
+                        _unescape(t) for t in _T_TEXT_RE.findall(content[ipos:])
+                    ),
+                )
+            )
+            continue
+        v = None
+        if vpos != -1:
+            vgt = content.find(">", vpos)
+            if vgt != -1 and content[vgt - 1] != "/":
+                vend = content.find("</v>", vgt)
+                if vend != -1:
+                    v = _unescape(content[vgt + 1 : vend])
+        if not v:  # absent or empty <v> → present-but-empty
+            out.append((col, ""))
+            continue
+        ti = attrs.find(' t="')
+        t = attrs[ti + 4 : attrs.index('"', ti + 4)] if ti != -1 else None
+        out.append((col, decode_value(t, v, sst)))
+    return out
 
+
+def walk_rows_fast(data: bytes, sst: list[str]):
+    """Find-based row walker over a whole in-memory worksheet document.
+    Same contract as :func:`walk_rows`; only called when
+    ``_fast_path_eligible`` proved the preconditions. Returns None
+    (pre-iteration) if decoding fails."""
     try:
         text = data.decode("utf-8")
     except UnicodeDecodeError:
         return None
-    err_tokens = _XLSX_ERR_TOKENS
 
     def rows():
         pos = 0
@@ -293,8 +313,7 @@ def walk_rows_fast(data: bytes, sst: list[str]):
             j = text.find(">", i)
             if j < 0:
                 return
-            head = text[i:j]
-            m = _ROW_R_RE.search(head)
+            m = _ROW_R_RE.search(text[i:j])
             row_counter = int(m.group(1)) - 1 if m else row_counter + 1
             if text[j - 1] == "/":  # self-closing: physically-present, empty
                 yield row_counter, []
@@ -304,114 +323,20 @@ def walk_rows_fast(data: bytes, sst: list[str]):
             if k < 0:
                 return
             body = text[j + 1 : k]
-            strict = _decode_strict_cells(body, sst, format_float)
-            if strict is not None:
-                yield row_counter, strict
-                pos = k + 6
-                continue
-            out: list[tuple[int, str]] = []
-            col = -1
-            # inside <row>, schema-valid children are only <c> (extLst is
-            # excluded by eligibility), so splitting on "<c" isolates cells;
-            # all parsing below is C-speed str.find/slice, no regex
-            for part in body.split("<c")[1:]:
-                gt = part.find(">")
-                attrs = part[:gt]
-                ri = attrs.find(' r="')
-                if ri != -1:
-                    # identical arithmetic to walk_rows' manual A1 parse
-                    acc = 0
-                    for ch in attrs[ri + 4 : attrs.index('"', ri + 4)]:
-                        o = ord(ch)
-                        if o < 65 or o > 90:
-                            break
-                        acc = acc * 26 + (o - 64)
-                    col = acc - 1
-                else:
-                    col += 1
-                if attrs.endswith("/"):  # self-closing <c/> → present-empty
-                    out.append((col, ""))
-                    continue
-                content = part[gt + 1 :]
-                # ET semantics: first direct v/is child wins
-                vpos = content.find("<v")
-                ipos = content.find("<is")
-                if ipos != -1 and (vpos == -1 or ipos < vpos):
-                    # single-run fast case: exactly one <t>…</t>
-                    tpos = content.find("<t", ipos + 3)
-                    if tpos != -1 and content[tpos + 2] in " >/":
-                        tgt = content.find(">", tpos)
-                        if tgt != -1 and content[tgt - 1] != "/":
-                            tend = content.find("</t>", tgt)
-                            if (
-                                tend != -1
-                                and content.find("<t", tend + 4) == -1
-                            ):
-                                out.append(
-                                    (col, _unescape(content[tgt + 1 : tend]))
-                                )
-                                continue
-                    out.append(
-                        (
-                            col,
-                            "".join(
-                                _unescape(t)
-                                for t in _T_TEXT_RE.findall(content[ipos:])
-                            ),
-                        )
-                    )
-                    continue
-                v = None
-                if vpos != -1:
-                    vgt = content.find(">", vpos)
-                    if vgt != -1 and content[vgt - 1] != "/":
-                        vend = content.find("</v>", vgt)
-                        if vend != -1:
-                            v = _unescape(content[vgt + 1 : vend])
-                if not v:  # absent or empty <v> → present-but-empty
-                    out.append((col, ""))
-                    continue
-                ti = attrs.find(' t="')
-                t = (
-                    attrs[ti + 4 : attrs.index('"', ti + 4)]
-                    if ti != -1
-                    else None
-                )
-                if t is None or t == "n":
-                    digits = v[1:] if v[0] == "-" else v
-                    if digits.isdigit():
-                        if (
-                            len(digits) <= 18
-                            and (digits == "0" or digits[0] != "0")
-                            and v != "-0"
-                        ):
-                            out.append((col, v))
-                            continue
-                        iv = int(v)
-                        if -(2**63) <= iv < 2**63:
-                            out.append((col, str(iv)))
-                            continue
-                    try:
-                        out.append((col, format_float(float(v))))
-                    except ValueError:
-                        out.append((col, v))
-                elif t == "s":
-                    try:
-                        out.append((col, sst[int(v)]))
-                    except (ValueError, IndexError):
-                        out.append((col, v))
-                elif t == "b":
-                    out.append(
-                        (col, "false" if v in ("0", "false", "FALSE") else "true")
-                    )
-                elif t == "e":
-                    out.append((col, err_tokens.get(v, v)))
-                else:  # "str", "d", unknown → literal text
-                    out.append((col, v))
-            yield row_counter, out
+            cells = _decode_strict_cells(body, sst)
+            if cells is None:
+                cells = _decode_cells(body, sst)
+            yield row_counter, cells
             pos = k + 6
 
     return rows()
+
+
+def walk_buffer(data: bytes, sst: list[str]):
+    """The tier choice for one in-memory worksheet document: the find-based
+    walker when the buffer proves its preconditions, else ElementTree."""
+    rows = walk_rows_fast(data, sst) if _fast_path_eligible(data) else None
+    return rows if rows is not None else walk_rows(io.BytesIO(data), sst)
 
 
 def parse_cell_ref(ref: str) -> tuple[int, int]:
@@ -433,11 +358,6 @@ def parse_dimension(ref: str) -> tuple[tuple[int, int], tuple[int, int]]:
         return parse_cell_ref(a), parse_cell_ref(b)
     cell = parse_cell_ref(ref)
     return cell, cell
-
-
-def _text_of(elem: ET.Element) -> str:
-    """Concatenated text of all <t> descendants (rich-text runs)."""
-    return "".join(t.text or "" for t in elem.iter(f"{_MAIN_NS}t"))
 
 
 class XlsxWorkbook:
@@ -517,10 +437,12 @@ class XlsxWorkbook:
         return self._sst
 
     # -- cell stream -------------------------------------------------------
+    def _member(self, sheet: str) -> str:
+        return dict(self._sheet_targets)[sheet]
+
     def dimensions(self, sheet: str) -> tuple[tuple[int, int], tuple[int, int]] | None:
         """The sheet's declared dimension box, if present."""
-        member = dict(self._sheet_targets)[sheet]
-        with self._zip.open(member) as f:
+        with self._zip.open(self._member(sheet)) as f:
             for event, el in ET.iterparse(f, events=("start",)):
                 tag = el.tag
                 if tag == f"{_MAIN_NS}dimension":
@@ -530,110 +452,35 @@ class XlsxWorkbook:
                     return None  # no dimension element before data
         return None
 
-    def iter_cells(self, sheet: str) -> Iterator[tuple[int, int, CellValue]]:
-        """Sparse row-major cell stream: yields (row, col, CellValue).
-
-        Mirrors calamine's ``worksheet_cells_reader`` (src/lib.rs:42-44):
-        only physically-present cells are yielded.
-        """
-        sst = self._shared_strings()
-        member = dict(self._sheet_targets)[sheet]
-        row_idx = -1
-        col_idx = -1
-        with self._zip.open(member) as f:
-            context = ET.iterparse(f, events=("start", "end"))
-            for event, el in context:
-                tag = el.tag
-                if event == "start":
-                    if tag == f"{_MAIN_NS}row":
-                        r = el.get("r")
-                        row_idx = (int(r) - 1) if r else row_idx + 1
-                        col_idx = -1
-                    continue
-                # end events
-                if tag == f"{_MAIN_NS}c":
-                    ref = el.get("r")
-                    if ref:
-                        _, col_idx = parse_cell_ref(ref)
-                    else:
-                        col_idx += 1
-                    yield row_idx, col_idx, self._cell_value(el, sst)
-                    el.clear()
-                elif tag == f"{_MAIN_NS}row":
-                    el.clear()
-
-    @staticmethod
-    def _cell_value(c: ET.Element, sst: list[str]) -> CellValue:
-        """Decode one ``<c>`` element into a tagged CellValue.
-
-        Cell types per ECMA-376 §18.18.11 (ST_CellType): ``s`` shared string,
-        ``str`` formula string, ``inlineStr``, ``b`` boolean, ``e`` error,
-        ``d`` ISO date, ``n``/absent number.
-        """
-        t = c.get("t", "n")
-        v_el = c.find(f"{_MAIN_NS}v")
-        if t == "inlineStr":
-            is_el = c.find(f"{_MAIN_NS}is")
-            return CellValue("string", _text_of(is_el) if is_el is not None else "")
-        if v_el is None or v_el.text is None:
-            return CellValue("empty", None)
-        raw = v_el.text
-        if t == "s":
-            try:
-                return CellValue("string", sst[int(raw)])
-            except (ValueError, IndexError):
-                return CellValue("string", raw)
-        if t == "str":
-            return CellValue("string", raw)
-        if t == "b":
-            return CellValue("bool", raw not in ("0", "false", "FALSE"))
-        if t == "e":
-            return CellValue("error", raw)
-        if t == "d":
-            return CellValue("iso", raw)
-        # number: int if losslessly integral text within i64 (calamine
-        # parses i64 first, falls back to f64)
-        try:
-            iv = int(raw)
-            if -(2**63) <= iv < 2**63:
-                return CellValue("int", iv)
-        except ValueError:
-            pass
-        try:
-            return CellValue("float", float(raw))
-        except ValueError:
-            return CellValue("string", raw)
-
-    # -- fused fast row scan ----------------------------------------------
     def iter_rows_str(
-        self, sheet: str
+        self, sheet: str, span: tuple[int, int, int] | None = None
     ) -> Iterator[tuple[int, list[tuple[int, str]]]]:
-        """Fast path: yields (row_idx, [(col, normalized_string), ...]) for
-        each physically-present row, cells already normalized per the
-        reference stringify rules (``src/lib.rs:387-400``).
+        """Yields (row_idx, [(col, normalized_string), ...]) for each
+        physically-present row, cells already normalized per the reference
+        stringify rules (``src/lib.rs:387-400``).
 
-        ~3× faster than ``iter_cells``+``cell_to_string``: one Python-level
-        iterparse event per ROW (the C parser builds the row subtree),
-        direct-child walks instead of per-cell events, no regex and no
-        intermediate CellValue allocations. The semantic contract is
-        identical — the golden tests run against both paths.
+        ``span = (head, lo, hi)`` reads only the rows in bytes ``[lo, hi)``
+        of the inflated part (the split path's task unit): they are parsed
+        as a document of their own, the part's first ``head`` bytes (XML
+        declaration, ``<worksheet …>`` start tag with its namespace
+        declarations, up to ``<sheetData>``) + the range + the closing
+        tags, so every tier sees the same namespaces as the whole part.
         """
         sst = self._shared_strings()
-        member = dict(self._sheet_targets)[sheet]
-        info = self._zip.getinfo(member)
-        if info.file_size <= _FAST_BUFFER_LIMIT:
-            data = self._zip.read(member)
-            if _fast_path_eligible(data):
-                fast = walk_rows_fast(data, sst)
-                if fast is not None:
-                    yield from fast
-                    return
-            import io as _io
-
-            yield from walk_rows(_io.BytesIO(data), _MAIN_NS, sst)
-            return
+        member = self._member(sheet)
         with self._zip.open(member) as f:
-            yield from walk_rows(f, _MAIN_NS, sst)
+            if span is not None:
+                head, lo, hi = span
+                prolog = f.read(head)
+                f.seek(lo)  # forward seek inflates and discards
+                doc = b"".join(
+                    (prolog, f.read(hi - lo), b"</sheetData></worksheet>")
+                )
+                yield from walk_buffer(doc, sst)
+            elif self._zip.getinfo(member).file_size <= _FAST_BUFFER_LIMIT:
+                yield from walk_buffer(f.read(), sst)
+            else:
+                yield from walk_rows(f, sst)
 
     def close(self) -> None:
         self._zip.close()

@@ -18,20 +18,27 @@ def registered(spark):
 
 
 def test_format_matches_read_excel(registered, tmp_path):
-    path = str(tmp_path / "t.xlsx")
-    rows = [["id", "v", ""]] + [
-        [i, i * 1.5 if i % 3 else None, "" if i % 2 else f"s{i}"]
-        for i in range(25)
-    ]
-    write_xlsx(path, {"Data": rows})
-    via_format = registered.read.format("excel").option(
-        "sheet_name", "Data"
-    ).load(path)
-    via_api = read_excel(registered, path, sheet_name="Data")
-    assert via_format.schema == via_api.schema
-    assert sorted(map(tuple, via_format.collect())) == sorted(
-        map(tuple, via_api.collect())
-    )
+    """Both front ends expand a file, a glob and a directory the same way
+    (one shared helper) and read them identically."""
+    for k, name in enumerate(["t.xlsx", "u.xlsx"]):
+        rows = [["id", "v", ""]] + [
+            [i, i * 1.5 if i % 3 else None, "" if i % 2 else f"s{i}"]
+            for i in range(25 * k, 25 * k + 25)
+        ]
+        write_xlsx(str(tmp_path / name), {"Data": rows})
+    for path, n in [
+        (str(tmp_path / "t.xlsx"), 25),
+        (str(tmp_path / "*.xlsx"), 50),
+        (str(tmp_path), 50),
+    ]:
+        via_format = registered.read.format("excel").option(
+            "sheet_name", "Data"
+        ).load(path)
+        via_api = read_excel(registered, path, sheet_name="Data")
+        assert via_format.schema == via_api.schema
+        got = sorted(map(tuple, via_format.collect()))
+        assert got == sorted(map(tuple, via_api.collect()))
+        assert len(got) == n
 
 
 def test_format_multi_file_and_options(registered, tmp_path):

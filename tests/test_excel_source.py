@@ -346,6 +346,95 @@ def test_split_path_order_preservation(spark, tmp_path, monkeypatch):
     assert seqs == list(range(n))
 
 
+def _rewrite_sheet(path: str, rewrite) -> None:
+    import zipfile
+
+    with zipfile.ZipFile(path) as z:
+        parts = {i.filename: z.read(i.filename) for i in z.infolist()}
+    member = "xl/worksheets/sheet1.xml"
+    parts[member] = rewrite(parts[member].decode()).encode()
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        for name, data in parts.items():
+            z.writestr(name, data)
+
+
+@pytest.mark.parametrize("ineligible_by", ["extLst", "comments"])
+def test_split_path_excel_written_prefixes(
+    spark, tmp_path, monkeypatch, ineligible_by
+):
+    """Excel declares x14ac/mc on <worksheet> and uses them on every row;
+    a trailing <extLst> (or comments between rows) takes the sheet off the
+    find-based tier. Split ranges must still resolve those prefixes and
+    read exactly what the streaming path reads (once: ParseError 'unbound
+    prefix' on the ElementTree fallback)."""
+    import re
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    path = str(tmp_path / "excel_written.xlsx")
+    n = 3000
+    write_xlsx(
+        path,
+        {"S": [["id", "name", "v"]] + [[i, f"n{i}", i * 0.5] for i in range(n)]},
+    )
+
+    def excelify(xml: str) -> str:
+        xml = xml.replace(
+            "<worksheet ",
+            '<worksheet xmlns:mc="http://schemas.openxmlformats.org/'
+            'markup-compatibility/2006" xmlns:x14ac="http://schemas.'
+            'microsoft.com/office/spreadsheetml/2009/9/ac" '
+            'mc:Ignorable="x14ac" ',
+        )
+        xml = re.sub(
+            r'<row r="(\d+)">',
+            r'<row r="\1" spans="1:3" x14ac:dyDescent="0.25">',
+            xml,
+        )
+        if ineligible_by == "extLst":
+            return xml.replace(
+                "</worksheet>",
+                '<extLst><ext uri="{78C0D931-6437-407d-A8EE-F0AAD7539E65}">'
+                "</ext></extLst></worksheet>",
+            )
+        return re.sub(r'(<row r="\d*00" )', r"<!-- page -->\1", xml)
+
+    _rewrite_sheet(path, excelify)
+    streamed = _rows(read_excel(spark, path))
+    assert len(streamed) == n
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    split_df = read_excel(spark, path)
+    assert split_df.rdd.getNumPartitions() > 1  # split path engaged
+    assert _rows(split_df) == streamed
+
+
+def test_split_path_leaves_no_temp_files(spark, tmp_path, monkeypatch):
+    """A split-path convert must leave no file behind in the temp directory
+    (a scratch copy of the inflated sheet there would outlive the
+    conversion, one per large convert in a long-lived process)."""
+    import tempfile
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    src = str(tmp_path / "no_scratch.xlsx")
+    n = 5000
+    write_xlsx(src, {"S": [["seq"]] + [[i] for i in range(n)]})
+    # a streaming convert first, so one-time JVM temp files (native codec
+    # libraries) already exist before the snapshot
+    convert(src, str(tmp_path / "warm.parquet"), spark=spark)
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    assert read_excel(spark, src).rdd.getNumPartitions() > 1  # split path
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    assert convert(src, str(tmp_path / "split.parquet"), spark=spark) == n
+    left = [
+        name
+        for name in set(os.listdir(tmp)) - before
+        if os.path.isfile(os.path.join(tmp, name))
+    ]
+    assert left == []
+
+
 def test_duplicate_header_names_survive(spark, tmp_path):
     """`a, a_2, a` -> columns [a, a_2, a_2] (reference naming collision) —
     values must stay positionally aligned, not collapse."""
@@ -394,13 +483,15 @@ def test_mismatched_multi_file_headers_rejected(spark, tmp_path):
 
 
 def test_fast_and_et_walkers_agree(tmp_path):
-    """The find-based fast walker and the ElementTree fallback must produce
-    identical streams (the fast path is only ever an optimization)."""
+    """Every decoder tier must emit the ElementTree walker's stream exactly
+    (the fast tiers are only ever an optimization): the find-based walker
+    with its strict per-row tier, and with the strict tier refusing every
+    row, on machine-written and Excel-written cell forms."""
     import io
+    from unittest import mock
 
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
-        _MAIN_NS,
         _fast_path_eligible,
         walk_rows,
         walk_rows_fast,
@@ -415,6 +506,14 @@ def test_fast_and_et_walkers_agree(tmp_path):
         [None, "", -0.0, "x"],
         [3, 10**19, False, None],
         [4, ("error", "#DIV/0!"), ("iso", "2024-01-02T03:04:05"), ("formula_str", "=SUM")],
+        # Excel-written forms: s= styled numbers, <f> before <v>,
+        # entity-escaped <v>/<t> text, multi-run rich text
+        [("date_serial", 45292.5), ("formula", "SUM(A2:A3)", 6),
+         ("formula", 'A1&"<x>"', "a&b <c>"), ("rich", ["bold", " & plain <x>"])],
+        [("date_serial", 45292), ("error", "#N/A"), ("shared", "s&<>\"'"),
+         ("formula_str", "x&amp;y")],
+        [("rich", ["", "only styled"]), ("formula", "NOW()", 45292.25),
+         ("formula", "A1", ""), ("rich", ["a", "b", "c"])],
     ]
     write_xlsx(path, {"Data": rows})
     with XlsxWorkbook(path) as wb:
@@ -424,9 +523,16 @@ def test_fast_and_et_walkers_agree(tmp_path):
         sst = wb._shared_strings()
         assert _fast_path_eligible(data)
         fast = list(walk_rows_fast(data, sst))
-        et = list(walk_rows(io.BytesIO(data), _MAIN_NS, sst))
-    assert fast == et
-    assert len(fast) == 5
+        with mock.patch(
+            "data_to_parquet_spark.sources.xlsx._decode_strict_cells",
+            return_value=None,
+        ):
+            find_only = list(walk_rows_fast(data, sst))
+        et = list(walk_rows(io.BytesIO(data), sst))
+    assert fast == find_only == et
+    assert len(fast) == 8
+    assert et[5][1] == [(0, "45292.5"), (1, "6"), (2, "a&b <c>"),
+                        (3, "bold & plain <x>")]
 
 
 def test_date_styled_serial_cells_emit_raw_serial(spark, tmp_path):

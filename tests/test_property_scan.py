@@ -14,20 +14,16 @@ from data_to_parquet_spark.sources.excel import open_workbook, scan_sheet
 
 from .xlsx_fixture import write_xlsx
 
-# cell spec strategy: None (absent), ("empty",), int, float, str, bool
-_cell = st.one_of(
-    st.none(),
-    st.just(("empty",)),
+_text = st.text(
+    alphabet=st.characters(codec="utf-8", exclude_categories=("Cs", "Cc")),
+    max_size=8,
+)
+_number = st.one_of(
     st.integers(min_value=-(10**12), max_value=10**12),
     st.floats(allow_nan=False, allow_infinity=False, width=64),
-    st.text(
-        alphabet=st.characters(
-            codec="utf-8", exclude_categories=("Cs", "Cc")
-        ),
-        max_size=8,
-    ),
-    st.booleans(),
 )
+# cell spec strategy: None (absent), ("empty",), int, float, str, bool
+_cell = st.one_of(st.none(), st.just(("empty",)), _number, _text, st.booleans())
 
 _grid = st.lists(
     st.lists(_cell, min_size=1, max_size=6), min_size=1, max_size=8
@@ -145,17 +141,35 @@ def test_xlsb_scan_matches_model(grid, skip, tmp_path_factory):
     assert rows == m_rows
 
 
+# Excel-written cell forms on top of the model's: s= styled numbers, <f>
+# before <v>, shared/escaped text and multi-run rich text
+_walker_cell = st.one_of(
+    _cell,
+    st.tuples(st.just("date_serial"), _number),
+    st.tuples(st.just("formula"), _text, st.one_of(_number, _text)),
+    st.tuples(st.just("rich"), st.lists(_text, min_size=2, max_size=3)),
+    st.tuples(st.just("shared"), _text),
+    st.tuples(st.just("formula_str"), _text),
+    st.tuples(st.just("error"), st.sampled_from(["#DIV/0!", "#N/A", "#REF!"])),
+)
+_walker_grid = st.lists(
+    st.lists(_walker_cell, min_size=1, max_size=6), min_size=1, max_size=8
+)
+
+
 @settings(max_examples=40, deadline=None)
-@given(grid=_grid)
+@given(grid=_walker_grid)
 def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
-    """Differential fuzz: the find-based fast walker and the ElementTree
-    walker must emit identical (row, cells) streams for any fixture the
-    writer can produce (sparse cells, unicode, entities, floats, bools)."""
+    """Differential fuzz: the find-based fast walker (with its strict
+    per-row tier, and with that tier refusing every row) and the
+    ElementTree walker must emit identical (row, cells) streams for any
+    fixture the writer can produce (sparse cells, unicode, entities,
+    floats, bools, styled numbers, formulas, rich text)."""
     import io
+    from unittest import mock
 
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
-        _MAIN_NS,
         _fast_path_eligible,
         walk_rows,
         walk_rows_fast,
@@ -171,5 +185,10 @@ def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
         sst = wb._shared_strings()
         assert _fast_path_eligible(data)
         fast = list(walk_rows_fast(data, sst))
-        et = list(walk_rows(io.BytesIO(data), _MAIN_NS, sst))
-    assert fast == et
+        with mock.patch(
+            "data_to_parquet_spark.sources.xlsx._decode_strict_cells",
+            return_value=None,
+        ):
+            find_only = list(walk_rows_fast(data, sst))
+        et = list(walk_rows(io.BytesIO(data), sst))
+    assert fast == find_only == et

@@ -8,14 +8,13 @@ attribute reorderings and multi-run inline strings.
 
 from __future__ import annotations
 
-from data_to_parquet_spark.kernels import format_float
 from data_to_parquet_spark.sources.xlsx import _decode_strict_cells
 
 SST = ["alpha", "beta"]
 
 
 def dec(body: str):
-    return _decode_strict_cells(body, SST, format_float)
+    return _decode_strict_cells(body, SST)
 
 
 def test_strict_decodes_the_three_shapes():

@@ -17,6 +17,11 @@ row is a list of cell specs; a cell spec is one of
 * ``("formula_str", text)`` — formula string cell (t="str")
 * ``("date_serial", num)`` — numeric cell styled with built-in date format
   numFmtId 14 (``s=`` points at a real styles.xml cellXfs entry)
+* ``("formula", expr, value)`` — cached formula result, ``<f>`` before
+  ``<v>`` as Excel writes it (``t="str"`` when ``value`` is a string)
+* ``("rich", [run, ...])`` — multi-run rich inline string, each run an
+  ``<r>`` element; runs after the first carry Excel's ``<rPr>`` run
+  properties (``<color>``, ``<rFont>``, …)
 """
 
 from __future__ import annotations
@@ -89,6 +94,23 @@ def write_xlsx(
                 return f'<c r="{ref}" t="s"><v>{sst_id(spec[1])}</v></c>'
             if kind == "formula_str":
                 return f'<c r="{ref}" t="str"><v>{escape(spec[1])}</v></c>'
+            if kind == "formula":
+                f = f"<f>{escape(spec[1])}</f>"
+                if isinstance(spec[2], str):
+                    return f'<c r="{ref}" t="str">{f}<v>{escape(spec[2])}</v></c>'
+                return f'<c r="{ref}">{f}<v>{_fmt_num(spec[2])}</v></c>'
+            if kind == "rich":
+                style = (
+                    '<rPr><b/><sz val="11"/><color theme="1"/>'
+                    '<rFont val="Calibri"/><family val="2"/>'
+                    '<scheme val="minor"/></rPr>'
+                )
+                runs = "".join(
+                    f'<r>{style if i else ""}'
+                    f'<t xml:space="preserve">{escape(run)}</t></r>'
+                    for i, run in enumerate(spec[1])
+                )
+                return f'<c r="{ref}" t="inlineStr"><is>{runs}</is></c>'
             if kind == "date_serial":
                 nonlocal used_date_style
                 used_date_style = True
