@@ -13,7 +13,10 @@ arithmetic-oracle contract.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -114,6 +117,17 @@ def _make_multisheet_fixture(path: str) -> None:
     write_xlsx(path, {"alpha": alpha, "beta": beta, "gamma": gamma})
 
 
+@functools.cache
+def _multisheet_fixture() -> str:
+    """The fixture is deterministic, so a process writes it once (one temp
+    directory, removed at exit) and every call reads the same file."""
+    tmp = tempfile.mkdtemp(prefix="d2p_multisheet_")
+    atexit.register(shutil.rmtree, tmp, True)
+    src = os.path.join(tmp, "fixture.xlsx")
+    _make_multisheet_fixture(src)
+    return src
+
+
 @MISC.register(
     "excel_multisheet_union",
     oracle=f"""
@@ -147,12 +161,9 @@ def excel_multisheet_union(spark, sf_dir):
     Scale: per-sheet plans parallelize like any read_excel (one task per
     file/split); the union is plan-level concatenation, no shuffle.
     """
-    tmp = tempfile.mkdtemp(prefix="d2p_multisheet_")
-    src = os.path.join(tmp, "fixture.xlsx")
-    _make_multisheet_fixture(src)
     from ..sources.excel import read_excel_all_sheets
 
-    return read_excel_all_sheets(spark, src).select(
+    return read_excel_all_sheets(spark, _multisheet_fixture()).select(
         "id", "val", "tag", "note", "_sheet"
     )
 

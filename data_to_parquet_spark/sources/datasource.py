@@ -27,8 +27,8 @@ Differences from :func:`read_excel` (documented deviations):
   ``__dupN`` suffixes — a named format cannot rename columns after the
   fact the way ``read_excel``'s ``toDF`` restore does;
 * the single-large-file split path is not applied (a DataSource partition
-  maps to a whole file); use ``read_excel`` to parallelize inside one
-  giant workbook.
+  maps to a whole file); use ``read_excel`` to split one giant workbook
+  across tasks.
 
 Path expansion, schema inference, header uniquify and the task reader
 itself are :mod:`.excel`'s, so both front ends read identically.

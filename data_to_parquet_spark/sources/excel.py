@@ -3,21 +3,24 @@ fixed pipeline (``src/lib.rs:30-65``), re-expressed Spark-first.
 
 Design (SURVEY.md §3.3 "Spark lifecycle"):
 
-* a task list (one row per workbook, or per byte range of one large sheet)
-  is built with explicit-slice ``parallelize`` so each row becomes one Spark
-  task — parallelism across files/executors replaces the reference's 8
+* a driver-side task list (one entry per workbook, or per nominal byte
+  range of one large sheet, planned without reading sheet data) becomes one
+  Spark task per entry: ``spark.range(n)`` in ``n`` slices feeds task ``i``
+  its entry — parallelism across files/executors replaces the reference's 8
   hard-coded worker threads (``src/lib.rs:169,237``);
-* inside each task, ``mapInArrow`` runs :func:`read_workbook`, the one task
-  reader: the stdlib streaming scan (:mod:`.xlsx` / :mod:`.xlsb`) densified
-  into ``batch_size``-row Arrow batches, replacing the reference's
-  hand-rolled RecordBatch pivot (``src/lib.rs:403-439``). The ``excel``
+* inside each task, one ``mapInArrow`` Python stage runs
+  :func:`read_workbook`, the one task reader: the stdlib streaming scan
+  (:mod:`.xlsx` / :mod:`.xlsb`) densified into ``batch_size``-row Arrow
+  batches, replacing the reference's hand-rolled RecordBatch pivot
+  (``src/lib.rs:403-439``). The ``excel``
   DataSource (:mod:`.datasource`) runs the same reader per partition;
 * the output schema is inferred on the driver from the FIRST file's header row
   using the exact reference naming rules (``build_headers``), and is all
   nullable strings (``src/lib.rs:229-234``).
 
-Scale posture: at 100 TB (= millions of workbooks) the file list itself is a
-DataFrame, schema inference touches only one file, and each task's memory is
+Scale posture: at 100 TB (= millions of workbooks) the file list rides in
+the pickled task command, which PySpark broadcasts once it exceeds 1 MiB;
+schema inference touches only one file, and each task's memory is
 bounded by one row + the shared-string table of its own file. No driver-side
 materialization of data ever happens.
 """
@@ -297,23 +300,22 @@ def read_excel(
 
     def reader(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            for path, span in zip(*(c.to_pylist() for c in batch.columns)):
+            for i in batch.column(0).to_pylist():
+                path, span = tasks[i]
                 yield from read_workbook(
                     path, sheet_name, sheet_index, skip_rows, batch_size,
                     names, span,
                 )
 
-    # One slice per task via parallelize — an explicit-slices local
-    # collection is already perfectly distributed, where the equivalent
-    # createDataFrame(...).repartition(n) pays a full extra shuffle stage
-    # (measured: 1.11 s -> 0.52 s for the 16-file fleet parse at the bench
-    # fixture size), and a range repartition adds a sampling job on top.
-    # The task list is driver-side either way; one task per file (or per
-    # byte range) remains the unit of parallelism. Slice order is row order.
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(tasks, len(tasks)),
-        "path string, span array<long>",
-    ).mapInArrow(reader, string_schema(names))
+    # One task per file or byte range, in row order, and ONE Python stage:
+    # task i of a range(n) with n slices reads tasks[i] from the reader's
+    # closure (PySpark broadcasts a pickled command above 1 MiB, so a large
+    # fleet's list is not shipped once per task). A task list fed in as
+    # rows of a local collection would run a second Python worker call in
+    # every task, ~0.25 s of worker setup CPU each.
+    df = spark.range(0, len(tasks), 1, len(tasks)).mapInArrow(
+        reader, string_schema(names)
+    )
     return df if names == out_names else df.toDF(*out_names)
 
 
@@ -341,7 +343,11 @@ def read_excel_all_sheets(
 
     Scale: each sheet is an independent :func:`read_excel` plan (single-
     file split parallelism included), and the union is a zero-shuffle
-    plan-level concatenation — Spark unions are not exchanges. The
+    plan-level concatenation — Spark unions are not exchanges. A sheet
+    read as one task is a single-partition plan, and Spark 4.1's union
+    (``spark.sql.unionOutputPartitioning``) merges single-partition
+    children, so such sheets are read one after another in ONE task;
+    split sheets keep their own tasks. The
     workbook is parsed ONCE on the driver (sheet list + every header
     row); each per-sheet plan receives its schema instead of re-opening
     the file.
@@ -404,28 +410,29 @@ def _split_spans(
     skip_rows: int,
     expected: list[str] | None,
 ) -> list[tuple[int, int, int]] | None:
-    """Plan the parallel read of ONE large .xlsx: ``(head, lo, hi)`` byte
-    ranges of the inflated sheet part, aligned on ``<row`` boundaries, one
-    per task (the ``span`` of :func:`read_workbook`).
+    """Plan the parallel read of ONE large .xlsx: ``(head, lo, hi)`` nominal
+    byte ranges of the inflated sheet part, one per task (the ``span`` of
+    :func:`read_workbook`).
 
-    The deflate stream can't be range-read, so the driver inflates the part
-    once (bytes, no parsing) and finds row starts with C-speed
-    ``bytes.find``. No copy is written anywhere: each task re-opens the
-    workbook it already needs for shared strings, inflates the part up to
-    its own range (``ZipExtFile.seek``) and parses the range behind the
-    part's own first ``head`` bytes, so it runs on any master and the same
-    decoder tiers see the same namespaces as the streaming path — the
-    golden tests run through both.
+    The driver reads no sheet data: the ranges are equal slices of the
+    part's inflated size (``ZipInfo.file_size``) after ``head``, the offset
+    of the first ``<row``, which is looked for in the part's first MiB.
+    Each task aligns its own range on ``<row r="`` boundaries
+    (``XlsxWorkbook.iter_rows_str``), re-opens the workbook it already needs
+    for shared strings and parses its rows behind the part's own first
+    ``head`` bytes, so it runs on any master and the same decoder tiers see
+    the same namespaces as the streaming path — the golden tests run
+    through both.
 
     ``expected`` (the caller's uniquified schema names) is checked against
     the header row here, once. Returns None for small sheets (the
-    single-task streaming path is faster) and for sheets whose geometry or
-    row numbering only the streaming path can resolve.
+    single-task streaming path is faster), for sheets whose geometry only
+    the streaming path can resolve and for a first row past the first MiB.
     """
     with XlsxWorkbook(path) as wb:
         sheet = wb.resolve_sheet(sheet_name, sheet_index)
-        member = wb._member(sheet)
-        if wb._zip.getinfo(member).file_size < SPLIT_THRESHOLD_BYTES:
+        size = wb._zip.getinfo(wb._member(sheet)).file_size
+        if size < SPLIT_THRESHOLD_BYTES:
             return None
         if wb.dimensions(sheet) is None:
             # no declared dimension box → geometry must be inferred from the
@@ -438,27 +445,10 @@ def _split_spans(
                     f"{path!r}: header row {actual} does not match the "
                     f"provided schema {expected}"
                 )
-        data = wb._zip.read(member)
-
-    # a range re-numbers r-less rows from 0, which would corrupt the
-    # header-relative indexing — require explicit r attributes throughout
-    # (every mainstream writer emits them; fall back to streaming otherwise)
-    if data.count(b"<row ") != data.count(b"<row r="):
+        head = wb.first_row_offset(sheet)
+    if head is None:
         return None
-    start = data.find(b"<sheetData")
-    end = data.rfind(b"</sheetData>")
-    if start < 0 or end < 0:
-        return None
-    head = data.find(b"<row", start)
-    if head < 0 or head > end:
-        return None
-
-    approx = max(1, (end - head) // max(1, min(n_tasks, 64)))
-    offsets = [head]
-    while True:
-        nxt = data.find(b"<row", offsets[-1] + approx)
-        if nxt < 0 or nxt >= end:
-            break
-        offsets.append(nxt)
-    offsets.append(end)
-    return [(head, lo, hi) for lo, hi in zip(offsets, offsets[1:])]
+    n = max(1, min(n_tasks, 64))
+    step = max(1, (size - head) // n)
+    bounds = list(range(head, size, step)[:n]) + [size]
+    return [(head, lo, hi) for lo, hi in zip(bounds, bounds[1:])]

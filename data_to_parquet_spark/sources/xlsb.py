@@ -15,12 +15,12 @@ Exposes the same interface as :class:`.xlsx.XlsxWorkbook` so the Spark source
 from __future__ import annotations
 
 import struct
-import zipfile
 from typing import BinaryIO, Iterator
 from xml.etree import ElementTree as ET
 
 from ..errors import DataToParquetError
 from ..kernels import CellValue
+from .xlsx import Workbook
 
 __all__ = ["XlsbWorkbook"]
 
@@ -144,17 +144,10 @@ def _real_to_cell(v: float) -> CellValue:
     return CellValue("float", v)
 
 
-class XlsbWorkbook:
+class XlsbWorkbook(Workbook):
     """Lazily-scanning .xlsb workbook with the XlsxWorkbook interface."""
 
-    def __init__(self, path: str) -> None:
-        self.path = path
-        try:
-            self._zip = zipfile.ZipFile(path)
-        except (zipfile.BadZipFile, OSError) as e:
-            raise DataToParquetError(f"cannot open xlsb {path!r}: {e}") from e
-        self._sheet_targets = self._load_sheet_map()
-        self._sst: list[str] | None = None
+    _KIND = "xlsb"
 
     # -- workbook structure ------------------------------------------------
     def _load_sheet_map(self) -> list[tuple[str, str]]:
@@ -189,28 +182,6 @@ class XlsbWorkbook:
                 sheets.append((name, target))
         return sheets
 
-    @property
-    def sheet_names(self) -> list[str]:
-        return [name for name, _ in self._sheet_targets]
-
-    def resolve_sheet(
-        self, sheet_name: str | None = None, sheet_index: int | None = None
-    ) -> str:
-        names = self.sheet_names
-        if sheet_name is not None:
-            if sheet_name not in names:
-                raise DataToParquetError(f"Sheet {sheet_name!r} not found")
-            return sheet_name
-        if sheet_index is not None:
-            if sheet_index >= len(names) or sheet_index < 0:
-                raise DataToParquetError(
-                    f"Sheet index {sheet_index} out of bounds"
-                )
-            return names[sheet_index]
-        if not names:
-            raise DataToParquetError("No worksheets found")
-        return names[0]
-
     # -- shared strings ----------------------------------------------------
     def _shared_strings(self) -> list[str]:
         if self._sst is None:
@@ -232,8 +203,7 @@ class XlsbWorkbook:
     def dimensions(
         self, sheet: str
     ) -> tuple[tuple[int, int], tuple[int, int]] | None:
-        member = dict(self._sheet_targets)[sheet]
-        with self._zip.open(member) as f:
+        with self._zip.open(self._member(sheet)) as f:
             for rid, payload in iter_records(f):
                 if rid == BRT_WS_DIM:
                     r0, r1, c0, c1 = struct.unpack_from("<IIII", payload, 0)
@@ -245,9 +215,8 @@ class XlsbWorkbook:
     def iter_cells(self, sheet: str) -> Iterator[tuple[int, int, CellValue]]:
         """Sparse row-major cell stream (row, col, CellValue)."""
         sst = self._shared_strings()
-        member = dict(self._sheet_targets)[sheet]
         row = 0
-        with self._zip.open(member) as f:
+        with self._zip.open(self._member(sheet)) as f:
             for rid, payload in iter_records(f):
                 if rid == BRT_ROW_HDR:
                     (row,) = struct.unpack_from("<I", payload, 0)
@@ -303,12 +272,3 @@ class XlsbWorkbook:
             cells.append((col, cell_to_string(value)))
         if cur_row is not None:
             yield cur_row, cells
-
-    def close(self) -> None:
-        self._zip.close()
-
-    def __enter__(self) -> "XlsbWorkbook":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()

@@ -155,6 +155,11 @@ _ROW_R_RE = re.compile(r'\br="(\d+)"')
 _T_TEXT_RE = re.compile(r"<t(?:\s[^>]*)?>(.*?)</t>", re.S)
 # a cell start tag, not a rich-text run property such as <color>/<charset>
 _CELL_SPLIT_RE = re.compile(r"<c(?=[\s/>])")
+# split ranges start at row tags whose first attribute is r=
+_ROW_R = b'<row r="'
+_RANGE_END_RE = re.compile(rb'<row r="|</sheetData>')
+_FIRST_ROW_RE = re.compile(rb"<sheetData[\s>].*?(<row[\s/>])", re.S)
+_READ_ON_BYTES = 64 * 1024
 
 
 def _fast_path_eligible(data: bytes) -> bool:
@@ -360,17 +365,65 @@ def parse_dimension(ref: str) -> tuple[tuple[int, int], tuple[int, int]]:
     return cell, cell
 
 
-class XlsxWorkbook:
-    """Lazily-scanning .xlsx workbook (reference O1/O4 semantics)."""
+class Workbook:
+    """The shell .xlsx and .xlsb workbooks share: the zip container, the
+    ``[(sheet_name, zip_member)]`` map a subclass's ``_load_sheet_map``
+    reads, sheet selection and the context-manager protocol."""
+
+    _KIND = ""
 
     def __init__(self, path: str) -> None:
         self.path = path
         try:
             self._zip = zipfile.ZipFile(path)
         except (zipfile.BadZipFile, OSError) as e:
-            raise DataToParquetError(f"cannot open xlsx {path!r}: {e}") from e
+            raise DataToParquetError(
+                f"cannot open {self._KIND} {path!r}: {e}"
+            ) from e
         self._sheet_targets = self._load_sheet_map()
         self._sst: list[str] | None = None
+
+    @property
+    def sheet_names(self) -> list[str]:
+        return [name for name, _ in self._sheet_targets]
+
+    def resolve_sheet(
+        self, sheet_name: str | None = None, sheet_index: int | None = None
+    ) -> str:
+        """Reference sheet-selection rules (``get_sheet_name``, src/lib.rs:105-124):
+        explicit name > 0-based index (bounds-checked) > first sheet."""
+        names = self.sheet_names
+        if sheet_name is not None:
+            if sheet_name not in names:
+                raise DataToParquetError(f"Sheet {sheet_name!r} not found")
+            return sheet_name
+        if sheet_index is not None:
+            if sheet_index >= len(names) or sheet_index < 0:
+                raise DataToParquetError(
+                    f"Sheet index {sheet_index} out of bounds"
+                )
+            return names[sheet_index]
+        if not names:
+            raise DataToParquetError("No worksheets found")
+        return names[0]
+
+    def _member(self, sheet: str) -> str:
+        return dict(self._sheet_targets)[sheet]
+
+    def close(self) -> None:
+        self._zip.close()
+
+    def __enter__(self) -> "Workbook":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
+class XlsxWorkbook(Workbook):
+    """Lazily-scanning .xlsx workbook (reference O1/O4 semantics)."""
+
+    _KIND = "xlsx"
 
     # -- workbook structure ------------------------------------------------
     def _load_sheet_map(self) -> list[tuple[str, str]]:
@@ -397,30 +450,6 @@ class XlsxWorkbook:
                     sheets.append((el.get("name", f"Sheet{len(sheets) + 1}"), target))
         return sheets
 
-    @property
-    def sheet_names(self) -> list[str]:
-        return [name for name, _ in self._sheet_targets]
-
-    def resolve_sheet(
-        self, sheet_name: str | None = None, sheet_index: int | None = None
-    ) -> str:
-        """Reference sheet-selection rules (``get_sheet_name``, src/lib.rs:105-124):
-        explicit name > 0-based index (bounds-checked) > first sheet."""
-        names = self.sheet_names
-        if sheet_name is not None:
-            if sheet_name not in names:
-                raise DataToParquetError(f"Sheet {sheet_name!r} not found")
-            return sheet_name
-        if sheet_index is not None:
-            if sheet_index >= len(names) or sheet_index < 0:
-                raise DataToParquetError(
-                    f"Sheet index {sheet_index} out of bounds"
-                )
-            return names[sheet_index]
-        if not names:
-            raise DataToParquetError("No worksheets found")
-        return names[0]
-
     # -- shared strings ----------------------------------------------------
     def _shared_strings(self) -> list[str]:
         if self._sst is None:
@@ -437,9 +466,6 @@ class XlsxWorkbook:
         return self._sst
 
     # -- cell stream -------------------------------------------------------
-    def _member(self, sheet: str) -> str:
-        return dict(self._sheet_targets)[sheet]
-
     def dimensions(self, sheet: str) -> tuple[tuple[int, int], tuple[int, int]] | None:
         """The sheet's declared dimension box, if present."""
         with self._zip.open(self._member(sheet)) as f:
@@ -459,12 +485,18 @@ class XlsxWorkbook:
         physically-present row, cells already normalized per the reference
         stringify rules (``src/lib.rs:387-400``).
 
-        ``span = (head, lo, hi)`` reads only the rows in bytes ``[lo, hi)``
-        of the inflated part (the split path's task unit): they are parsed
-        as a document of their own, the part's first ``head`` bytes (XML
-        declaration, ``<worksheet …>`` start tag with its namespace
-        declarations, up to ``<sheetData>``) + the range + the closing
-        tags, so every tier sees the same namespaces as the whole part.
+        ``span = (head, lo, hi)`` is one nominal byte range of the inflated
+        part (the split path's task unit). The task aligns it itself: it
+        starts at the first ``<row r="`` at or after ``lo`` (range 0, whose
+        ``lo`` is ``head``, at the first row) and reads on past ``hi`` up to
+        the next ``<row r="`` or ``</sheetData>``; a range with no aligned
+        start before ``hi`` is empty. Rows without a leading ``r=`` thus stay
+        with the range before them and are numbered as when streaming. The
+        rows are parsed as a document of their own, the part's first
+        ``head`` bytes (XML declaration, ``<worksheet …>`` start tag with
+        its namespace declarations, up to ``<sheetData>``) + the rows + the
+        closing tags, so every tier sees the same namespaces as the whole
+        part.
         """
         sst = self._shared_strings()
         member = self._member(sheet)
@@ -473,20 +505,30 @@ class XlsxWorkbook:
                 head, lo, hi = span
                 prolog = f.read(head)
                 f.seek(lo)  # forward seek inflates and discards
-                doc = b"".join(
-                    (prolog, f.read(hi - lo), b"</sheetData></worksheet>")
-                )
+                buf = bytearray(f.read(hi - lo + len(_ROW_R) - 1))
+                # a match ends inside buf, so it starts before hi
+                start = 0 if lo == head else buf.find(_ROW_R)
+                if start < 0:
+                    return
+                pos = hi - lo
+                while (m := _RANGE_END_RE.search(buf, pos)) is None:
+                    more = f.read(_READ_ON_BYTES)
+                    if not more:
+                        break
+                    pos = max(pos, len(buf) - len(b"</sheetData>") + 1)
+                    buf += more
+                end = m.start() if m else buf.find(b"</sheetData>", start)
+                rows = memoryview(buf)[start : end if end >= 0 else len(buf)]
+                doc = b"".join((prolog, rows, b"</sheetData></worksheet>"))
                 yield from walk_buffer(doc, sst)
             elif self._zip.getinfo(member).file_size <= _FAST_BUFFER_LIMIT:
                 yield from walk_buffer(f.read(), sst)
             else:
                 yield from walk_rows(f, sst)
 
-    def close(self) -> None:
-        self._zip.close()
-
-    def __enter__(self) -> "XlsxWorkbook":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+    def first_row_offset(self, sheet: str) -> int | None:
+        """Offset of the first ``<row`` in the inflated part, looked for in
+        the part's first MiB only; None if it is not there."""
+        with self._zip.open(self._member(sheet)) as f:
+            m = _FIRST_ROW_RE.search(f.read(1 << 20))
+        return m.start(1) if m else None

@@ -435,6 +435,105 @@ def test_split_path_leaves_no_temp_files(spark, tmp_path, monkeypatch):
     assert left == []
 
 
+def _split_vs_stream(path, monkeypatch):
+    """(rows per range, streamed rows): ``_split_spans(8, …)`` read range
+    by range with ``read_workbook``, and one streaming read."""
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    names = excel_mod.infer_schema(path).fieldNames()
+
+    def read(span):
+        batches = excel_mod.read_workbook(path, None, None, 0, 1000, names, span)
+        return [tuple(r.values()) for b in batches for r in b.to_pylist()]
+
+    spans = excel_mod._split_spans(8, path, None, None, 0, None)
+    assert spans is not None and len(spans) > 1  # split path engaged
+    return [read(span) for span in spans], read(None)
+
+
+def test_split_range_inside_one_long_row(tmp_path, monkeypatch):
+    """A row longer than a whole range: the ranges it covers have no
+    aligned start and yield nothing; no row is lost or read twice."""
+    path = str(tmp_path / "long_row.xlsx")
+    rows = [["id", "text"]] + [[i, f"t{i}"] for i in range(2000)]
+    rows[1000][1] = "x" * 200_000
+    write_xlsx(path, {"S": rows})
+    parts, streamed = _split_vs_stream(path, monkeypatch)
+    assert [] in parts
+    assert [r for part in parts for r in part] == streamed
+    assert len(streamed) == 2000
+
+
+def test_split_ranges_with_rows_without_r(tmp_path, monkeypatch):
+    """Rows written without ``r=`` after the first range, as a bare
+    ``<row>`` or with other attributes, stay with the range before them
+    and are numbered as when streaming."""
+    import re
+
+    def drop_r(m):
+        r = int(m.group(1))
+        if r < 400 or r % 2:
+            return m.group(0)
+        return "<row>" if r % 4 == 0 else '<row spans="1:2">'
+
+    path = str(tmp_path / "no_r.xlsx")
+    write_xlsx(path, {"S": [["id", "v"]] + [[i, i * 3] for i in range(3000)]})
+    _rewrite_sheet(path, lambda xml: re.sub(r'<row r="(\d+)">', drop_r, xml))
+    parts, streamed = _split_vs_stream(path, monkeypatch)
+    assert [r for part in parts for r in part] == streamed
+    assert streamed == [(str(i), str(i * 3)) for i in range(3000)]
+
+
+def test_split_ranges_with_r_not_first(tmp_path, monkeypatch):
+    """``<row spans=… r=…>`` rows are no range starts: they stay with the
+    range before them."""
+    import re
+
+    path = str(tmp_path / "spans_first.xlsx")
+    write_xlsx(path, {"S": [["id", "v"]] + [[i, f"v{i}"] for i in range(3000)]})
+    _rewrite_sheet(
+        path,
+        lambda xml: re.sub(
+            r'<row r="(\d+)">',
+            lambda m: m.group(0)
+            if int(m.group(1)) % 3 == 0
+            else f'<row spans="1:2" r="{m.group(1)}">',
+            xml,
+        ),
+    )
+    parts, streamed = _split_vs_stream(path, monkeypatch)
+    assert [r for part in parts for r in part] == streamed
+    assert streamed == [(str(i), f"v{i}") for i in range(3000)]
+
+
+def test_read_excel_runs_one_python_stage(spark, tmp_path, monkeypatch):
+    """A split read and a multi-file read each run ONE Python stage (no
+    task-list scan feeding it) with one task per range or file."""
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    big = str(tmp_path / "big.xlsx")
+    write_xlsx(big, {"S": [["a", "b"]] + [[i, i * 2] for i in range(3000)]})
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    spans = excel_mod._split_spans(
+        spark.sparkContext.defaultParallelism, big, None, None, 0, None
+    )
+    split_df = read_excel(spark, big)
+    files = []
+    for k in range(3):
+        files.append(str(tmp_path / f"f{k}.xlsx"))
+        write_xlsx(files[-1], {"S": [["a", "b"], [k, k + 1]]})
+    fleet_df = read_excel(spark, files)
+
+    for df, n in ((split_df, len(spans)), (fleet_df, 3)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert "ExistingRDD" not in plan, plan
+        assert df.rdd.getNumPartitions() == n
+    assert split_df.count() == 3000
+    assert sorted(_rows(fleet_df)) == [("0", "1"), ("1", "2"), ("2", "3")]
+
+
 def test_duplicate_header_names_survive(spark, tmp_path):
     """`a, a_2, a` -> columns [a, a_2, a_2] (reference naming collision) —
     values must stay positionally aligned, not collapse."""
@@ -652,6 +751,23 @@ def test_multisheet_union_xlsx(spark, tmp_path):
         ("3", "4", None, "one"),
         ("5", None, "x", "two"),
     ]
+
+
+def test_multisheet_union_query_writes_its_fixture_once(spark, sf_dir):
+    """The registry query's fixture is deterministic: repeated calls in one
+    process reuse one temp directory instead of leaving one per call."""
+    import glob
+    import tempfile
+
+    from data_to_parquet_spark.operators import misc
+
+    misc._multisheet_fixture.cache_clear()
+    pattern = os.path.join(tempfile.gettempdir(), "d2p_multisheet_*")
+    before = set(glob.glob(pattern))
+    first = _rows(misc.excel_multisheet_union(spark, sf_dir))
+    second = _rows(misc.excel_multisheet_union(spark, sf_dir))
+    assert len(set(glob.glob(pattern)) - before) == 1
+    assert first == second and len(first) == 90
 
 
 def test_multisheet_union_xlsb(spark, tmp_path):
