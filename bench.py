@@ -238,7 +238,7 @@ BENCH_QUERIES = [
 ]
 
 # Queries that populate or read the cross-query dedup memos
-# (_SIG_CACHE / _JACCARD_PAIRS_CACHE / _CC_LABEL_CACHE in
+# (_doc_signatures / neardup_jaccard_pairs / _cc_label_table in
 # operators/dedup.py). A same-session re-measure of these hits a warm
 # lazily-checkpointed table and times a cache read, not the workload, so
 # the drift guard must not "clear" their regressions from a deflated
@@ -255,7 +255,7 @@ _MEMO_BACKED = {
     "neardup_cluster_modularity",
     "dedup_chain_depth_report",  # reads the pair memo + CC label memo
     "neardup_cluster_purity",  # reads the CC label memo
-    # Lloyd-centroid memo (similarity._LLOYD_CENTROID_CACHE): a re-run
+    # Lloyd-centroid memo (similarity._corpus_centroids.memo): a re-run
     # reuses the session's trained quantizer, so re-measures would time a
     # cache hit, not the workload.
     "similarity_ann_ivf",
@@ -263,75 +263,77 @@ _MEMO_BACKED = {
     "similarity_recall_report",
     "similarity_ann_ivfpq",
     "ivfpq_selectivity_audit",
-    # BM25 frame memo (text._BM25_FRAME_CACHE): the corpus tokenization +
+    # BM25 frame memo (text._bm25_frames.memo): the corpus tokenization +
     # checkpointed (tok, dl, tf) frames are built once per session and
     # shared by the whole retrieval family (r9 review — these had the
     # same memo-warm re-measure trap as the dedup set all along).
     "bm25_rank_queries",
     "hybrid_retrieval_rrf",
     "rerank_positional_ce",
-    # PQ codebook memo (similarity._PQ_CODEBOOK_CACHE, r11): a re-run
+    # PQ codebook memo (similarity._pq_fit.memo, r11): a re-run
     # reuses the session's trained codebooks, skipping the training
     # scan+sort the bench prior paid. similarity_ann_pq shares the memo
     # but is not benched (listed for the family invariant).
     "pq_reconstruction_audit",
     "similarity_ann_pq",
-    # ALS sweep memo (similarity._ALS_SWEEP_CACHE, r11): the whole sweep
+    # ALS sweep memo (similarity._als_sweep.memo, r11): the whole sweep
     # result is shared. NEITHER query is benched today (deliberate, see
     # BENCH_QUERIES comment), but if either is ever added, a same-session
     # re-measure would time a cache read — listed now so the r9 trap
     # can't recur silently.
     "als_one_sweep_factors",
     "als_convergence_report",
-    # Streaming IVF-PQ accumulator memo (streaming._IVFPQ_STREAM_CACHE,
-    # r12) on top of the shared Lloyd-centroid + residual-codebook memos.
+    # Streaming IVF-PQ accumulator memo
+    # (streaming._ivfpq_stream_accumulate, r12) on top of the shared
+    # Lloyd-centroid + residual-codebook memos.
     # Not benched (see BENCH_QUERIES comment) — listed for the family
     # invariant, like the ALS pair.
     "streaming_ivfpq_index_growth",
     # r13: serves top-k from the same accumulator memo; not benched.
     "streaming_ivfpq_index_serving",
-    # Streaming manifest accumulator memo (_MANIFEST_STREAM_CACHE, r12);
+    # Streaming manifest accumulator memo (_manifest_stream_accumulate,
+    # r12);
     # not benched, shares no cache with any benched query (singleton
     # family below).
     "streaming_shard_manifest_growth",
-    # Streaming upsert state memo (_UPSERT_STREAM_CACHE, r12); likewise.
+    # Streaming upsert state memo (_upsert_stream_state.memo, r12); likewise.
     "streaming_upsert_latest_state",
-    # Delta-chain memo (_UPSERT_DELTA_CACHE, r13); likewise not benched.
+    # Delta-chain memo (_upsert_delta_chain.memo, r13); likewise not benched.
     "compact_upsert_snapshot",
     "compact_upsert_incremental",
-    # Incremental-neardup stream accumulators (_INC_NEARDUP_CACHE): the
+    # Incremental-neardup stream accumulators (_inc_neardup_accumulate): the
     # stream query holds its own pair/arrival output; the r13 label
     # maintenance replays those accumulators. Neither is benched —
     # listed for the family invariant.
     "streaming_incremental_neardup",
     "streaming_cc_label_maintenance",
-    # Decontamination stream partials (_DECON_STREAM_CACHE, r14);
+    # Decontamination stream partials (_decon_stream_partials.memo, r14);
     # not benched — listed for the family invariant.
     "streaming_contamination_probe",
-    # Per-order brand-set memo (_ORDER_BRANDS_CACHE, tpch_extra.py, r15):
+    # Per-order brand-set memo (_order_brand_sets.memo, tpch_extra.py, r15):
     # the one-fact-shuffle basket build shared by the three
     # basket-analytics queries.
     "basket_brand_pairs",
     "graph_triangle_count",
     "item_cooccurrence_recs",
-    # Embedding eps-graph memo (_EPS_PAIRS_CACHE, similarity.py, r15):
+    # Embedding eps-graph memo (embedding_neardup_pairs, similarity.py, r15):
     # the banded LSH self-join + cosine verify shared by the pair query
     # and the DBSCAN density graph.
     "embedding_neardup_pairs",
     "dbscan_embedding_clusters",
-    # Full-corpus hashed-embedding-sums memo (_EMB_SUMS_CACHE,
+    # Full-corpus hashed-embedding-sums memo (_corpus_embedding_sums.memo,
     # pipeline.py, r15): the Arrow encode kernel shared by the registered
     # audit and the end-to-end top-k search's corpus side.
     "embedding_generate_hashed",
     "generated_embedding_topk",
-    # Corpus shingle-frame memo (_SHINGLE_CACHE, pipeline.py, r16): the
+    # Corpus shingle-frame memo (_shingle_frame.memo, pipeline.py, r16): the
     # (doc_id, distinct word 5-grams) build shared by the three
     # decontamination queries (and computed 2-3x inside each consumer's
     # own plan before the memo).
     "contamination_ngram_overlap",
     "contamination_bloom_flags",
     "contamination_bloom_audit",
-    # Exact brute-force top-k memo (_BF_TOPK_CACHE, similarity.py, r16):
+    # Exact brute-force top-k memo (similarity_topk_bruteforce.memo, r16):
     # the registered query's own output, re-read as the exact-recall
     # ground truth by pq_reconstruction_audit / ivfpq_selectivity_audit
     # / similarity_recall_report (those three stay classified in their
@@ -364,7 +366,7 @@ _MEMO_FAMILIES = [
     },
     {  # Lloyd centroid memo (operators/similarity.py); ivfpq (r11)
         # reads the shared IVF centroids AND holds its own residual
-        # codebook memo (_IVFPQ_CODEBOOK_CACHE) — classified here by the
+        # codebook memo (_ivfpq_fit.memo) — classified here by the
         # larger shared cache
         "similarity_ann_ivf",
         "semdedup_prune",
@@ -405,38 +407,38 @@ _MEMO_FAMILIES = [
         "als_one_sweep_factors",
         "als_convergence_report",
     },
-    {  # Incremental-neardup stream accumulators (_INC_NEARDUP_CACHE,
+    {  # Incremental-neardup stream accumulators (_inc_neardup_accumulate.memo,
         # streaming/windows.py); the r13 label maintenance reads the same
         # memoized pair/arrival frames. Neither member is benched.
         "streaming_incremental_neardup",
         "streaming_cc_label_maintenance",
     },
-    {  # Decontamination stream partials (_DECON_STREAM_CACHE,
+    {  # Decontamination stream partials (_decon_stream_partials.memo,
         # streaming/windows.py, r14); singleton: the partials cache is
         # this query's own output store. Not benched.
         "streaming_contamination_probe",
     },
-    {  # Per-order brand-set memo (_ORDER_BRANDS_CACHE, r15): basket
+    {  # Per-order brand-set memo (_order_brand_sets.memo, r15): basket
         # runs first in BENCH_QUERIES order and pays the build
         "basket_brand_pairs",
         "graph_triangle_count",
         "item_cooccurrence_recs",
     },
-    {  # Embedding eps-graph memo (_EPS_PAIRS_CACHE, r15): the pair
+    {  # Embedding eps-graph memo (embedding_neardup_pairs.memo, r15): the pair
         # query runs first and pays the banded join + verify
         "embedding_neardup_pairs",
         "dbscan_embedding_clusters",
     },
-    {  # Hashed-embedding-sums memo (_EMB_SUMS_CACHE, r15): the audit
+    {  # Hashed-embedding-sums memo (_corpus_embedding_sums, r15): the audit
         # runs first and pays the full-corpus Arrow encode
         "embedding_generate_hashed",
         "generated_embedding_topk",
     },
-    {  # Corpus shingle-frame memo (_SHINGLE_CACHE, r16): the exact
+    {  # Corpus shingle-frame memo (_shingle_frame.memo, r16): the exact
         # ngram-overlap query runs first in BENCH_QUERIES order and pays
         # the checkpointed shingle build; the two bloom queries read it
         # warm. The streaming probe's corpus side reads the same memo
-        # but stays in its _DECON_STREAM_CACHE singleton family above
+        # but stays in its _decon_stream_partials.memo singleton family above
         # (families partition _MEMO_BACKED — disjointness invariant,
         # tests/test_round_close_tools.py); it is not benched, so it
         # needs no shingle predecessors here.
@@ -444,7 +446,8 @@ _MEMO_FAMILIES = [
         "contamination_bloom_flags",
         "contamination_bloom_audit",
     },
-    {  # Exact brute-force top-k memo (_BF_TOPK_CACHE, r16): singleton —
+    {  # Exact brute-force top-k memo (similarity_topk_bruteforce, r16):
+        # singleton —
         # the audits that read it warm keep their primary-cache family
         # classification (disjointness invariant; the convention the
         # Lloyd-family comment documents).
@@ -460,19 +463,19 @@ _MEMO_FAMILIES = [
 # prior = CC fixpoint on warm pairs; warm rep = 0.05 s label read)
 # auto-adjudicating real regressions as noise under the family rule.
 _MEMO_SELF_CACHED = {
-    "neardup_jaccard_pairs",  # _JACCARD_PAIRS_CACHE holds its output
-    "dedup_connected_components",  # _CC_LABEL_CACHE holds its output
-    "dedup_keep_canonical",  # thin projection of _CC_LABEL_CACHE
-    "streaming_ivfpq_index_growth",  # _IVFPQ_STREAM_CACHE holds its output
-    "streaming_shard_manifest_growth",  # _MANIFEST_STREAM_CACHE likewise
-    "streaming_upsert_latest_state",  # _UPSERT_STREAM_CACHE likewise
-    "streaming_contamination_probe",  # _DECON_STREAM_CACHE likewise
-    "embedding_neardup_pairs",  # _EPS_PAIRS_CACHE holds its output (r15)
-    # _BF_TOPK_CACHE holds similarity_topk_bruteforce's own output
+    "neardup_jaccard_pairs",  # neardup_jaccard_pairs.memo holds its output
+    "dedup_connected_components",  # _cc_label_table.memo holds its output
+    "dedup_keep_canonical",  # thin projection of _cc_label_table.memo
+    "streaming_ivfpq_index_growth",  # its accumulator memo holds its output
+    "streaming_shard_manifest_growth",  # likewise
+    "streaming_upsert_latest_state",  # likewise
+    "streaming_contamination_probe",  # likewise
+    "embedding_neardup_pairs",  # its own memo holds its output (r15)
+    # similarity_topk_bruteforce.memo holds the query's own output
     # (r16): a warm rep is a pure <=50-row cache read
     "similarity_topk_bruteforce",
-    # _EMB_SUMS_CACHE holds the frame embedding_generate_hashed merely
-    # re-projects (the dedup_keep_canonical thin-projection precedent).
+    # _corpus_embedding_sums.memo holds the frame embedding_generate_hashed
+    # merely re-projects (the dedup_keep_canonical thin-projection precedent).
     # Its warm reps still run a per-row norm fold + sqrt + array_join
     # over the cached frame — more than a pure cache read — so this
     # exclusion is deliberately CONSERVATIVE (r15 ADVICE): warm reps may
@@ -833,8 +836,8 @@ def main() -> None:
     # had an empty per_query map ever since — totals parsed, per-query
     # didn't. This line restores the original one-line contract
     # ({metric, value, unit, queries, sf}) with a BOUNDED queries map:
-    # the <=25 queries that moved >10% vs the committed prior record
-    # (largest movers first) plus any queries with no prior, 2-decimal
+    # at most 25 queries: any with no committed prior record first,
+    # then those that moved >10% vs it (largest movers first), 2-decimal
     # floats — small enough that any reasonable tail capture ends in one
     # complete, parseable JSON object carrying real round-over-round
     # deltas. The full map still prints above and persists in
@@ -881,17 +884,18 @@ def main() -> None:
         pass
 
 
-_BOUNDED_MAX = 25  # changed-query entries on the bounded driver line
+_BOUNDED_MAX = 25  # query entries on the bounded driver line
 
 
 def _bounded_line(
     times: dict[str, float], summary: dict, root: str | None = None
 ) -> dict:
     """The bounded final-stdout record: every summary field plus a
-    ``queries`` map holding (a) queries absent from the committed prior
-    record (first bench contact — always included) and (b) up to
-    ``_BOUNDED_MAX`` queries whose time moved >10% vs that prior,
-    largest |log ratio| first. Prior = BENCH_FULL.json when its sf
+    ``queries`` map of at most ``_BOUNDED_MAX`` entries: first (a)
+    queries absent from the committed prior record (first bench
+    contact), then (b) queries whose time moved >10% vs that prior,
+    largest |log ratio| first. ``queries_bounded`` names how many
+    candidates the cap left out. Prior = BENCH_FULL.json when its sf
     matches; with no usable prior, the slowest ``_BOUNDED_MAX`` queries
     stand in so the driver still sees real numbers. Values are rounded
     to 2 decimals to keep the line short."""
@@ -918,16 +922,16 @@ def _bounded_line(
             ),
             key=lambda n: -abs(math.log(max(times[n], 1e-3) / prior[n])),
         )
-        kept = new + changed[: max(0, _BOUNDED_MAX - len(new))]
+        candidates = new + changed
     else:
-        kept = sorted(times, key=times.__getitem__, reverse=True)[
-            :_BOUNDED_MAX
-        ]
+        candidates = sorted(times, key=times.__getitem__, reverse=True)
+    kept = candidates[:_BOUNDED_MAX]
     out = dict(summary)
     out["queries"] = {n: round(times[n], 2) for n in kept}
     out["queries_bounded"] = (
-        f"changed >10% vs prior + first-contact; all {len(times)} in "
-        "BENCH_FULL.json"
+        "first-contact, then changed >10% vs prior (slowest with no "
+        f"prior); {len(candidates) - len(kept)} over the cap of "
+        f"{_BOUNDED_MAX}; all {len(times)} in BENCH_FULL.json"
     )
     return out
 

@@ -20,6 +20,7 @@ structural parses (marker walk, SOF dims) and a flat-field exactness check.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -560,36 +561,32 @@ def _extend(bits: int, s: int) -> int:
     return bits if bits >= (1 << (s - 1)) else bits - (1 << s) + 1
 
 
-#: (BITS bytes, HUFFVAL bytes) -> 65536-entry flat-prefix decode table
-#: ((length << 8) | symbol per 16-bit window, 0 = no code). Keyed by the
-#: table definition itself so own-encoder files share one cached build;
-#: foreign tables add at most a few hundred KB per distinct definition
-#: for the worker's lifetime.
-_HUFF_LUT_CACHE: dict = {}
+#: Decode tables kept per worker: the own encoder's four (DC/AC x
+#: luma/chroma) always fit, and a corpus of foreign files with distinct
+#: DHT definitions evicts least-recently-used tables instead of growing
+#: by ~0.5 MB per definition for the worker's lifetime.
+_HUFF_LUT_MAX = 32
 
 
-def _huff_lut(bits, vals) -> list:
+@functools.lru_cache(maxsize=_HUFF_LUT_MAX)
+def _huff_lut(bits: bytes, vals: bytes) -> list:
     """Table-driven Huffman: every 16-bit window maps directly to its
-    unique prefix code's (length << 8) | symbol — one list index per
-    symbol instead of up to 16 dict probes (prefix property guarantees
-    the first matching code is THE code, so this is exactly
-    ``_read_symbol``'s answer)."""
-    key = (bytes(bits), bytes(vals))
-    lut = _HUFF_LUT_CACHE.get(key)
-    if lut is None:
-        arr = np.zeros(1 << 16, dtype=np.uint16)
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                lo = code << (16 - length)
-                arr[lo : lo + (1 << (16 - length))] = (length << 8) | vals[k]
-                code += 1
-                k += 1
-            code <<= 1
-        lut = arr.tolist()
-        _HUFF_LUT_CACHE[key] = lut
-    return lut
+    unique prefix code's (length << 8) | symbol (0 = no code) — one list
+    index per symbol instead of up to 16 dict probes (prefix property
+    guarantees the first matching code is THE code, so this is exactly
+    ``_read_symbol``'s answer). Cached by the (BITS, HUFFVAL) definition
+    itself, so own-encoder files share one build."""
+    arr = np.zeros(1 << 16, dtype=np.uint16)
+    code = 0
+    k = 0
+    for length in range(1, 17):
+        for _ in range(bits[length - 1]):
+            lo = code << (16 - length)
+            arr[lo : lo + (1 << (16 - length))] = (length << 8) | vals[k]
+            code += 1
+            k += 1
+        code <<= 1
+    return arr.tolist()
 
 
 def _entropy_segments(data: bytes, start: int) -> list[bytes]:
@@ -687,7 +684,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 bits = list(body[b + 1 : b + 17])
                 nvals = sum(bits)
                 vals = list(body[b + 17 : b + 17 + nvals])
-                huff[(tc, th)] = _huff_lut(bits, vals)
+                huff[(tc, th)] = _huff_lut(bytes(bits), bytes(vals))
                 b += 17 + nvals
         elif marker == 0xDD:
             restart_interval = struct.unpack(">H", body[:2])[0]

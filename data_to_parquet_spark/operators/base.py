@@ -8,6 +8,9 @@ every module's registry into the driver contract.
 
 from __future__ import annotations
 
+import functools
+import inspect
+import os
 from dataclasses import dataclass
 from typing import Callable
 
@@ -18,45 +21,74 @@ __all__ = [
     "Registry",
     "UNREADABLE_FINGERPRINT",
     "load_table",
-    "memo_get",
-    "memo_put",
     "normalize_event_time",
     "path_fingerprint",
+    "session_memo",
 ]
 
 #: Constant sentinel returned by :func:`path_fingerprint` when the path
-#: can't be statted. :func:`memo_get`/:func:`memo_put` skip the cache
-#: entirely when they see it: a lookup on it could alias two different
-#: unreadable states (stale hit), and an insert per miss would grow the
-#: memo without bound on a persistently unreadable path (ADVICE r7 — the
-#: previous os.urandom sentinel had exactly that leak).
+#: can't be statted. :func:`session_memo` bypasses the memo entirely when
+#: it sees it: a lookup on it could alias two different unreadable states
+#: (stale hit), and an insert per miss would grow the memo without bound
+#: on a persistently unreadable path (ADVICE r7 — the previous os.urandom
+#: sentinel had exactly that leak).
 UNREADABLE_FINGERPRINT = ("__unreadable__",)
 
 
-def memo_get(cache: dict, base_key: tuple, fingerprint: tuple):
-    """Fingerprint-validated session-memo lookup: the cache maps
-    ``base_key`` (applicationId + semantic parameters — NO fingerprint)
-    to ``(fingerprint, value)``. A hit requires the stored fingerprint to
-    match the current one, so a regenerated table misses; because the
-    fingerprint lives in the VALUE, :func:`memo_put` then REPLACES the
-    previous generation's entry instead of accumulating one entry per
-    generation (r8 review: fingerprint-in-key leaked one checkpointed
-    DataFrame per regeneration for the life of the app). Returns None on
-    miss or when ``fingerprint`` is :data:`UNREADABLE_FINGERPRINT`."""
-    if fingerprint == UNREADABLE_FINGERPRINT:
-        return None
-    hit = cache.get(base_key)
-    if hit is not None and hit[0] == fingerprint:
-        return hit[1]
-    return None
+def session_memo(*tables: str):
+    """Memoize ``fn(spark, sf_dir, *params)`` for the Spark application.
 
+    The one reuse policy every shared build follows (checkpointed frames,
+    trained codebooks, stream accumulators):
 
-def memo_put(cache: dict, base_key: tuple, fingerprint: tuple, value):
-    """Store ``value`` under ``base_key``, replacing any previous
-    generation (see :func:`memo_get`). No-op when ``fingerprint`` is
-    :data:`UNREADABLE_FINGERPRINT`."""
-    if fingerprint != UNREADABLE_FINGERPRINT:
-        cache[base_key] = (fingerprint, value)
+    - key: ``(applicationId, sf_dir, params)``, where ``params`` are the
+      remaining arguments bound to ``fn``'s signature (defaults applied),
+      so a positional and a keyword call share one entry;
+    - fingerprint: :func:`path_fingerprint` of ``sf_dir/<table>.parquet``
+      for each name in ``tables``, stored in the entry's VALUE, so a
+      regenerated table (any one of them) misses and the new generation
+      REPLACES the old entry instead of accumulating one per generation
+      (r8 review: fingerprint-in-key leaked one checkpointed DataFrame per
+      regeneration for the life of the app);
+    - an unreadable table bypasses the memo for that call (no lookup, no
+      insert): an unreadable state can only cost a recompute, never a
+      stale hit or memo growth.
+
+    The wrapper keeps ``fn``'s ``__module__``/``__doc__`` (the registry
+    and per-module spans read them) and exposes its dict as ``.memo``:
+    ``{key: (fingerprint, value)}``.
+    """
+
+    def deco(fn):
+        sig = inspect.signature(fn)
+        memo: dict = {}
+
+        @functools.wraps(fn)
+        def wrapper(spark, sf_dir, *args, **kwargs):
+            fp = tuple(
+                path_fingerprint(os.path.join(sf_dir, f"{t}.parquet"))
+                for t in tables
+            )
+            if UNREADABLE_FINGERPRINT in fp:
+                return fn(spark, sf_dir, *args, **kwargs)
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            key = (
+                spark.sparkContext.applicationId,
+                sf_dir,
+                tuple(bound.arguments.values())[2:],
+            )
+            hit = memo.get(key)
+            if hit is not None and hit[0] == fp:
+                return hit[1]
+            value = fn(spark, sf_dir, *args, **kwargs)
+            memo[key] = (fp, value)
+            return value
+
+        wrapper.memo = memo
+        return wrapper
+
+    return deco
 
 
 def path_fingerprint(path: str) -> tuple:
@@ -68,8 +100,6 @@ def path_fingerprint(path: str) -> tuple:
     renames part-files mid-walk) yields :data:`UNREADABLE_FINGERPRINT`,
     which callers treat as "don't cache at all" — an unreadable state can
     only cause an extra recompute, never a stale hit or memo growth."""
-    import os
-
     try:
         st = os.stat(path)
         if os.path.isdir(path):

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.exprs import distinct_tokens, exploded_rows, tokens
-from .base import Registry, load_table, memo_get, memo_put
+from .base import Registry, load_table, session_memo
 
 DEDUP = Registry()
 
@@ -66,57 +66,32 @@ def dedup_exact_hash(spark, sf_dir):
 
 _SALT = 16  # parallelism multiplier for low-cardinality block keys
 
-#: (applicationId, sf_dir) -> the verified (doc_a, doc_b, jaccard) pair
-#: table. Three operators consume the same prefix-filter join — the pairs
-#: query itself, the connected-components fixpoint, and the cross-source
-#: duplication matrix — and without this memo each recomputes the most
-#: expensive join in the repo. The cached frame is a lazily-materialized
-#: localCheckpoint (first action pays, every later consumer reads the
-#: checkpointed blocks), mirroring `_CC_LABEL_CACHE` below. Keyed via
-#: _docs_memo_key (applicationId + sf_dir + content fingerprint, r8) so a
-#: mid-session regeneration of the documents table invalidates it. At
-#: 100 TB this is the "materialize the pair table once" stage every real
-#: dedup pipeline has — downstream clustering/reporting reads the
-#: materialization, not the join.
-_JACCARD_PAIRS_CACHE: dict = {}
 
-#: (applicationId, sf_dir) -> the df-ordered signature table
-#: (ops.df_ordered_signatures over documents, lang-blocked). The symmetric
-#: Jaccard join and the asymmetric containment join consume the IDENTICAL
-#: signature build (two shuffles: token df count + per-doc ordered
-#: collect); sharing the lazily-checkpointed table pays it once per
-#: application — the "tokenize and index once, run every set-join off it"
-#: stage of a production dedup pipeline.
-_SIG_CACHE: dict = {}
-
-
-def _docs_memo_key(spark, sf_dir):
-    """((applicationId, sf_dir), documents fingerprint) for the
-    fingerprint-validated session memos (base.memo_get/memo_put): the
-    fingerprint guards the stale-green class where testdata regenerates
-    mid-session under the same path (NTZ-incident precedent), and living
-    in the memo VALUE it replaces the previous generation's entry instead
-    of accumulating one per generation."""
-    import os
-
-    from .base import path_fingerprint
-
-    fp = path_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return (spark.sparkContext.applicationId, sf_dir), fp
-
-
+@session_memo("documents")
 def _doc_signatures(spark, sf_dir):
-    key, fp = _docs_memo_key(spark, sf_dir)
-    sig = memo_get(_SIG_CACHE, key, fp)
-    if sig is None:
-        from ..ops import df_ordered_signatures
+    """The df-ordered signature table (ops.df_ordered_signatures over
+    documents, lang-blocked). The symmetric Jaccard join and the
+    asymmetric containment join consume the IDENTICAL signature build (two
+    shuffles: token df count + per-doc ordered collect); sharing the
+    lazily-checkpointed table pays it once per application — the "tokenize
+    and index once, run every set-join off it" stage of a production dedup
+    pipeline."""
+    from ..ops import df_ordered_signatures
 
-        d = load_table(spark, sf_dir, "documents")
-        sig = df_ordered_signatures(d, "doc_id", "text", block_col="lang")
-        memo_put(_SIG_CACHE, key, fp, sig)
-    return sig
+    d = load_table(spark, sf_dir, "documents")
+    return df_ordered_signatures(d, "doc_id", "text", block_col="lang")
 
 
+#: The verified (doc_a, doc_b, jaccard) pair table is session-memoized
+#: (``neardup_jaccard_pairs.memo``). Three operators consume the same
+#: prefix-filter join — the pairs query itself, the connected-components
+#: fixpoint, and the cross-source duplication matrix — and without the memo
+#: each recomputes the most expensive join in the repo. The cached frame is
+#: a lazily-materialized localCheckpoint (first action pays, every later
+#: consumer reads the checkpointed blocks), mirroring `_cc_label_table`
+#: below. At 100 TB this is the "materialize the pair table once" stage
+#: every real dedup pipeline has — downstream clustering/reporting reads
+#: the materialization, not the join.
 @DEDUP.register(
     "neardup_jaccard_pairs",
     oracle="""
@@ -135,6 +110,7 @@ def _doc_signatures(spark, sf_dir):
              / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))) >= 0.9
     """,
 )
+@session_memo("documents")
 def neardup_jaccard_pairs(spark, sf_dir):
     """Exact pairwise token-set Jaccard (threshold 0.9) via prefix filtering
     (AllPairs/PPJoin): each doc only indexes its ``|d| - ceil(t·|d|) + 1``
@@ -155,14 +131,10 @@ def neardup_jaccard_pairs(spark, sf_dir):
     table→skinny prefix index join→distinct→verify); this query binds it to
     the documents corpus with `lang` blocking at threshold 0.9.
     """
-    key, fp = _docs_memo_key(spark, sf_dir)
-    cached = memo_get(_JACCARD_PAIRS_CACHE, key, fp)
-    if cached is not None:
-        return cached
     d = load_table(spark, sf_dir, "documents")
     from ..ops import neardup_jaccard_prefix
 
-    out = neardup_jaccard_prefix(
+    return neardup_jaccard_prefix(
         d,
         "doc_id",
         "text",
@@ -174,8 +146,6 @@ def neardup_jaccard_pairs(spark, sf_dir):
         F.col("id_b").alias("doc_b"),
         "jaccard",
     ).localCheckpoint(eager=False)
-    memo_put(_JACCARD_PAIRS_CACHE, key, fp, out)
-    return out
 
 
 # The ~80/10/10 hash-split rule is EXACTLY text.split_train_val_test's
@@ -540,20 +510,13 @@ SELECT u AS doc_id, MIN(v) AS cluster_id FROM reach GROUP BY u
 """
 
 
-#: (applicationId, sf_dir) -> the (doc_id, cluster_id) label table. The CC
-#: fixpoint runs eager jobs at plan-construction time, so without this memo
-#: every query that needs the labels re-runs the most expensive computation
-#: in the repo; the cached frame is built on localCheckpoint-ed RDDs, so
-#: reuse costs nothing. Keyed via _docs_memo_key (content-fingerprinted,
-#: r8) so a mid-session regeneration of the documents table invalidates it.
-_CC_LABEL_CACHE: dict = {}
-
-
+@session_memo("documents")
 def _cc_label_table(spark, sf_dir):
-    key, fp = _docs_memo_key(spark, sf_dir)
-    cached = memo_get(_CC_LABEL_CACHE, key, fp)
-    if cached is not None:
-        return cached
+    """The (doc_id, cluster_id) label table, session-memoized. The CC
+    fixpoint runs eager jobs at plan-construction time, so without the
+    memo every query that needs the labels re-runs the most expensive
+    computation in the repo; the cached frame is built on
+    localCheckpoint-ed RDDs, so reuse costs nothing."""
     from ..ops import connected_components
 
     pairs = neardup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -564,9 +527,7 @@ def _cc_label_table(spark, sf_dir):
     singletons = d.select("doc_id").join(
         labels.select("doc_id"), "doc_id", "left_anti"
     ).withColumn("cluster_id", F.col("doc_id"))
-    out = labels.unionByName(singletons).localCheckpoint(eager=False)
-    memo_put(_CC_LABEL_CACHE, key, fp, out)
-    return out
+    return labels.unionByName(singletons).localCheckpoint(eager=False)
 
 
 @DEDUP.register("dedup_connected_components", oracle=_CC_ORACLE)
@@ -1569,7 +1530,7 @@ def neardup_graph_pagerank(spark, sf_dir):
     template" detector (high-rank docs sit at the center of dense near-dup
     clusters; curation pipelines review those few templates instead of
     millions of individual members). Reuses the memoized pair table
-    (`_JACCARD_PAIRS_CACHE`), so after any dedup query has run, the graph
+    (`neardup_jaccard_pairs.memo`), so after any dedup query has run, the graph
     build costs nothing.
 
     Distributed shape per iteration (the classic): contributions =

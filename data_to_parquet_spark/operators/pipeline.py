@@ -23,7 +23,7 @@ from ..functions.exprs import (
     md5_bucket_sql,
     tokens,
 )
-from .base import Registry, load_table, memo_get, memo_put
+from .base import Registry, load_table, session_memo
 
 PIPE = Registry()
 
@@ -147,7 +147,7 @@ _SHINGLE_N = 5  # word n-gram width for contamination checks
 _BENCH_MOD = 97  # doc_id % _BENCH_MOD == 0 → doc belongs to the benchmark set
 
 
-#: (applicationId, sf_dir) -> the (doc_id, s) corpus shingle frame.
+#: The (doc_id, s) corpus shingle frame is session-memoized.
 #: THREE benched decontamination queries consume it
 #: (contamination_ngram_overlap, contamination_bloom_flags,
 #: contamination_bloom_audit — plus the streaming probe's corpus side),
@@ -155,28 +155,17 @@ _BENCH_MOD = 97  # doc_id % _BENCH_MOD == 0 → doc belongs to the benchmark set
 #: (the benchmark slice is collected across a broadcast/driver boundary,
 #: so Spark cannot reuse the scan between it and the probe side).
 #: Measured r16 (noop sink, guide §1.4): the build alone is ~1.1 s at
-#: sf0.1 vs 1.9-2.6 s whole queries — the dominant shared stage. Same
-#: lazily-checkpointed, content-fingerprinted session-memo contract as
-#: _EMB_SUMS_CACHE below (the r15 pattern): first consumer pays the
-#: build, a regenerated documents table invalidates.
-_SHINGLE_CACHE: dict = {}
-
-
+#: sf0.1 vs 1.9-2.6 s whole queries — the dominant shared stage. The
+#: frame is a lazily-materialized localCheckpoint: the first consumer pays
+#: the build.
+@session_memo("documents")
 def _shingle_frame(spark, sf_dir):
     """(doc_id, s) with s = the doc's DISTINCT word 5-gram shingles
     (n = _SHINGLE_N) — shared by the three contamination queries via a
-    session memo (see ``_SHINGLE_CACHE``)."""
-    from .dedup import _docs_memo_key
-
-    key, fp = _docs_memo_key(spark, sf_dir)
-    cached = memo_get(_SHINGLE_CACHE, key, fp)
-    if cached is not None:
-        return cached
-    sh = _shingles_of(load_table(spark, sf_dir, "documents")).localCheckpoint(
-        eager=False
-    )
-    memo_put(_SHINGLE_CACHE, key, fp, sh)
-    return sh
+    session memo."""
+    return _shingles_of(
+        load_table(spark, sf_dir, "documents")
+    ).localCheckpoint(eager=False)
 
 
 def _shingles_of(d):
@@ -1531,18 +1520,6 @@ def embedding_generate_hashed(spark, sf_dir):
     )
 
 
-#: (applicationId, sf_dir) -> the FULL-corpus (doc_id, n_tokens,
-#: emb_sums) frame from `_hashed_embedding_sums(doc_filter=None)`. Two
-#: benched operators run the identical full-corpus Arrow encode kernel —
-#: `embedding_generate_hashed` (the registered audit) and
-#: `generated_embedding_topk`'s corpus side — and a 100 TB pipeline
-#: materializes the embed stage exactly once (r15 optimization round;
-#: the `_JACCARD_PAIRS_CACHE` / `_SIG_CACHE` precedent). Filtered
-#: subsets (the query side's pushed-filter scan) stay un-memoized: they
-#: are a handful of rows and each filter is its own plan.
-_EMB_SUMS_CACHE: dict = {}
-
-
 def _hashed_embedding_sums(spark, sf_dir, doc_filter=None):
     """(doc_id, n_tokens, emb_sums array<bigint>) — the exact integer
     core of `embedding_generate_hashed`, shared by the registered flat
@@ -1551,8 +1528,33 @@ def _hashed_embedding_sums(spark, sf_dir, doc_filter=None):
     pushed-down scan filter — the encoder is per-doc deterministic and
     batch-independent, so subset vectors equal their full-corpus twins.
 
-    The full-corpus (doc_filter=None) frame is session-memoized as a
-    lazily-materialized localCheckpoint (see `_EMB_SUMS_CACHE`)."""
+    The full-corpus (doc_filter=None) frame comes from the session memo
+    `_corpus_embedding_sums`; filtered subsets (the query side's
+    pushed-filter scan) stay un-memoized: they are a handful of rows and
+    each filter is its own plan."""
+    if doc_filter is None:
+        return _corpus_embedding_sums(spark, sf_dir)
+    return _embedding_sums_of(
+        load_table(spark, sf_dir, "documents").filter(doc_filter)
+    )
+
+
+@session_memo("documents")
+def _corpus_embedding_sums(spark, sf_dir):
+    """The FULL-corpus `_hashed_embedding_sums` frame, session-memoized as
+    a lazily-materialized localCheckpoint. Two benched operators run the
+    identical full-corpus Arrow encode kernel — `embedding_generate_hashed`
+    (the registered audit) and `generated_embedding_topk`'s corpus side —
+    and a 100 TB pipeline materializes the embed stage exactly once (r15
+    optimization round; the `neardup_jaccard_pairs` precedent)."""
+    return _embedding_sums_of(
+        load_table(spark, sf_dir, "documents")
+    ).localCheckpoint(eager=False)
+
+
+def _embedding_sums_of(d):
+    """Encode a documents frame (needs doc_id, text) into (doc_id,
+    n_tokens, emb_sums) — the per-doc hashed-embedding kernel."""
     import pandas as pd
 
     def embed(it):
@@ -1607,26 +1609,9 @@ def _hashed_embedding_sums(spark, sf_dir, doc_filter=None):
                 }
             )
 
-    if doc_filter is None:
-        from .base import memo_get
-        from .dedup import _docs_memo_key
-
-        key, fp = _docs_memo_key(spark, sf_dir)
-        cached = memo_get(_EMB_SUMS_CACHE, key, fp)
-        if cached is not None:
-            return cached
-    d = load_table(spark, sf_dir, "documents")
-    if doc_filter is not None:
-        d = d.filter(doc_filter)
-    out = d.select(
+    return d.select(
         "doc_id", tokens(F.col("text")).alias("toks")
     ).mapInPandas(embed, "doc_id long, n_tokens long, emb_sums array<bigint>")
-    if doc_filter is None:
-        from .base import memo_put
-
-        out = out.localCheckpoint(eager=False)
-        memo_put(_EMB_SUMS_CACHE, key, fp, out)
-    return out
 
 
 def generated_embeddings(spark, sf_dir):

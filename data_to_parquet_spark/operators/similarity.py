@@ -22,63 +22,33 @@ from ..functions.exprs import (
     exploded_rows_pos,
     norm,
 )
-from .base import Registry, load_table, memo_get, memo_put, path_fingerprint
+from .base import Registry, load_table, session_memo
 
 SIM = Registry()
 
-#: (applicationId, embeddings fingerprint, sf_dir, k, iterations) ->
-#: final centroid ndarray. Lloyd training is deterministic, so queries
-#: sharing a quantizer (similarity_ann_ivf and semdedup_prune both train
-#: k=16 x 5 iterations) reuse one training run per session instead of
-#: each paying ~8 Spark jobs; the content fingerprint invalidates the memo
-#: if testdata regenerates mid-session.
-_LLOYD_CENTROID_CACHE: dict = {}
 
-
+@session_memo("embeddings")
 def _corpus_centroids(spark, sf_dir: str, k: int, iterations: int):
-    import os
-
+    """Final Lloyd centroid ndarray, session-memoized per (k, iterations).
+    Lloyd training is deterministic, so queries sharing a quantizer
+    (similarity_ann_ivf and semdedup_prune both train k=16 x 5 iterations)
+    reuse one training run per session instead of each paying ~8 Spark
+    jobs."""
     from ..ops import lloyd_centroids
-    from .base import memo_get, memo_put
 
-    fp = path_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (spark.sparkContext.applicationId, sf_dir, k, iterations)
-    hit = memo_get(_LLOYD_CENTROID_CACHE, key, fp)
-    if hit is None:
-        e = load_table(spark, sf_dir, "embeddings")
-        # coarse-quantizer semantics: bounded-sample training above the
-        # local budget (one scan at 100 TB), whole corpus below it — so
-        # the full-corpus oracles stay exact at every driver-checked sf
-        hit, _ = lloyd_centroids(
-            e,
-            "vec_id",
-            "embedding",
-            k=k,
-            iterations=iterations,
-            sample_by_hash=True,
-        )
-        memo_put(_LLOYD_CENTROID_CACHE, key, fp, hit)
-    return hit
-
-#: (applicationId, sf_dir) -> the verified (vec_a, vec_b, cos_sim)
-#: eps-graph (sign-LSH banded candidates, exact-cosine verified at
-#: _ND_THRESHOLD). Two operators consume the identical banded self-join —
-#: `embedding_neardup_pairs` itself and `dbscan_embedding_clusters`'s
-#: density graph — and without this memo each re-ran it from the scan
-#: (r15 optimization round; the `_JACCARD_PAIRS_CACHE` precedent from
-#: operators/dedup.py, same lazily-materialized localCheckpoint shape,
-#: same content-fingerprint invalidation).
-_EPS_PAIRS_CACHE: dict = {}
-
-
-def _emb_memo_key(spark, sf_dir):
-    """((applicationId, sf_dir), embeddings fingerprint) for the
-    fingerprint-validated session memos over the embeddings table (the
-    dedup._docs_memo_key pattern)."""
-    import os
-
-    fp = path_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    return (spark.sparkContext.applicationId, sf_dir), fp
+    e = load_table(spark, sf_dir, "embeddings")
+    # coarse-quantizer semantics: bounded-sample training above the
+    # local budget (one scan at 100 TB), whole corpus below it — so
+    # the full-corpus oracles stay exact at every driver-checked sf
+    centroids, _ = lloyd_centroids(
+        e,
+        "vec_id",
+        "embedding",
+        k=k,
+        iterations=iterations,
+        sample_by_hash=True,
+    )
+    return centroids
 
 
 _N_QUERIES = 5  # query set = vec_id < 5
@@ -184,17 +154,14 @@ def _km_cte_sql(k: int, iters: int) -> str:
     )"""
 
 
-#: (applicationId, sf_dir) -> the exact brute-force top-k frame
-#: (query_id, neighbor_id, cos_sim, rank; <= |queries|*k rows). FOUR
+#: The exact brute-force top-k frame (query_id, neighbor_id, cos_sim,
+#: rank; <= |queries|*k rows) is session-memoized. FOUR
 #: call sites run the identical corpus scan + two-stage window per
 #: session — the registered query itself plus the exact-recall sides of
 #: pq_reconstruction_audit, ivfpq_selectivity_audit and
 #: similarity_recall_report (each ~0.9 s at sf0.1, measured r16) — and
 #: the frame is the ground-truth table a production ANN evaluation
-#: materializes once. Same lazily-checkpointed, content-fingerprinted
-#: session-memo contract as the Lloyd/PQ caches; the checkpoint is
-#: <= 50 rows.
-_BF_TOPK_CACHE: dict = {}
+#: materializes once. The checkpoint is <= 50 rows.
 
 
 @SIM.register(
@@ -214,6 +181,7 @@ _BF_TOPK_CACHE: dict = {}
     ) t WHERE rank <= {_TOP_K}
     """,
 )
+@session_memo("embeddings")
 def similarity_topk_bruteforce(spark, sf_dir):
     """Exact cosine top-k: broadcast the query set, score every corpus vector,
     take per-query top-k with a salted two-stage window.
@@ -225,13 +193,9 @@ def similarity_topk_bruteforce(spark, sf_dir):
     whole corpus through |queries| reducer tasks — then the global window
     ranks the ≤ 32·k survivors per query. Same total order both stages, so
     the result is identical to the single-window plan. The result frame is
-    session-memoized (see ``_BF_TOPK_CACHE``): three ANN audits consume it
-    as their exact ground truth.
+    session-memoized: three ANN audits consume it as their exact ground
+    truth.
     """
-    key, fp = _emb_memo_key(spark, sf_dir)
-    cached = memo_get(_BF_TOPK_CACHE, key, fp)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "embeddings")
     # precompute each side's norm ONCE per vector (not per pair) — bitwise
     # identical to the oracle's sqrt-of-fold since it's the same expression,
@@ -266,14 +230,12 @@ def similarity_topk_bruteforce(spark, sf_dir):
         .filter(F.col("__r") <= _TOP_K)
     )
     w = W.partitionBy("query_id").orderBy(*order)
-    out = (
+    return (
         pre.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _TOP_K)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
         .localCheckpoint(eager=False)
     )
-    memo_put(_BF_TOPK_CACHE, key, fp, out)
-    return out
 
 
 @SIM.register(
@@ -293,6 +255,7 @@ def similarity_topk_bruteforce(spark, sf_dir):
     WHERE {_dd_cosine('a.embedding', 'b.embedding')} >= {_ND_THRESHOLD}
     """,
 )
+@session_memo("embeddings")
 def embedding_neardup_pairs(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs via sign-LSH banded blocking.
 
@@ -313,16 +276,12 @@ def embedding_neardup_pairs(spark, sf_dir):
     synthetic corpus (which has no pairs above cos 0.8).
 
     The verified eps-graph is session-memoized (r15, the
-    `_JACCARD_PAIRS_CACHE` precedent): `dbscan_embedding_clusters`
+    `neardup_jaccard_pairs` precedent): `dbscan_embedding_clusters`
     consumes the IDENTICAL banded self-join + cosine verify, and without
     the memo each consumer re-ran the most expensive embedding-side join
     in the repo. At 100 TB this is the "materialize the eps-graph once"
     stage every density-clustering pipeline has.
     """
-    key, fp = _emb_memo_key(spark, sf_dir)
-    cached = memo_get(_EPS_PAIRS_CACHE, key, fp)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "embeddings")
     # checkpointed: the band self-join reads this twice (plus the corpus
     # frame below twice) — without the shares one plan scanned embeddings
@@ -349,7 +308,7 @@ def embedding_neardup_pairs(spark, sf_dir):
     corpus = e.select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
     ).localCheckpoint(eager=False)
-    out = (
+    return (
         cand.join(
             corpus.select(
                 F.col("vec_id").alias("vec_a"),
@@ -378,8 +337,6 @@ def embedding_neardup_pairs(spark, sf_dir):
         .filter(F.col("cos_sim") >= _ND_THRESHOLD)
         .localCheckpoint(eager=False)
     )
-    memo_put(_EPS_PAIRS_CACHE, key, fp, out)
-    return out
 
 
 _ANN_TABLES, _ANN_BITS = 8, 4  # L tables x k sign bits per table
@@ -671,28 +628,18 @@ def embedding_array_stats(spark, sf_dir):
 
 _PQ_M, _PQ_KSUB, _PQ_SAMPLE_N = 8, 16, 2048
 
-#: Session memo for the trained PQ codebooks: `similarity_ann_pq` and
-#: `pq_reconstruction_audit` (r11) share one training run per session —
-#: the training collect is bounded (_PQ_SAMPLE_N rows) but pays a corpus
-#: scan + sort; fingerprint-validated like the Lloyd-centroid memo so a
-#: regenerated corpus retrains instead of serving stale codebooks.
-_PQ_CODEBOOK_CACHE: dict = {}
 
-
+@session_memo("embeddings")
 def _pq_fit(spark, sf_dir):
     """Train the per-subspace PQ codebooks (m=_PQ_M subspaces, ksub=
     _PQ_KSUB centroids each, 5 Lloyd iterations, seed 42) on a bounded
     md5(id)-lowest sample — deterministic across runs/partitionings and
     driver-side, so the trained floats are bit-stable within a corpus
     generation. Returns (codebooks (m, ksub, dsub), cb_norm2 (m, ksub),
-    dim, dsub). Memoized per (applicationId, sf_dir)."""
-    import os
-
-    fp = path_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (spark.sparkContext.applicationId, sf_dir, "pq")
-    hit = memo_get(_PQ_CODEBOOK_CACHE, key, fp)
-    if hit is not None:
-        return hit
+    dim, dsub). Session-memoized: `similarity_ann_pq` and
+    `pq_reconstruction_audit` (r11) share one training run per session —
+    the training collect is bounded (_PQ_SAMPLE_N rows) but pays a corpus
+    scan + sort."""
     e = load_table(spark, sf_dir, "embeddings")
     # deterministic training sample: md5(id)-lowest rows (content-
     # independent pseudo-random and stable across partitionings, unlike a
@@ -701,9 +648,7 @@ def _pq_fit(spark, sf_dir):
     dim = sample.shape[1]
     dsub = dim // _PQ_M
     codebooks = _pq_train_codebooks(sample, dsub)
-    hit = (codebooks, (codebooks ** 2).sum(axis=2), dim, dsub)
-    memo_put(_PQ_CODEBOOK_CACHE, key, fp, hit)
-    return hit
+    return codebooks, (codebooks ** 2).sum(axis=2), dim, dsub
 
 
 def _pq_training_sample(spark, sf_dir) -> np.ndarray:
@@ -1051,13 +996,7 @@ def _pq_audit_metrics(spark, sf_dir) -> dict:
     }
 
 
-#: Session memo for the residual-PQ codebooks (IVF-PQ layout): keyed
-#: like _PQ_CODEBOOK_CACHE; the residual training additionally depends
-#: on the IVF centroids, which are themselves deterministic functions of
-#: the same fingerprinted corpus, so one fingerprint covers both.
-_IVFPQ_CODEBOOK_CACHE: dict = {}
-
-
+@session_memo("embeddings")
 def _ivfpq_fit(spark, sf_dir):
     """Train residual-PQ codebooks for the IVF-PQ layout: the same
     bounded md5-lowest sample as `_pq_fit`, but each vector is first
@@ -1066,14 +1005,10 @@ def _ivfpq_fit(spark, sf_dir):
     near-zero-mean and much lower-variance than raw vectors, which is
     why production billion-vector indexes quantize them instead).
     Returns (centroids (k, d), codebooks (m, ksub, dsub), cb_norm2,
-    dim, dsub). Memoized per (applicationId, sf_dir)."""
-    import os
-
-    fp = path_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    key = (spark.sparkContext.applicationId, sf_dir, "ivfpq")
-    hit = memo_get(_IVFPQ_CODEBOOK_CACHE, key, fp)
-    if hit is not None:
-        return hit
+    dim, dsub). Session-memoized like `_pq_fit`; the residual training
+    additionally depends on the IVF centroids, which are themselves
+    deterministic functions of the same fingerprinted corpus, so one
+    fingerprint covers both."""
     centroids = _corpus_centroids(spark, sf_dir, _IVF_K, _IVF_ITERS)
     sample = _pq_training_sample(spark, sf_dir)
     dim = sample.shape[1]
@@ -1085,9 +1020,7 @@ def _ivfpq_fit(spark, sf_dir):
     )
     residuals = sample - centroids[d2.argmin(axis=1)]
     codebooks = _pq_train_codebooks(residuals, dsub)
-    hit = (centroids, codebooks, (codebooks ** 2).sum(axis=2), dim, dsub)
-    memo_put(_IVFPQ_CODEBOOK_CACHE, key, fp, hit)
-    return hit
+    return centroids, codebooks, (codebooks ** 2).sum(axis=2), dim, dsub
 
 
 def _ivfpq_index_frame(spark, sf_dir, source=None):
@@ -2191,39 +2124,7 @@ def _als_item_init(n_items: int) -> np.ndarray:
     return np.array(vals).reshape(n_items, _ALS_RANK)
 
 
-#: Session memo for the shared ALS sweep: als_one_sweep_factors and
-#: als_convergence_report both consume `_als_sweep`, and before r11 each
-#: re-ran the whole sweep (user-step mapInPandas, item-step shuffle, RMSE
-#: join) — the r10 ADVICE noted that doubles the family's per-round cost
-#: for one extra scalar row. The result tuple is session-safe to share:
-#: `rated` is a localCheckpoint (lives for the Spark application), the
-#: rest are driver-side values. Fingerprint-validated like the dedup
-#: memos (base.memo_get/memo_put) so a mid-session testdata regeneration
-#: misses instead of serving stale factors.
-_ALS_SWEEP_CACHE: dict = {}
-
-
-def _als_memo_key(spark, sf_dir):
-    """((applicationId, sf_dir), fingerprint over the three ALS input
-    tables) — lineitem, orders, part all feed the ratings join, so the
-    fingerprint must cover all three. Any unreadable component collapses
-    the whole fingerprint to UNREADABLE_FINGERPRINT so memo_get/memo_put
-    fail safe (don't cache) instead of caching under a partial key."""
-    import os
-
-    from .base import UNREADABLE_FINGERPRINT
-
-    parts = tuple(
-        path_fingerprint(os.path.join(sf_dir, f"{t}.parquet"))
-        for t in ("lineitem", "orders", "part")
-    )
-    if UNREADABLE_FINGERPRINT in parts:
-        return (spark.sparkContext.applicationId, sf_dir), (
-            UNREADABLE_FINGERPRINT
-        )
-    return (spark.sparkContext.applicationId, sf_dir), parts
-
-
+@session_memo("lineitem", "orders", "part")
 def _als_sweep(spark, sf_dir):
     """The shared one-sweep ALS dataflow (see `als_one_sweep_factors`
     for the distributed design): ratings matrix -> batched per-user
@@ -2232,20 +2133,15 @@ def _als_sweep(spark, sf_dir):
     entry RMSE. Returns (rated, brands, n_raters, per_item,
     total_n, rmse, y_new) — `rated` is the CHECKPOINTED
     (user, item, r) frame, safe to re-aggregate without re-running the
-    ratings join. Memoized per (applicationId, sf_dir): the two registry
-    consumers run back-to-back in every driver round and the sweep is
-    deterministic, so the second consumer reuses the first's result."""
-    key, fp = _als_memo_key(spark, sf_dir)
-    cached = memo_get(_ALS_SWEEP_CACHE, key, fp)
-    if cached is not None:
-        return cached
-    result = _als_sweep_uncached(spark, sf_dir)
-    memo_put(_ALS_SWEEP_CACHE, key, fp, result)
-    return result
+    ratings join.
 
-
-def _als_sweep_uncached(spark, sf_dir):
-    """The actual sweep dataflow; always called through `_als_sweep`."""
+    Session-memoized over all three input tables (lineitem, orders and
+    part all feed the ratings join): als_one_sweep_factors and
+    als_convergence_report both consume the sweep, and before r11 each
+    re-ran it (user-step mapInPandas, item-step shuffle, RMSE join). The
+    result tuple is session-safe to share: `rated` is a localCheckpoint
+    (lives for the Spark application), the rest are driver-side
+    values."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     p = load_table(spark, sf_dir, "part")

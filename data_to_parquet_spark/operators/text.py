@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.exprs import distinct_tokens, exploded_rows, tokens
-from .base import Registry, load_table
+from .base import Registry, load_table, session_memo
 
 TXT = Registry()
 
@@ -1112,17 +1112,7 @@ _BM25_TOPK = 10
 _BM25_VALUES = ", ".join(f"({q}, '{t}')" for q, t in _BM25_QUERIES)
 
 
-#: (applicationId, sf_dir, content fingerprint) -> (dl, tf) lazily-
-#: checkpointed frames shared by bm25_rank_queries and
-#: hybrid_retrieval_rrf. Without the share the hybrid plan tokenized the
-#: corpus for its coverage ranker AND inside the BM25 subquery (6 parquet
-#: scans, no ReusedExchange); with it the corpus is tokenized once per
-#: session. The fingerprint (documents.parquet mtime/size) invalidates the
-#: memo if the testdata regenerates mid-session — same contract as the
-#: Lloyd-centroid memo.
-_BM25_FRAME_CACHE: dict = {}
-
-
+@session_memo("documents")
 def _bm25_frames(spark, sf_dir):
     """(tok, dl, tf): per-doc token arrays, token lengths, and
     per-(query, term, doc) term frequencies for the literal benchmark
@@ -1134,14 +1124,13 @@ def _bm25_frames(spark, sf_dir):
     rows, tf is bounded by |query terms| x matching docs (the broadcast
     query join filters the explode before any shuffle — the BM25 scale
     property, kept intact).
-    """
-    from .base import memo_get, memo_put, path_fingerprint
 
-    fp = path_fingerprint(f"{sf_dir}/documents.parquet")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo_get(_BM25_FRAME_CACHE, key, fp)
-    if cached is not None:
-        return cached
+    Session-memoized, shared by bm25_rank_queries and
+    hybrid_retrieval_rrf. Without the share the hybrid plan tokenized the
+    corpus for its coverage ranker AND inside the BM25 subquery (6 parquet
+    scans, no ReusedExchange); with it the corpus is tokenized once per
+    session.
+    """
     d = load_table(spark, sf_dir, "documents")
     q = spark.createDataFrame(_BM25_QUERIES, "query_id int, term string")
     tok = d.select("doc_id", tokens(F.col("text")).alias("t")).localCheckpoint(
@@ -1157,7 +1146,6 @@ def _bm25_frames(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("tf"))
         .localCheckpoint(eager=False)
     )
-    memo_put(_BM25_FRAME_CACHE, key, fp, (tok, dl, tf))
     return tok, dl, tf
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.exprs import dsum, exploded_rows, money
-from .base import Registry, load_table, memo_get, memo_put, path_fingerprint
+from .base import Registry, load_table, session_memo
 
 TPCH_X = Registry()
 
@@ -595,20 +595,18 @@ def rfm_customer_segments(spark, sf_dir):
     )
 
 
-#: (applicationId, sf_dir) -> the per-order sorted brand-set frame
-#: (l_orderkey, bs array<string>). THREE basket-analytics operators —
+#: The per-order sorted brand-set frame (l_orderkey, bs array<string>)
+#: is session-memoized over BOTH tables it joins, so a part-only
+#: regeneration invalidates it too (r15 ADVICE). THREE basket-analytics operators —
 #: `basket_brand_pairs`, `graph_triangle_count` and
 #: `item_cooccurrence_recs` — consume the IDENTICAL one-fact-shuffle
 #: build (lineitem ⋈ part → collect_set(p_brand) per order); the memo
-#: pays it once per session (r15 optimization round; the `_SIG_CACHE`
-#: "gather the incidence once, run every consumer off it" precedent,
-#: same lazily-materialized localCheckpoint + content-fingerprint
-#: invalidation). The sorted array serves all three: basket/triangle
-#: need the array_sort for their i<j pair fan-out, and the
-#: cooccurrence explode is order-insensitive.
-_ORDER_BRANDS_CACHE: dict = {}
-
-
+#: pays it once per session (r15 optimization round; the dedup signature
+#: table's "gather the incidence once, run every consumer off it"
+#: precedent, same lazily-materialized localCheckpoint). The sorted array
+#: serves all three: basket/triangle need the array_sort for their i<j
+#: pair fan-out, and the cooccurrence explode is order-insensitive.
+@session_memo("lineitem", "part")
 def _order_brand_sets(spark, sf_dir):
     """The shared per-order brand-set table. ONE shuffle total on the
     fact side: collect_set(p_brand) per order dedups and gathers brands
@@ -618,34 +616,14 @@ def _order_brand_sets(spark, sf_dir):
     downstream — pair explode, brand totals, order count — derives from
     this checkpointed per-order table (bounded at one row per order,
     ≤|brands|-element arrays)."""
-    import os
-
-    from .base import UNREADABLE_FINGERPRINT
-
-    # the memoized frame joins BOTH tables, so the fingerprint must cover
-    # both (the _als_memo_key contract): a part-only regeneration under
-    # the same path must invalidate, and any unreadable component
-    # collapses the whole fingerprint so memo_get/memo_put fail safe
-    # instead of caching under a partial key (r15 ADVICE).
-    parts = tuple(
-        path_fingerprint(os.path.join(sf_dir, f"{t}.parquet"))
-        for t in ("lineitem", "part")
-    )
-    fp = UNREADABLE_FINGERPRINT if UNREADABLE_FINGERPRINT in parts else parts
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo_get(_ORDER_BRANDS_CACHE, key, fp)
-    if cached is not None:
-        return cached
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
-    per_order = (
+    return (
         li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("p_brand")).alias("bs"))
         .localCheckpoint(eager=False)
     )
-    memo_put(_ORDER_BRANDS_CACHE, key, fp, per_order)
-    return per_order
 
 
 @TPCH_X.register(

@@ -16,7 +16,7 @@ import threading
 from pyspark.sql import functions as F
 
 from ..functions.exprs import money
-from ..operators.base import Registry, normalize_event_time
+from ..operators.base import Registry, normalize_event_time, session_memo
 
 STREAMING = Registry()
 
@@ -780,11 +780,6 @@ def streaming_chained_windows(spark, sf_dir):
     )
 
 
-#: (applicationId, sf_dir) -> accumulated pair table of the streaming
-#: incremental near-dup run; see the memo note inside the function.
-_INC_NEARDUP_CACHE: dict = {}
-
-
 @STREAMING.register(
     "streaming_incremental_neardup",
     oracle="""
@@ -831,14 +826,20 @@ def streaming_incremental_neardup(spark, sf_dir):
     return pairs.drop("epoch")
 
 
+@session_memo("documents")
 def _inc_neardup_accumulate(spark, sf_dir):
     """The epoch-carrying artifacts of the incremental near-dup stream:
     (pairs(epoch, doc_a, doc_b, jaccard), arrivals(epoch, doc_id)) —
     exposed (r13) so the label-maintenance query
     (`streaming_cc_label_maintenance`) can replay WHICH docs and pairs
     arrived in each epoch; `streaming_incremental_neardup` drops the
-    epoch (its oracle must not depend on arrival batching). Memoized per
-    (applicationId, sf_dir, content fingerprint)."""
+    epoch (its oracle must not depend on arrival batching).
+
+    Session-memoized: repeated invocations in one session (bench / driver
+    loops) would otherwise each write a full JSONL copy of the documents
+    table plus a new checkpoint dir. The temp root is removed at
+    interpreter exit (the returned DataFrame reads the parquet accumulator
+    lazily, so it must outlive the call)."""
     import atexit
     import os
     import shutil
@@ -846,24 +847,6 @@ def _inc_neardup_accumulate(spark, sf_dir):
 
     from ..functions.exprs import tokens
     from ..ops import incremental_neardup, neardup_jaccard_prefix
-
-    # Memoize per (application, sf_dir, content fingerprint): repeated
-    # invocations in one session (bench / driver loops) would otherwise
-    # each write a full JSONL copy of the documents table plus a new
-    # checkpoint dir. The fingerprint (mtime+size of documents.parquet,
-    # recursed one level for directory layouts) guards against the
-    # stale-green class where testdata is regenerated mid-session under
-    # the same path (advisor r6; NTZ-incident precedent). The temp root
-    # is removed at interpreter exit (the returned DataFrame reads the
-    # parquet accumulator lazily, so it must outlive the call).
-    from ..operators.base import memo_get, memo_put, path_fingerprint
-
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    fp = path_fingerprint(doc_path)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo_get(_INC_NEARDUP_CACHE, key, fp)
-    if cached is not None:
-        return cached
 
     root = tempfile.mkdtemp(prefix="inc_neardup_stream_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
@@ -932,14 +915,12 @@ def _inc_neardup_accumulate(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    out = (
+    return (
         spark.read.parquet(pairs_dir).select(
             "epoch", "doc_a", "doc_b", "jaccard"
         ),
         spark.read.parquet(corpus_dir).select("epoch", "doc_id"),
     )
-    memo_put(_INC_NEARDUP_CACHE, key, fp, out)
-    return out
 
 
 from ..operators.dedup import _CC_ORACLE  # noqa: E402
@@ -1051,10 +1032,10 @@ def _cc_fold_epochs(spark, pairs, arrivals):
     )
 
 
-_IVFPQ_STREAM_CACHE: dict = {}
 _IVFPQ_STREAM_FILES = 5  # arrival batches (one file per trigger)
 
 
+@session_memo("embeddings")
 def _ivfpq_stream_accumulate(spark, sf_dir):
     """The epoch-partitioned coded frame (epoch, vec_id, cell, codes,
     xnorm) accumulated by the streaming index build — the internal
@@ -1067,15 +1048,9 @@ def _ivfpq_stream_accumulate(spark, sf_dir):
     import shutil
     import tempfile
 
-    from ..operators.base import memo_get, memo_put, path_fingerprint
     from ..operators.similarity import _ivfpq_fit, _ivfpq_index_frame
 
     emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    fp = path_fingerprint(emb_path)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo_get(_IVFPQ_STREAM_CACHE, key, fp)
-    if cached is not None:
-        return cached
 
     # Freeze the quantizer BEFORE the stream starts: production systems
     # train the coarse centroids + residual codebooks on a bootstrap
@@ -1121,11 +1096,9 @@ def _ivfpq_stream_accumulate(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    out = spark.read.parquet(coded_dir).select(
+    return spark.read.parquet(coded_dir).select(
         "epoch", "vec_id", "cell", "codes", "xnorm"
     )
-    memo_put(_IVFPQ_STREAM_CACHE, key, fp, out)
-    return out
 
 
 @STREAMING.register(
@@ -1373,9 +1346,7 @@ def streaming_ivfpq_index_serving(spark, sf_dir):
     )
 
 
-_MANIFEST_STREAM_CACHE: dict = {}
-
-
+@session_memo("documents")
 def _manifest_stream_accumulate(spark, sf_dir):
     """The epoch-partitioned per-batch manifest partials (epoch,
     shard_id, n_docs, n_tokens, n_chars, checksum, min_doc_id,
@@ -1387,15 +1358,9 @@ def _manifest_stream_accumulate(spark, sf_dir):
     import shutil
     import tempfile
 
-    from ..operators.base import memo_get, memo_put, path_fingerprint
     from ..operators.pipeline import _shard_manifest_frame
 
     doc_path = os.path.join(sf_dir, "documents.parquet")
-    fp = path_fingerprint(doc_path)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo_get(_MANIFEST_STREAM_CACHE, key, fp)
-    if cached is not None:
-        return cached
 
     root = tempfile.mkdtemp(prefix="manifest_stream_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
@@ -1427,9 +1392,7 @@ def _manifest_stream_accumulate(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    out = spark.read.parquet(part_dir)
-    memo_put(_MANIFEST_STREAM_CACHE, key, fp, out)
-    return out
+    return spark.read.parquet(part_dir)
 
 
 from ..operators.pipeline import _SHARD_MANIFEST_ORACLE
@@ -1543,9 +1506,7 @@ _UPSERT_BATCH_ORACLE = """
     """
 
 
-_UPSERT_STREAM_CACHE: dict = {}
-
-
+@session_memo("events")
 def _upsert_stream_state(spark, sf_dir):
     """The final keyed state snapshot (user_id, s(ts, event_id,
     event_type, value), n_events) produced by the foreachBatch upsert
@@ -1556,20 +1517,7 @@ def _upsert_stream_state(spark, sf_dir):
     import shutil
     import tempfile
 
-    from ..operators.base import (
-        memo_get,
-        memo_put,
-        normalize_event_time,
-        path_fingerprint,
-    )
-
     ev_path = os.path.join(sf_dir, "events.parquet")
-    fp = path_fingerprint(ev_path)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo_get(_UPSERT_STREAM_CACHE, key, fp)
-    if cached is not None:
-        return cached
-
     root = tempfile.mkdtemp(prefix="upsert_stream_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     in_dir = os.path.join(root, "in")
@@ -1626,14 +1574,12 @@ def _upsert_stream_state(spark, sf_dir):
         for p in os.listdir(state_dir)
         if p.startswith("epoch=")
     )
-    out = (
+    return (
         spark.read.parquet(f"{state_dir}/epoch={epochs[-1]}").select(
             "user_id", "s", "n_events"
         ),
         len(epochs),
     )
-    memo_put(_UPSERT_STREAM_CACHE, key, fp, out)
-    return out
 
 
 @STREAMING.register(
@@ -1681,9 +1627,7 @@ def streaming_upsert_latest_state(spark, sf_dir):
     return _upsert_project(state)
 
 
-_UPSERT_DELTA_CACHE: dict = {}
-
-
+@session_memo("events")
 def _upsert_delta_chain(spark, sf_dir):
     """The log-structured alternative to `_upsert_stream_state`: each
     foreachBatch epoch appends ONLY its batch's folded partials
@@ -1691,27 +1635,13 @@ def _upsert_delta_chain(spark, sf_dir):
     never reads prior state and never rewrites the snapshot, so
     per-epoch cost is |batch keys| rows flat in accumulated history
     (the every-epoch-rewrite variant pays |keys| per epoch). Returns
-    (delta_frame, n_epochs, delta_dir). Memoized per
-    (applicationId, sf_dir)."""
+    (delta_frame, n_epochs, delta_dir). Session-memoized."""
     import atexit
     import os
     import shutil
     import tempfile
 
-    from ..operators.base import (
-        memo_get,
-        memo_put,
-        normalize_event_time,
-        path_fingerprint,
-    )
-
     ev_path = os.path.join(sf_dir, "events.parquet")
-    fp = path_fingerprint(ev_path)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo_get(_UPSERT_DELTA_CACHE, key, fp)
-    if cached is not None:
-        return cached
-
     root = tempfile.mkdtemp(prefix="upsert_delta_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     in_dir = os.path.join(root, "in")
@@ -1754,15 +1684,13 @@ def _upsert_delta_chain(spark, sf_dir):
         for p in os.listdir(delta_dir)
         if p.startswith("epoch=")
     ]
-    out = (
+    return (
         spark.read.parquet(delta_dir).select(
             "epoch", "user_id", "s", "n_events"
         ),
         len(epochs),
         delta_dir,
     )
-    memo_put(_UPSERT_DELTA_CACHE, key, fp, out)
-    return out
 
 
 @STREAMING.register(
@@ -1809,9 +1737,7 @@ def compact_upsert_snapshot(spark, sf_dir):
     return _upsert_project(spark.read.parquet(compacted_dir))
 
 
-_COMPACT_SNAPSHOT_CACHE: dict = {}
-
-
+@session_memo("events")
 def _compacted_snapshot_dir(spark, sf_dir, which: str) -> str:
     """Materialize (once per applicationId/sf_dir/fingerprint) the
     compaction artifacts the log-structured pair serves from:
@@ -1821,13 +1747,6 @@ def _compacted_snapshot_dir(spark, sf_dir, which: str) -> str:
     run" artifact). Returns the parquet dir path."""
     import os
 
-    from ..operators.base import memo_get, memo_put, path_fingerprint
-
-    fp = path_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = (spark.sparkContext.applicationId, sf_dir, which)
-    cached = memo_get(_COMPACT_SNAPSHOT_CACHE, key, fp)
-    if cached is not None:
-        return cached
     deltas, n_epochs, delta_dir = _upsert_delta_chain(spark, sf_dir)
     if which == "compacted":
         snap = _upsert_batch_fold(deltas)
@@ -1841,7 +1760,6 @@ def _compacted_snapshot_dir(spark, sf_dir, which: str) -> str:
         )
         out_dir = os.path.join(os.path.dirname(delta_dir), "compact_base")
     snap.coalesce(1).write.mode("overwrite").parquet(out_dir)
-    memo_put(_COMPACT_SNAPSHOT_CACHE, key, fp, out_dir)
     return out_dir
 
 
@@ -1892,14 +1810,13 @@ def compact_upsert_incremental(spark, sf_dir):
 
 from ..operators.pipeline import _BLOOM_AUDIT_ORACLE  # noqa: E402
 
-_DECON_STREAM_CACHE: dict = {}
 
-
+@session_memo("documents")
 def _decon_stream_partials(spark, sf_dir):
     """The per-epoch decontamination-audit partials (epoch, n_probes,
     n_cont, n_fn, n_fp) accumulated by the streaming probe — exposed
     with the epoch column for the pytest pins; the registered query
-    folds the epochs away. Memoized per (applicationId, sf_dir).
+    folds the epochs away. Session-memoized.
 
     Setup mirrors production: the BENCHMARK deny-set is known before
     the stream starts (an eval suite is a fixed artifact), so the exact
@@ -1913,7 +1830,6 @@ def _decon_stream_partials(spark, sf_dir):
     import tempfile
 
     from ..functions.exprs import exploded_rows
-    from ..operators.base import memo_get, memo_put, path_fingerprint
     from ..operators.pipeline import (
         _BENCH_MOD,
         _bloom_audit_counts,
@@ -1923,11 +1839,6 @@ def _decon_stream_partials(spark, sf_dir):
     )
 
     doc_path = os.path.join(sf_dir, "documents.parquet")
-    fp = path_fingerprint(doc_path)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo_get(_DECON_STREAM_CACHE, key, fp)
-    if cached is not None:
-        return cached
 
     # deny-set state, built up front from the benchmark slice: the
     # DISTINCT shingle frame for the exact side (localCheckpoint — it
@@ -1990,9 +1901,7 @@ def _decon_stream_partials(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    out = spark.read.parquet(part_dir)
-    memo_put(_DECON_STREAM_CACHE, key, fp, out)
-    return out
+    return spark.read.parquet(part_dir)
 
 
 @STREAMING.register(

@@ -144,24 +144,22 @@ def test_pq_reconstruction_audit_buckets_have_margin(spark):
 
 def test_pq_fit_memoized_within_session(spark):
     """`similarity_ann_pq` and `pq_reconstruction_audit` share one
-    training run per session via the fingerprint-validated codebook
-    memo; a stale fingerprint must miss and retrain."""
+    training run per session via the codebook memo; a retrain after the
+    memo is emptied reproduces the same codebooks."""
     from data_to_parquet_spark.operators import similarity as sim
 
-    sim._PQ_CODEBOOK_CACHE.clear()
+    sim._pq_fit.memo.clear()
     first = sim._pq_fit(spark, SF)
     second = sim._pq_fit(spark, SF)
     assert first is second
-    assert len(sim._PQ_CODEBOOK_CACHE) == 1
-    key = next(iter(sim._PQ_CODEBOOK_CACHE))
-    fp, val = sim._PQ_CODEBOOK_CACHE[key]
-    sim._PQ_CODEBOOK_CACHE[key] = (("stale",), val)
+    assert len(sim._pq_fit.memo) == 1
+    sim._pq_fit.memo.clear()
     third = sim._pq_fit(spark, SF)
-    assert third is not val
+    assert third is not first
     import numpy as np
 
     np.testing.assert_array_equal(first[0], third[0])  # retrain is stable
-    sim._PQ_CODEBOOK_CACHE.clear()
+    sim._pq_fit.memo.clear()
 
 
 def test_ivfpq_recall_determinism_and_cell_restriction(spark):

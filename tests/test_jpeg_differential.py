@@ -295,14 +295,17 @@ def _decode_jpeg_ref(data: bytes) -> np.ndarray:
     return _ycbcr_to_rgb(planes[0], planes[1], planes[2])
 
 
-def test_decoder_restart_markers_equal_reference():
-    """Reuse the hand-assembled DRI=1 stream from test_jpeg_codec to pin
-    segment advancement + predictor reset against the reference."""
-    from tests.test_jpeg_codec import test_restart_marker_resync  # noqa: F401
+def _gray_stream(dc_vals, restart: bool) -> bytes:
+    """An 8x24 gray baseline stream of three flat MCUs (levels 40, 200,
+    90) coded with a DC table of the standard luma BITS over ``dc_vals``
+    and the standard luma AC table; with ``restart``, DRI=1 puts an RSTn
+    marker after each of the first two MCUs."""
     import struct
 
+    from data_to_parquet_spark.functions.jpeg import _canonical_codes
+
     qt = _scaled_quant(_QUANT_LUMA, 90)
-    dc = _DC_CODES[0]
+    dc = _canonical_codes(_DC_LUMA_BITS, dc_vals)
     ac = _AC_CODES[0]
     out = bytearray()
     out += b"\xff\xd8"
@@ -311,27 +314,62 @@ def test_decoder_restart_markers_equal_reference():
     out += b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, 8, 24, 1)
     out += bytes([1, 0x11, 0])
     for tc_th, bits_l, vals in (
-        (0x00, _DC_LUMA_BITS, _DC_LUMA_VALS),
+        (0x00, _DC_LUMA_BITS, dc_vals),
         (0x10, _AC_LUMA_BITS, _AC_LUMA_VALS),
     ):
         out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals), tc_th)
         out += bytes(bits_l) + bytes(vals)
-    out += b"\xff\xdd" + struct.pack(">HH", 4, 1)
+    if restart:
+        out += b"\xff\xdd" + struct.pack(">HH", 4, 1)
     out += b"\xff\xda" + struct.pack(">HB", 8, 1) + bytes([1, 0x00])
     out += b"\x00\x3f\x00"
     segs = []
+    bw = _BitWriter()
+    pred = 0
     for v in (40, 200, 90):
-        bw = _BitWriter()
         dc_val = round(8 * (v - 128) / int(qt[0, 0]))
-        s, bits = _magnitude(dc_val)
+        s, bits = _magnitude(dc_val - pred)
         code, ln = dc[s]
         bw.put(code, ln)
         if s:
             bw.put(bits, s)
         code, ln = ac[0x00]
         bw.put(code, ln)
-        segs.append(bw.flush())
-    out += segs[0] + b"\xff\xd0" + segs[1] + b"\xff\xd1" + segs[2]
+        if restart:
+            segs.append(bw.flush())
+            bw = _BitWriter()
+        else:
+            pred = dc_val
+    if restart:
+        out += segs[0] + b"\xff\xd0" + segs[1] + b"\xff\xd1" + segs[2]
+    else:
+        out += bw.flush()
     out += b"\xff\xd9"
-    data = bytes(out)
+    return bytes(out)
+
+
+def test_decoder_restart_markers_equal_reference():
+    """Assemble a DRI=1 stream here (``_gray_stream``: one 8x24 gray
+    image, three MCUs, a restart marker after each of the first two) to
+    pin segment advancement + predictor reset against the reference."""
+    data = _gray_stream(_DC_LUMA_VALS, restart=True)
     assert np.array_equal(decode_jpeg(data), _decode_jpeg_ref(data))
+
+
+def test_decoder_table_cache_stays_bounded_on_foreign_tables():
+    """Files with more distinct DHT definitions than the decode-table
+    cache holds (here: permuted DC symbol assignments) still decode to
+    the reference's pixels, and the cache never grows past its bound."""
+    from data_to_parquet_spark.functions.jpeg import _HUFF_LUT_MAX, _huff_lut
+
+    rng = np.random.default_rng(16)
+    tables = {tuple(rng.permutation(12).tolist()) for _ in range(_HUFF_LUT_MAX + 8)}
+    assert len(tables) > _HUFF_LUT_MAX
+    _huff_lut.cache_clear()
+    for dc_vals in sorted(tables):
+        data = _gray_stream(list(dc_vals), restart=False)
+        assert np.array_equal(decode_jpeg(data), _decode_jpeg_ref(data))
+        assert _huff_lut.cache_info().currsize <= _HUFF_LUT_MAX
+    info = _huff_lut.cache_info()
+    assert info.misses == len(tables) + 1  # + the shared AC table
+    assert info.currsize == _HUFF_LUT_MAX

@@ -76,7 +76,7 @@ def test_verdict_memo_warm_prior_uses_warm_reps():
 
 def test_verdict_self_cached_never_uses_warm_reps():
     """r9 follow-up review: dedup_connected_components' warm reps are
-    pure _CC_LABEL_CACHE reads (~0.05 s) — its bench prior paid the CC
+    pure _cc_label_table.memo reads (~0.05 s) — its bench prior paid the CC
     fixpoint, so a warm basis would auto-noise a REAL regression (the
     original r8-ADVICE trap). Self-cached queries stay on the cold rep
     with the manual branch, even though jaccard precedes them in bench

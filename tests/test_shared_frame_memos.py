@@ -2,8 +2,9 @@
 eps-graph, hashed-embedding sums) must (a) serve the identical frame to
 every consumer within one data generation, (b) invalidate when the
 backing table regenerates under the same path (the stale-green class the
-NTZ incident documents — same contract as the Lloyd-centroid memo), and
-(c) leave every consumer's VALUES unchanged vs an uncached rebuild.
+NTZ incident documents), and (c) leave every consumer's VALUES unchanged
+vs an uncached rebuild. The memo contract itself (one entry per
+generation, unreadable tables bypass) is pinned in test_session_memo.py.
 """
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ def _basket_fixture(spark, root: str, shift: int) -> None:
 def test_order_brands_memo_reuses_and_invalidates(spark, tmp_path):
     root = str(tmp_path)
     _basket_fixture(spark, root, shift=0)
-    tx._ORDER_BRANDS_CACHE.clear()
+    tx._order_brand_sets.memo.clear()
     f1 = tx._order_brand_sets(spark, root)
     f2 = tx._order_brand_sets(spark, root)
     assert f1 is f2  # served from the memo
@@ -66,7 +67,6 @@ def test_order_brands_memo_reuses_and_invalidates(spark, tmp_path):
     assert f3 is not f1  # regenerated table misses the memo
     rows3 = {r["l_orderkey"]: list(r["bs"]) for r in f3.collect()}
     assert rows3 != rows1
-    assert len(tx._ORDER_BRANDS_CACHE) == 1  # replaced, not accumulated
     # part-ONLY regeneration must also invalidate (r15 ADVICE: the memo
     # joins part.parquet for p_brand, so a fingerprint that only covered
     # lineitem served stale brand sets when part alone regenerated)
@@ -80,7 +80,6 @@ def test_order_brands_memo_reuses_and_invalidates(spark, tmp_path):
     assert f4 is not f3  # stale-part memo must miss
     rows4 = {r["l_orderkey"]: list(r["bs"]) for r in f4.collect()}
     assert rows4 != rows3  # new brand names visible
-    assert len(tx._ORDER_BRANDS_CACHE) == 1
 
 
 def test_eps_pairs_memo_reuses_and_invalidates(spark, tmp_path):
@@ -101,7 +100,7 @@ def test_eps_pairs_memo_reuses_and_invalidates(spark, tmp_path):
         )
 
     write_emb(1.0)
-    sim._EPS_PAIRS_CACHE.clear()
+    sim.embedding_neardup_pairs.memo.clear()
     f1 = sim.embedding_neardup_pairs(spark, root)
     f2 = sim.embedding_neardup_pairs(spark, root)
     assert f1 is f2
@@ -123,7 +122,6 @@ def test_eps_pairs_memo_reuses_and_invalidates(spark, tmp_path):
     )
     f3 = sim.embedding_neardup_pairs(spark, root)
     assert f3 is not f1
-    assert len(sim._EPS_PAIRS_CACHE) == 1
 
 
 def test_shingle_frame_memo_reuses_and_invalidates(spark, tmp_path):
@@ -145,7 +143,7 @@ def test_shingle_frame_memo_reuses_and_invalidates(spark, tmp_path):
         )
 
     write_docs("")
-    pipe._SHINGLE_CACHE.clear()
+    pipe._shingle_frame.memo.clear()
     f1 = pipe._shingle_frame(spark, root)
     f2 = pipe._shingle_frame(spark, root)
     assert f1 is f2  # served from the memo
@@ -163,7 +161,6 @@ def test_shingle_frame_memo_reuses_and_invalidates(spark, tmp_path):
     assert f3 is not f1  # regenerated table misses the memo
     rows3 = {r["doc_id"]: list(r["s"]) for r in f3.collect()}
     assert rows3 != rows1
-    assert len(pipe._SHINGLE_CACHE) == 1  # replaced, not accumulated
 
 
 def test_bf_topk_memo_reuses_and_invalidates(spark, tmp_path):
@@ -187,7 +184,7 @@ def test_bf_topk_memo_reuses_and_invalidates(spark, tmp_path):
         )
 
     write_emb(1.0)
-    sim._BF_TOPK_CACHE.clear()
+    sim.similarity_topk_bruteforce.memo.clear()
     f1 = sim.similarity_topk_bruteforce(spark, root)
     f2 = sim.similarity_topk_bruteforce(spark, root)
     assert f1 is f2  # served from the memo
@@ -197,7 +194,6 @@ def test_bf_topk_memo_reuses_and_invalidates(spark, tmp_path):
     write_emb(3.0)  # same directions scaled — but mtime/size change
     f3 = sim.similarity_topk_bruteforce(spark, root)
     assert f3 is not f1  # regenerated table misses the memo
-    assert len(sim._BF_TOPK_CACHE) == 1  # replaced, not accumulated
 
 
 def test_emb_sums_memo_full_corpus_only(spark, tmp_path):
@@ -213,14 +209,14 @@ def test_emb_sums_memo_full_corpus_only(spark, tmp_path):
         )
 
     write_docs("")
-    pipe._EMB_SUMS_CACHE.clear()
+    pipe._corpus_embedding_sums.memo.clear()
     f1 = pipe._hashed_embedding_sums(spark, root)
     f2 = pipe._hashed_embedding_sums(spark, root)
     assert f1 is f2
     # filtered subsets are NOT memoized (each filter is its own plan) ...
     q = pipe._hashed_embedding_sums(spark, root, doc_filter=F.col("doc_id") < 3)
     assert q is not f1
-    assert len(pipe._EMB_SUMS_CACHE) == 1
+    assert len(pipe._corpus_embedding_sums.memo) == 1
     # ... and subset vectors equal their full-corpus twins (the contract
     # generated_embedding_topk's query side relies on)
     full = {r["doc_id"]: list(r["emb_sums"]) for r in f1.collect()}
@@ -230,4 +226,3 @@ def test_emb_sums_memo_full_corpus_only(spark, tmp_path):
     write_docs("x")
     f3 = pipe._hashed_embedding_sums(spark, root)
     assert f3 is not f1
-    assert len(pipe._EMB_SUMS_CACHE) == 1

@@ -62,8 +62,8 @@ def _cold(fn, *args):
     """Run fn cold: clear the dedup signature/pair memos first."""
     from data_to_parquet_spark.operators import dedup
 
-    dedup._SIG_CACHE.clear()
-    dedup._JACCARD_PAIRS_CACHE.clear()
+    dedup._doc_signatures.memo.clear()
+    dedup.neardup_jaccard_pairs.memo.clear()
     t = time.time()
     n = fn(*args).count()
     return time.time() - t, n
@@ -100,7 +100,7 @@ def main() -> None:
     for thr in (0.80, 0.90, 0.95):
         from data_to_parquet_spark.operators import dedup as dd
 
-        dd._SIG_CACHE.clear()
+        dd._doc_signatures.memo.clear()
         t = time.time()
         n = neardup_containment_prefix(
             d,

@@ -81,9 +81,9 @@ def _build_emb_corpora(spark) -> tuple[str, str]:
 def _cold_docs(fn, *args):
     from data_to_parquet_spark.operators import dedup
 
-    dedup._SIG_CACHE.clear()
-    dedup._JACCARD_PAIRS_CACHE.clear()
-    dedup._CC_LABEL_CACHE.clear()
+    dedup._doc_signatures.memo.clear()
+    dedup.neardup_jaccard_pairs.memo.clear()
+    dedup._cc_label_table.memo.clear()
     t = time.time()
     n = fn(*args).count()
     return time.time() - t, n

@@ -82,7 +82,7 @@ def _build_emb_corpora(spark) -> dict[int, str]:
 def _cold_run(spark, sf_dir):
     from data_to_parquet_spark.operators import similarity as sim
 
-    sim._PQ_CODEBOOK_CACHE.clear()
+    sim._pq_fit.memo.clear()
     t = time.time()
     n = sim.pq_reconstruction_audit(spark, sf_dir).count()
     return time.time() - t, n
