@@ -597,8 +597,8 @@ def rfm_customer_segments(spark, sf_dir):
 
 #: The per-order sorted brand-set frame (l_orderkey, bs array<string>)
 #: is session-memoized over BOTH tables it joins, so a part-only
-#: regeneration invalidates it too (r15 ADVICE). THREE basket-analytics operators —
-#: `basket_brand_pairs`, `graph_triangle_count` and
+#: regeneration invalidates it too (r15 ADVICE). THREE basket-analytics
+#: operators — `basket_brand_pairs`, `graph_triangle_count` and
 #: `item_cooccurrence_recs` — consume the IDENTICAL one-fact-shuffle
 #: build (lineitem ⋈ part → collect_set(p_brand) per order); the memo
 #: pays it once per session (r15 optimization round; the dedup signature

@@ -202,7 +202,8 @@ def test_bounded_line_caps_first_contact_queries(tmp_path):
     out = _bounded_line(times, {"sf": 0.1}, root=str(tmp_path))
     assert list(out["queries"]) == [f"new{i:02d}" for i in range(_BOUNDED_MAX)]
     overflow = len(times) - _BOUNDED_MAX
-    assert f"{overflow} over the cap of {_BOUNDED_MAX}" in out["queries_bounded"]
+    note = out["queries_bounded"]
+    assert f"{overflow} over the cap of {_BOUNDED_MAX}" in note
 
 
 def test_tail_recovery_skips_bounded_line(tmp_path):

@@ -363,7 +363,9 @@ def test_decoder_table_cache_stays_bounded_on_foreign_tables():
     from data_to_parquet_spark.functions.jpeg import _HUFF_LUT_MAX, _huff_lut
 
     rng = np.random.default_rng(16)
-    tables = {tuple(rng.permutation(12).tolist()) for _ in range(_HUFF_LUT_MAX + 8)}
+    tables = {
+        tuple(rng.permutation(12).tolist()) for _ in range(_HUFF_LUT_MAX + 8)
+    }
     assert len(tables) > _HUFF_LUT_MAX
     _huff_lut.cache_clear()
     for dc_vals in sorted(tables):

@@ -131,7 +131,9 @@ def test_session_memo_keys_on_application_and_sf_dir(tmp_path):
         os.mkdir(tmp_path / sub)
         _write(str(tmp_path / sub), "documents", b"x")
     fn, builds = _stand_in(("documents",))
-    other = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-2"))
+    other = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app-2")
+    )
     fn(_SPARK, str(tmp_path / "a"), 1)
     fn(_SPARK, str(tmp_path / "b"), 1)
     fn(other, str(tmp_path / "a"), 1)
