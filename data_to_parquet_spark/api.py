@@ -47,17 +47,13 @@ def convert(
         skip_rows=skip_rows,
         batch_size=batch_size,
     )
-    # ONE pass: the sink writes part files with full task parallelism and
-    # merges them driver-side, and the row count comes free from the
-    # written file's parquet metadata — no cache materialization, no
-    # separate count job, no one-task drain (2.31 s -> 1.38 s warm for the
-    # 100k-row bench conversion vs the former cache+count+coalesce form).
-    # row_group_rows=batch_size replicates the reference writer's
-    # ``max_row_group_size = batch_size`` (src/lib.rs:281-282) exactly.
-    to_single_parquet_file(df, output_path, row_group_rows=batch_size)
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(output_path).metadata.num_rows
+    # ONE pass: the tasks decode with full parallelism, the sink collects
+    # their Arrow batches in order and writes one file, and the row count
+    # comes back from the collected table — no cache materialization, no
+    # separate count job, no one-task drain. row_group_rows=batch_size
+    # replicates the reference writer's ``max_row_group_size = batch_size``
+    # (src/lib.rs:281-282) exactly.
+    return to_single_parquet_file(df, output_path, row_group_rows=batch_size)
 
 
 def convert_many(
@@ -87,10 +83,10 @@ def convert_many(
         skip_rows=skip_rows,
         batch_size=batch_size,
     )
-    # ONE pass (same trick as convert()): write directly, then sum the row
-    # counts from the written part files' parquet footers driver-side — no
-    # cache materialization holding the whole fleet in memory, no separate
-    # count job re-parsing every workbook.
+    # ONE pass: write directly, then sum the row counts from the written
+    # part files' parquet footers driver-side — no cache materialization
+    # holding the whole fleet in memory, no separate count job re-parsing
+    # every workbook.
     to_parquet(df, output_dir, compression=compression)
     import glob as _glob
 

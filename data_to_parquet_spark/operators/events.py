@@ -7,6 +7,7 @@ Streaming variant of the tumbling aggregate (same semantics, same oracle).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -282,9 +283,8 @@ def udaf_geometric_mean(spark, sf_dir):
     ulps cannot flip the value oracle.
     """
     import numpy as np
-    import pandas as pd  # noqa: F401 — annotation target for the UDF
 
-    def _gmean(v: pd.Series) -> float | None:
+    def _gmean(v: pd.Series) -> float:
         arr = v.to_numpy()
         pos = arr[arr > 0]
         # no positive values -> NULL, matching the algebraic leg's
@@ -295,7 +295,7 @@ def udaf_geometric_mean(spark, sf_dir):
             return None
         return float(np.exp(np.log(pos).mean()))
 
-    gmean = F.pandas_udf(_gmean, "double", F.PandasUDFType.GROUPED_AGG)
+    gmean = F.pandas_udf(_gmean, "double")
 
     e = load_table(spark, sf_dir, "events")
     # grouped-agg pandas UDFs can't be placed alongside built-in aggregates

@@ -640,7 +640,6 @@ def _pq_fit(spark, sf_dir):
     `pq_reconstruction_audit` (r11) share one training run per session —
     the training collect is bounded (_PQ_SAMPLE_N rows) but pays a corpus
     scan + sort."""
-    e = load_table(spark, sf_dir, "embeddings")
     # deterministic training sample: md5(id)-lowest rows (content-
     # independent pseudo-random and stable across partitionings, unlike a
     # bare limit() whose row order is scan-order-dependent)

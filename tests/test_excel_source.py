@@ -254,8 +254,8 @@ def test_row_group_size_matches_batch_size(spark, tmp_path):
 
 
 def test_row_group_regroup_single_part(spark, tmp_path):
-    """row_group_rows must re-group even when the write produced ONE part
-    file (the move fast-path may not skip the sizing contract)."""
+    """row_group_rows must re-group even when the frame has ONE
+    partition (one Arrow batch still gets exact groups)."""
     import pyarrow.parquet as pq
 
     from data_to_parquet_spark.sinks.parquet import to_single_parquet_file
@@ -279,11 +279,12 @@ def test_row_group_regroup_single_part(spark, tmp_path):
         (30, 10, 4),     # n == k*batch: all-full groups, no trailer
         (7, 1, 2),       # batch=1: one group per row
         (23, 10, 1),     # single part still re-grouped
+        (0, 10, 3),      # no rows at all: a readable file, no row groups
     ],
 )
 def test_row_group_regroup_edge_shapes(spark, tmp_path, n, batch, parts):
     """Exact row-group sizing must hold for every split of rows across
-    part files: groups of exactly ``batch`` rows, one partial trailer iff
+    partitions: groups of exactly ``batch`` rows, one partial trailer iff
     batch does not divide n, order preserved."""
     import pyarrow.parquet as pq
 
@@ -311,6 +312,86 @@ def test_row_group_rows_must_be_positive(spark, tmp_path, bad):
     out = str(tmp_path / "bad_rg.parquet")
     with pytest.raises(DataToParquetError, match="row_group_rows"):
         to_single_parquet_file(spark.range(10), out, row_group_rows=bad)
+
+
+def _typed_frame(spark):
+    """40 rows over 4 partitions with one column of each non-string type
+    the single-file sink must carry unchanged, nulls included."""
+    from pyspark.sql import functions as F
+
+    i = F.col("id")
+
+    def null_every_5th(c):
+        return F.when(i % 5 == 0, None).otherwise(c)
+
+    return spark.range(0, 40, 1, 4).select(
+        i,
+        null_every_5th(F.timestamp_micros(i * 3_600_000_123)).alias("ts"),
+        null_every_5th(F.date_add(F.lit("2024-02-27").cast("date"), i.cast("int"))).alias("d"),
+        null_every_5th((i / 7).cast("decimal(18,4)")).alias("dec"),
+        null_every_5th(F.array(i, i * 2)).alias("arr"),
+        null_every_5th(F.struct(i.alias("a"), i.cast("string").alias("b"))).alias("st"),
+        null_every_5th(F.create_map(i.cast("string"), i * 10)).alias("m"),
+        null_every_5th(i.cast("string").cast("binary")).alias("bin"),
+    )
+
+
+@pytest.mark.parametrize("row_group_rows", [None, 10])
+def test_single_file_type_roundtrip(spark, tmp_path, row_group_rows):
+    """Every column type Spark writes must read back from the single file
+    as the same type with the same values, in order. A multi-partition
+    timestamp column used to come out as TIMESTAMP(NANOS, not UTC), which
+    spark.read.parquet cannot read; ``df.toArrow()`` cannot collect the
+    null structs of ``st``, whose fields are non-nullable (pyarrow 16)."""
+    from data_to_parquet_spark.sinks.parquet import to_single_parquet_file
+
+    df = _typed_frame(spark)
+    out = str(tmp_path / f"typed_{row_group_rows}.parquet")
+    n = to_single_parquet_file(df, out, row_group_rows=row_group_rows)
+    back = spark.read.parquet(out)
+    assert back.schema.simpleString() == df.schema.simpleString()
+    assert back.collect() == df.collect()
+    assert n == 40
+
+
+def test_convert_header_only_workbook(spark, tmp_path):
+    """A sheet with a header and no data rows converts to a readable file
+    with the header's columns and zero rows."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "header_only.xlsx")
+    out = str(tmp_path / "header_only.parquet")
+    write_xlsx(src, {"S": [["a", "b", "c"]]})
+    assert convert(src, out, spark=spark) == 0
+    assert pq.ParquetFile(out).metadata.num_rows == 0
+    back = spark.read.parquet(out)
+    assert back.columns == ["a", "b", "c"]
+    assert back.count() == 0
+
+
+def test_single_file_failed_job_leaves_existing_output(spark, tmp_path):
+    """A job that fails inside a UDF must leave the file already at
+    ``path`` byte-identical and no scratch directory beside it."""
+    import glob
+
+    from data_to_parquet_spark.sinks.parquet import to_single_parquet_file
+
+    out = str(tmp_path / "kept.parquet")
+    to_single_parquet_file(spark.range(25), out, row_group_rows=10)
+    with open(out, "rb") as f:
+        before = f.read()
+
+    def boom(batches):
+        for _ in batches:
+            raise ValueError("boom in a task")
+        yield from ()
+
+    failing = spark.range(0, 100, 1, 4).mapInArrow(boom, "id long")
+    with pytest.raises(Exception, match="boom in a task"):
+        to_single_parquet_file(failing, out, row_group_rows=10)
+    with open(out, "rb") as f:
+        assert f.read() == before
+    assert glob.glob(str(tmp_path / "d2p_*")) == []
 
 
 def test_split_path_equivalence(spark, tmp_path, monkeypatch):
