@@ -9,10 +9,13 @@ Design (SURVEY.md §3.3 "Spark lifecycle"):
   its entry — parallelism across files/executors replaces the reference's 8
   hard-coded worker threads (``src/lib.rs:169,237``);
 * inside each task, one ``mapInArrow`` Python stage runs
-  :func:`read_workbook`, the one task reader: the stdlib streaming scan
-  (:mod:`.xlsx` / :mod:`.xlsb`) densified into ``batch_size``-row Arrow
-  batches, replacing the reference's hand-rolled RecordBatch pivot
-  (``src/lib.rs:403-439``). The ``excel``
+  :func:`read_workbook`, the one task reader: :func:`scan_sheet` yields
+  ``batch_size``-row Arrow batches, replacing the reference's hand-rolled
+  RecordBatch pivot (``src/lib.rs:403-439``). A machine-written .xlsx
+  buffer goes from cells straight to Arrow columns in the columnar tier
+  (``xlsx.ColumnarRows``, ``pyarrow.compute`` doing the per-cell work);
+  the row walkers of :mod:`.xlsx` and :mod:`.xlsb` are densified by
+  :func:`_dense_batches`. The ``excel``
   DataSource (:mod:`.datasource`) runs the same reader per partition;
 * the output schema is inferred on the driver from the FIRST file's header row
   using the exact reference naming rules (``build_headers``), and is all
@@ -21,8 +24,10 @@ Design (SURVEY.md §3.3 "Spark lifecycle"):
 Scale posture: at 100 TB (= millions of workbooks) the file list rides in
 the pickled task command, which PySpark broadcasts once it exceeds 1 MiB;
 schema inference touches only one file, and each task's memory is
-bounded by one row + the shared-string table of its own file. No driver-side
-materialization of data ever happens.
+bounded by its in-memory sheet buffer (a part up to the xlsx reader's
+buffer limit, or one split range; larger parts stream one row at a time)
+plus the shared-string table of its own file. Data is never materialized
+outside the tasks.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ import glob
 import itertools
 import os
 from typing import Iterator
+from xml.etree.ElementTree import ParseError
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -38,7 +44,7 @@ from pyspark.sql import types as T
 
 from ..errors import DataToParquetError
 from ..kernels import build_headers
-from .xlsx import XlsxWorkbook
+from .xlsx import ColumnarRows, XlsxWorkbook
 
 __all__ = [
     "read_excel",
@@ -120,12 +126,21 @@ def _sheet_geometry(wb, sheet: str, skip_rows: int):
 
 
 def _dense_batches(
-    rows, start_col: int, num_cols: int, batch_size: int
-) -> Iterator[list[list[str | None]]]:
-    """Sparse rows -> ``batch_size``-row batches of dense rows over the
-    header's column span: absent cell → None (NULL), present-but-empty cell
-    → ``""`` (``src/lib.rs:398`` vs ``:428-433``); cells beyond the header
-    width are dropped (``src/lib.rs:424-425``)."""
+    rows, start_col: int, num_cols: int, batch_size: int, names: list[str]
+) -> Iterator[pa.RecordBatch]:
+    """Sparse rows from a row walker -> ``batch_size``-row Arrow batches of
+    nullable strings named ``names`` over the header's column span: absent
+    cell → NULL, present-but-empty cell → ``""`` (``src/lib.rs:398`` vs
+    ``:428-433``); cells beyond the header width are dropped
+    (``src/lib.rs:424-425``). The columnar tier densifies its rows itself
+    (``ColumnarRows.batches``) under the same rules."""
+
+    def batch(dense_rows: list[list[str | None]]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [pa.array(col, type=pa.string()) for col in zip(*dense_rows)],
+            names=names,
+        )
+
     end_col = start_col + num_cols
     buf: list[list[str | None]] = []
     for _, cells in rows:
@@ -135,10 +150,10 @@ def _dense_batches(
                 dense[col - start_col] = s
         buf.append(dense)
         if len(buf) >= batch_size:
-            yield buf
+            yield batch(buf)
             buf = []
     if buf:
-        yield buf
+        yield batch(buf)
 
 
 def scan_sheet(
@@ -147,8 +162,9 @@ def scan_sheet(
     skip_rows: int = 0,
     batch_size: int = DEFAULT_BATCH_SIZE,
     span: tuple[int, int, int] | None = None,
-) -> tuple[list[str], Iterator[list[list[str | None]]]]:
-    """Stream one sheet: returns (headers, iterator of row-batches).
+) -> tuple[list[str], Iterator[pa.RecordBatch]]:
+    """Stream one sheet: returns (headers, iterator of Arrow batches of
+    nullable strings named by the :func:`uniquify`-ed headers).
 
     Reproduces the reference's scan semantics end to end:
 
@@ -156,8 +172,10 @@ def scan_sheet(
       (``src/lib.rs:162,206-223``);
     * the header row is stringified and run through ``build_headers``
       (``src/lib.rs:441-465``);
-    * data rows are densified by :func:`_dense_batches` into batches of
-      ``batch_size`` rows (``src/main.rs:31-32``).
+    * data rows are densified into batches of ``batch_size`` rows
+      (``src/main.rs:31-32``): by the columnar tier when it proves the
+      sheet buffer (``ColumnarRows.batches``), else by
+      :func:`_dense_batches` from the row walkers.
 
     ``span`` restricts an .xlsx scan to one byte range of the sheet part
     (see ``XlsxWorkbook.iter_rows_str``); a range past the header row
@@ -165,28 +183,31 @@ def scan_sheet(
     """
     start_col, num_cols, header_row_idx = _sheet_geometry(wb, sheet, skip_rows)
 
-    rows = wb.iter_rows_str(sheet, span) if span else wb.iter_rows_str(sheet)
+    rows = wb.sheet_rows(sheet, span)
+    columnar = isinstance(rows, ColumnarRows)
+    # a columnar sheet walks its row indices; "cells" is the row's position
+    stream = zip(map(int, rows.row_index), itertools.count()) if columnar else rows
 
     # --- header phase -----------------------------------------------------
-    header_cells: dict[int, str] = {}
-    first_row: int | None = None
-    pending: list[tuple[int, list[tuple[int, str]]]] = []
-    for row, cells in rows:
-        if first_row is None:
-            first_row = row
-            if header_row_idx is None:
-                header_row_idx = first_row + skip_rows
+    header = pending = None
+    for row, cells in stream:
+        if header_row_idx is None:
+            header_row_idx = row + skip_rows
         if row < header_row_idx:
             continue  # leading-row discard (O5)
         if row == header_row_idx:
-            header_cells = dict(cells)
+            header = cells
             continue
-        pending.append((row, cells))
+        pending = (row, cells)
         break
 
     if header_row_idx is None:  # empty sheet
         return [], iter(())
 
+    if header is None:
+        header_cells: dict[int, str] = {}
+    else:
+        header_cells = dict(rows.cells(header) if columnar else header)
     if start_col is None:
         # no dimension element: infer span from the header row extent
         if not header_cells:
@@ -195,8 +216,12 @@ def scan_sheet(
         num_cols = max(header_cells) - start_col + 1
 
     headers = build_headers(header_cells, num_cols, start_col)
-    rows = itertools.chain(pending, rows)
-    return headers, _dense_batches(rows, start_col, num_cols, batch_size)
+    names = uniquify(headers)
+    if columnar:
+        first = len(rows) if pending is None else pending[1]
+        return headers, rows.batches(first, start_col, num_cols, batch_size, names)
+    data = itertools.chain([pending] if pending else [], rows)
+    return headers, _dense_batches(data, start_col, num_cols, batch_size, names)
 
 
 def infer_schema(
@@ -230,20 +255,31 @@ def read_workbook(
     ``names`` (same-position columns must not be silently remapped); a
     byte-range read skips the check, which the split planner made once on
     the driver.
+
+    A sheet part that is not well-formed XML (a truncated one among them)
+    raises ``DataToParquetError`` naming the file and the sheet.
     """
     with open_workbook(path) as wb:
         sheet = wb.resolve_sheet(sheet_name, sheet_index)
-        headers, batches = scan_sheet(wb, sheet, skip_rows, batch_size, span)
-        if span is None and uniquify(headers) != names:
+        try:
+            headers, batches = scan_sheet(wb, sheet, skip_rows, batch_size, span)
+            rename = uniquify(headers) != names
+            if span is None and rename:
+                raise DataToParquetError(
+                    f"{path!r}: header row {headers} does not match the "
+                    f"schema {names}"
+                )
+            for batch in batches:
+                # a byte range's placeholder headers take the schema's names
+                yield (
+                    pa.RecordBatch.from_arrays(batch.columns, names=names)
+                    if rename
+                    else batch
+                )
+        except ParseError as e:
             raise DataToParquetError(
-                f"{path!r}: header row {headers} does not match the "
-                f"schema {names}"
-            )
-        for batch in batches:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(col, type=pa.string()) for col in zip(*batch)],
-                names=names,
-            )
+                f"{path!r}: sheet {sheet!r} is not well-formed: {e}"
+            ) from e
 
 
 def read_excel(

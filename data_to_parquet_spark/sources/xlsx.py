@@ -8,13 +8,20 @@ present but valueless cells are emitted as Empty (→ ``""`` downstream, while
 absent cells densify to NULL — the reference's critical null-vs-empty-string
 distinction, ``src/lib.rs:398`` vs ``:428-433``).
 
-Decoder tiers. :func:`walk_buffer` picks one per in-memory buffer: the
-find-based walker when :func:`_fast_path_eligible` proves its
-preconditions, else the ElementTree walker. Inside the find-based walker
-each row first tries the strict single-regex tokenizer and falls back to
-the generic find-based cell split. All three tiers hand every ``<v>``
-text to the one ``t=`` decoder, :func:`decode_value`, and must emit the
-ElementTree walker's stream exactly (the differential tests pin this).
+Decoder tiers. :func:`walk_buffer` picks one per in-memory buffer. When
+:func:`_fast_path_eligible` proves its preconditions, a scan first tries
+the columnar tier (:func:`decode_columnar`): ``pyarrow.compute`` splits
+the rows and cells of machine-written sheets, matches every cell against
+three shapes and densifies straight into Arrow columns; a row holding any
+other cell is decoded by the find-based cell split (:func:`_decode_cells`)
+and the other rows stay columnar. A buffer whose row structure the
+columnar tier cannot prove, or whose first rows mostly fall back
+(Excel-written sheets), goes to the find-based row walker; a buffer that
+fails the preconditions goes to the ElementTree walker. Every tier hands
+the ``<v>`` texts it does not pass through to the one ``t=`` decoder,
+:func:`decode_value`, and must give the ElementTree walker's cells
+exactly (the differential tests pin this). A truncated part raises
+``ParseError`` in every tier: no tier returns fewer rows quietly.
 
 Memory bound: sheet parts up to ``_FAST_BUFFER_LIMIT`` are inflated into
 one buffer, so per-task memory is O(min(sheet, limit) + sst). Larger parts
@@ -26,11 +33,17 @@ of the part, O(sheet / tasks + sst).
 
 from __future__ import annotations
 
+import functools
 import io
+import itertools
 import re
 import zipfile
 from typing import Iterator
 from xml.etree import ElementTree as ET
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..errors import DataToParquetError
 from ..kernels import _ERROR_TOKENS as _XLSX_ERR_TOKENS
@@ -195,49 +208,6 @@ def _unescape(s: str) -> str:
     return s
 
 
-#: Strict single-pass cell tokenizer for the three machine-written cell
-#: shapes (r15 optimization): self-closing, ``<v>`` scalar without XML
-#: escapes, and single-run ``<t xml:space="preserve">`` inline string
-#: without escapes. A row parses on this tier ONLY when consecutive
-#: matches tile its entire body (checked below) — any other attribute,
-#: attribute order, escape, or element form leaves a gap and the row
-#: falls back to the generic find-based decoder, so this tier can never
-#: be silently wrong: per cell it either proves one of the three shapes
-#: or defers.
-_STRICT_CELL_RE = re.compile(
-    r'<c r="([A-Z]{1,3})\d*"(?: t="([a-zA-Z]+)")?'
-    r'(?:/>'
-    r"|><v>([^<&]*)</v></c>"
-    r'|><is><t xml:space="preserve">([^<&]*)</t></is></c>)'
-)
-
-
-def _decode_strict_cells(
-    body: str, sst: list[str]
-) -> list[tuple[int, str]] | None:
-    """Decode a ``<row>`` body via :data:`_STRICT_CELL_RE`; None when the
-    matches do not tile the body exactly (caller falls back)."""
-    out: list[tuple[int, str]] = []
-    pos = 0
-    for m in _STRICT_CELL_RE.finditer(body):
-        if m.start() != pos:
-            return None
-        pos = m.end()
-        letters, t, v, istext = m.groups()
-        acc = 0
-        for ch in letters:
-            acc = acc * 26 + (ord(ch) - 64)
-        if istext is not None:
-            out.append((acc - 1, istext))
-        elif not v:  # self-closing or empty <v> → present-but-empty
-            out.append((acc - 1, ""))
-        else:
-            out.append((acc - 1, decode_value(t, v, sst)))
-    if pos != len(body):
-        return None
-    return out
-
-
 def _decode_cells(body: str, sst: list[str]) -> list[tuple[int, str]]:
     """Generic find-based decode of a ``<row>`` body: splitting on ``<c``
     start tags isolates cells, because inside ``<row>`` the schema-valid
@@ -293,11 +263,17 @@ def _decode_cells(body: str, sst: list[str]) -> list[tuple[int, str]]:
     return out
 
 
+def _truncated(what: str) -> ET.ParseError:
+    return ET.ParseError(f"{what}: the sheet part is truncated")
+
+
 def walk_rows_fast(data: bytes, sst: list[str]):
     """Find-based row walker over a whole in-memory worksheet document.
     Same contract as :func:`walk_rows`; only called when
     ``_fast_path_eligible`` proved the preconditions. Returns None
-    (pre-iteration) if decoding fails."""
+    (pre-iteration) if decoding fails; raises ``ParseError`` on a row
+    without its ``>`` or ``</row>`` and on a document without
+    ``</sheetData>``."""
     try:
         text = data.decode("utf-8")
     except UnicodeDecodeError:
@@ -310,6 +286,8 @@ def walk_rows_fast(data: bytes, sst: list[str]):
         while True:
             i = text.find("<row", pos)
             if i < 0:
+                if text.rfind("</sheetData>") < 0 and "<sheetData/>" not in text:
+                    raise _truncated("no </sheetData>")
                 return
             tail = i + 4
             if tail < n and text[tail] not in _ROW_TAIL:
@@ -317,7 +295,7 @@ def walk_rows_fast(data: bytes, sst: list[str]):
                 continue
             j = text.find(">", i)
             if j < 0:
-                return
+                raise _truncated(f"row at offset {i} has no '>'")
             m = _ROW_R_RE.search(text[i:j])
             row_counter = int(m.group(1)) - 1 if m else row_counter + 1
             if text[j - 1] == "/":  # self-closing: physically-present, empty
@@ -326,22 +304,242 @@ def walk_rows_fast(data: bytes, sst: list[str]):
                 continue
             k = text.find("</row>", j)
             if k < 0:
-                return
-            body = text[j + 1 : k]
-            cells = _decode_strict_cells(body, sst)
-            if cells is None:
-                cells = _decode_cells(body, sst)
-            yield row_counter, cells
+                raise _truncated(f"row at offset {i} has no </row>")
+            yield row_counter, _decode_cells(text[j + 1 : k], sst)
             pos = k + 6
 
     return rows()
 
 
-def walk_buffer(data: bytes, sst: list[str]):
-    """The tier choice for one in-memory worksheet document: the find-based
-    walker when the buffer proves its preconditions, else ElementTree."""
-    rows = walk_rows_fast(data, sst) if _fast_path_eligible(data) else None
-    return rows if rows is not None else walk_rows(io.BytesIO(data), sst)
+# --- columnar tier -----------------------------------------------------------
+# Machine-written sheets (this repo's writers and most export libraries)
+# use three cell shapes. For a buffer of such rows pyarrow.compute does the
+# per-cell work: split the rows on </row> and each row on "<c ", match
+# every cell piece against the shapes with one anchored RE2 pattern, and
+# densify with numpy positions plus take. Python only decodes what the
+# vectorized rules do not pass through: t="s"/t="e" cells, non-canonical
+# numbers and the rows holding any other cell shape.
+
+#: a cell piece after "<c ": self-closing, a ``<v>`` scalar without XML
+#: escapes, or a single-run ``xml:space="preserve"`` inline string without
+#: escapes; ``r=`` first and an optional ``t=`` second
+_CELL_SHAPES = (
+    r'^r="(?P<col>[A-Z]{1,3})[0-9]*"(?: t="(?P<t>[a-zA-Z]+)")?'
+    r"(?:/>|><v>(?P<v>[^<&]*)</v></c>"
+    r'|><is><t xml:space="preserve">(?P<s>[^<&]*)</t></is></c>)$'
+)
+#: a row's text before its first "<c ": the start tag and nothing else
+_ROW_HEAD = r'^<row r="[0-9]+"[^>]*>$'
+_ROW_INDEX = r'^<row r="(?P<r>[0-9]{1,9})"'
+# <v> texts decode_value returns unchanged: i64 ints of up to 18 digits
+# without leading zeros (and not "-0"), and decimals of at most 15 digits
+# without trailing zeros — at most 15 significant digits make such a
+# decimal the shortest round-trip form of its double, which format_float
+# prints positionally
+_CANONICAL_INT = r"^(?:0|-?[1-9][0-9]{0,17})$"
+_CANONICAL_DEC = r"^-?(?:0|[1-9][0-9]*)\.[0-9]*[1-9]$"
+_NUMERIC_T = pa.array(["", "n"])
+_DECODED_T = pa.array(["s", "e"])
+_FALSE = pa.array(["0", "false", "FALSE"])
+# a buffer's first rows (up to the first </row> past this many bytes)
+# probe it: more than this share of rows outside the shapes declines it
+_PROBE_BYTES = 64 * 1024
+_DECLINE_SHARE = 0.5
+# rows decoded per step; a multiple of the batch size is used
+_STEP_ROWS = 4096
+
+
+@functools.cache
+def _column_letters() -> pa.Array:
+    """``A`` … ``ZZZ`` in column order: entry ``i`` names column ``i``."""
+    letters = [chr(65 + i) for i in range(26)]
+    return pa.array(
+        ["".join(p) for n in (1, 2, 3) for p in itertools.product(letters, repeat=n)]
+    )
+
+
+class ColumnarRows:
+    """The rows of one worksheet buffer whose structure the columnar tier
+    proved: ``rows`` holds each row's text up to its ``</row>`` and
+    ``row_index`` each row's 0-based ``r=``. Cells decode lazily, a slice
+    of rows at a time."""
+
+    def __init__(self, rows: pa.StringArray, row_index: np.ndarray, sst: list[str]):
+        self.rows = rows
+        self.row_index = row_index
+        self.sst = sst
+
+    def __len__(self) -> int:
+        return len(self.rows)
+
+    def _decode(self, lo: int, hi: int):
+        """Cells of rows ``lo:hi`` as ``(row, col, values, n_fallback)``:
+        numpy row positions (relative to ``lo``) and 0-based columns, an
+        Arrow string array of cell values, each (row, col) at most once, and
+        the number of rows :func:`_decode_cells` decoded."""
+        split = pc.split_pattern(self.rows.slice(lo, hi - lo), "<c ")
+        pieces = split.flatten()
+        heads = np.asarray(split.offsets)[:-1]
+        parent = np.asarray(pc.list_parent_indices(split))
+        cells = pc.extract_regex(pieces, _CELL_SHAPES)
+        shaped = np.asarray(cells.is_valid())
+        letters, t, v, s = cells.flatten()
+        col = np.asarray(
+            pc.fill_null(pc.index_in(letters, _column_letters()), -1)
+        ).astype(np.int64)
+        # a row falls back when a cell piece has another shape, text follows
+        # its start tag, or its columns do not strictly increase
+        fallback = np.zeros(hi - lo, bool)
+        odd = ~shaped
+        odd[heads] = False
+        fallback[parent[odd]] = True
+        head_ok = pc.match_substring_regex(pieces.take(pa.array(heads)), _ROW_HEAD)
+        fallback[~np.asarray(head_ok)] = True
+        unordered = (parent[1:] == parent[:-1]) & (col[1:] <= col[:-1])
+        fallback[parent[1:][unordered]] = True
+
+        keep = shaped & ~fallback[parent]
+        kept = pa.array(keep)
+        t, v, s = t.filter(kept), v.filter(kept), s.filter(kept)
+        has_v = pc.not_equal(v, "")
+        canonical = pc.or_(
+            pc.match_substring_regex(v, _CANONICAL_INT),
+            pc.and_(
+                pc.match_substring_regex(v, _CANONICAL_DEC),
+                pc.less_equal(pc.binary_length(pc.utf8_ltrim(v, "-")), 16),
+            ),
+        )
+        python = pc.and_(
+            has_v,
+            pc.or_(
+                pc.is_in(t, _DECODED_T),
+                pc.and_(pc.is_in(t, _NUMERIC_T), pc.invert(canonical)),
+            ),
+        )
+        values = pc.if_else(
+            pc.and_(has_v, pc.equal(t, "b")),
+            pc.if_else(pc.is_in(v, _FALSE), "false", "true"),
+            pc.binary_join_element_wise(v, s, ""),
+        )
+        if pc.any(python).as_py():
+            pairs = zip(t.filter(python).to_pylist(), v.filter(python).to_pylist())
+            decoded = [decode_value(tt or None, vv, self.sst) for tt, vv in pairs]
+            values = pc.replace_with_mask(
+                values, python, pa.array(decoded, pa.string())
+            )
+
+        rows, cols = parent[keep], col[keep]
+        fallback_rows = np.flatnonzero(fallback)
+        if len(fallback_rows):
+            extra: dict[tuple[int, int], str] = {}
+            for i in fallback_rows.tolist():
+                text = self.rows[lo + i].as_py()
+                body = text[text.index(">") + 1 :]
+                for c, value in _decode_cells(body, self.sst):
+                    extra[i, c] = value  # a repeated column: the last wins
+            rows = np.concatenate([rows, [i for i, _ in extra]]).astype(np.int64)
+            cols = np.concatenate([cols, [c for _, c in extra]]).astype(np.int64)
+            values = pa.concat_arrays(
+                [values, pa.array(list(extra.values()), pa.string())]
+            )
+        return rows, cols, values, len(fallback_rows)
+
+    def cells(self, i: int) -> list[tuple[int, str]]:
+        """Row ``i``'s ``(col, value)`` cells, as the row walkers give them."""
+        _, cols, values, _ = self._decode(i, i + 1)
+        return list(zip(cols.tolist(), values.to_pylist()))
+
+    def batches(
+        self,
+        first: int,
+        start_col: int,
+        num_cols: int,
+        batch_size: int,
+        names: list[str],
+    ) -> Iterator[pa.RecordBatch]:
+        """Rows ``first:`` as ``batch_size``-row batches of nullable strings
+        named ``names`` over columns ``start_col:start_col + num_cols``: an
+        absent cell is NULL, a present-but-empty one ``""``, and cells outside
+        the span are dropped."""
+        step = batch_size * -(-_STEP_ROWS // batch_size)
+        for lo in range(first, len(self), step):
+            hi = min(lo + step, len(self))
+            rows, cols, values, _ = self._decode(lo, hi)
+            rel = cols - start_col
+            inside = (rel >= 0) & (rel < num_cols)
+            take = np.full((num_cols, hi - lo), -1, np.int64)
+            take[rel[inside], rows[inside]] = np.flatnonzero(inside)
+            chunk = pa.RecordBatch.from_arrays(
+                [values.take(pa.array(ix, mask=ix < 0)) for ix in take], names=names
+            )
+            for off in range(0, hi - lo, batch_size):
+                yield chunk.slice(off, batch_size)
+
+
+def _prove_rows(
+    data: bytes, a: int, b: int, sst: list[str]
+) -> ColumnarRows | None:
+    """The rows of ``data[a:b]`` (bytes between ``<sheetData>`` and
+    ``</sheetData>``) when they are UTF-8 ``<row r="N" …>…</row>``
+    elements back to back: nothing between rows, no self-closing row and
+    no row without a leading ``r=``. None otherwise."""
+    if b - a >= 2**31:
+        return None
+    text = pa.StringArray.from_buffers(
+        1,
+        pa.py_buffer(np.array([0, b - a], np.int32)),
+        pa.py_buffer(memoryview(data)[a:b]),
+    )
+    try:
+        text.validate(full=True)
+    except pa.ArrowInvalid:
+        return None
+    pieces = pc.split_pattern(text, "</row>").flatten()
+    if pieces[-1].as_py() != "":
+        return None
+    rows = pieces.slice(0, len(pieces) - 1)
+    index = pc.extract_regex(rows, _ROW_INDEX).flatten()[0]
+    # every row starts with "<row"; one more anywhere is a row inside a row
+    if index.null_count or data.count(b"<row", a, b) != len(rows):
+        return None
+    return ColumnarRows(rows, np.asarray(pc.cast(index, pa.int64())) - 1, sst)
+
+
+def decode_columnar(data: bytes, sst: list[str]) -> ColumnarRows | None:
+    """The columnar tier for one in-memory worksheet document that
+    :func:`_fast_path_eligible` accepted. None when :func:`_prove_rows`
+    cannot prove the row structure, or when more than half of the rows
+    in the first ``_PROBE_BYTES`` fall back (an Excel-written sheet, whose
+    styled, formula and escaped cells the shapes never accept, declines
+    after that probe). Raises ``ParseError`` for a document without
+    ``</sheetData>``."""
+    a = data.find(b"<sheetData>")
+    if a < 0:
+        return None
+    a += len(b"<sheetData>")
+    b = data.find(b"</sheetData>", a)
+    if b < 0:
+        raise _truncated("no </sheetData>")
+    cut = data.find(b"</row>", min(a + _PROBE_BYTES, b), b)
+    cut = b if cut < 0 else cut + len(b"</row>")
+    probe = _prove_rows(data, a, cut, sst)
+    if probe is None or probe._decode(0, len(probe))[3] > _DECLINE_SHARE * len(probe):
+        return None
+    return probe if cut == b else _prove_rows(data, a, b, sst)
+
+
+def walk_buffer(data: bytes, sst: list[str], columnar: bool = False):
+    """The tier choice for one in-memory worksheet document: when the
+    buffer proves the find-based preconditions, the columnar tier (with
+    ``columnar``; a :class:`ColumnarRows`) or else the find-based walker;
+    otherwise ElementTree."""
+    if _fast_path_eligible(data):
+        rows = decode_columnar(data, sst) if columnar else None
+        if rows is None:
+            rows = walk_rows_fast(data, sst)
+        if rows is not None:
+            return rows
+    return walk_rows(io.BytesIO(data), sst)
 
 
 def parse_cell_ref(ref: str) -> tuple[int, int]:
@@ -409,6 +607,11 @@ class Workbook:
 
     def _member(self, sheet: str) -> str:
         return dict(self._sheet_targets)[sheet]
+
+    def sheet_rows(self, sheet: str, span: tuple[int, int, int] | None = None):
+        """The rows a scan decodes; the .xlsx reader may return them
+        columnar."""
+        return self.iter_rows_str(sheet)
 
     def close(self) -> None:
         self._zip.close()
@@ -478,12 +681,48 @@ class XlsxWorkbook(Workbook):
                     return None  # no dimension element before data
         return None
 
+    def _sheet_doc(
+        self, sheet: str, span: tuple[int, int, int] | None
+    ) -> bytes | None:
+        """The in-memory worksheet document a scan decodes: one split range
+        behind the part's own head (see :meth:`iter_rows_str`), or the whole
+        part up to ``_FAST_BUFFER_LIMIT``; None for a larger part, which
+        streams. Raises ``ParseError`` when the last range reaches the end
+        of the part without ``</sheetData>``."""
+        member = self._member(sheet)
+        if span is None and self._zip.getinfo(member).file_size > _FAST_BUFFER_LIMIT:
+            return None
+        with self._zip.open(member) as f:
+            if span is None:
+                return f.read()
+            head, lo, hi = span
+            prolog = f.read(head)
+            f.seek(lo)  # forward seek inflates and discards
+            buf = bytearray(f.read(hi - lo + len(_ROW_R) - 1))
+            # a match ends inside buf, so it starts before hi
+            start = 0 if lo == head else buf.find(_ROW_R)
+            if start < 0:
+                start = end = 0
+            else:
+                pos = hi - lo
+                while (m := _RANGE_END_RE.search(buf, pos)) is None:
+                    more = f.read(_READ_ON_BYTES)
+                    if not more:
+                        break
+                    pos = max(pos, len(buf) - len(b"</sheetData>") + 1)
+                    buf += more
+                end = m.start() if m else buf.find(b"</sheetData>", start)
+                if end < 0:
+                    raise _truncated("no </sheetData>")
+        rows = memoryview(buf)[start:end]
+        return b"".join((prolog, rows, b"</sheetData></worksheet>"))
+
     def iter_rows_str(
         self, sheet: str, span: tuple[int, int, int] | None = None
     ) -> Iterator[tuple[int, list[tuple[int, str]]]]:
         """Yields (row_idx, [(col, normalized_string), ...]) for each
         physically-present row, cells already normalized per the reference
-        stringify rules (``src/lib.rs:387-400``).
+        stringify rules (``src/lib.rs:387-400``), from the row walkers.
 
         ``span = (head, lo, hi)`` is one nominal byte range of the inflated
         part (the split path's task unit). The task aligns it itself: it
@@ -499,32 +738,21 @@ class XlsxWorkbook(Workbook):
         part.
         """
         sst = self._shared_strings()
-        member = self._member(sheet)
-        with self._zip.open(member) as f:
-            if span is not None:
-                head, lo, hi = span
-                prolog = f.read(head)
-                f.seek(lo)  # forward seek inflates and discards
-                buf = bytearray(f.read(hi - lo + len(_ROW_R) - 1))
-                # a match ends inside buf, so it starts before hi
-                start = 0 if lo == head else buf.find(_ROW_R)
-                if start < 0:
-                    return
-                pos = hi - lo
-                while (m := _RANGE_END_RE.search(buf, pos)) is None:
-                    more = f.read(_READ_ON_BYTES)
-                    if not more:
-                        break
-                    pos = max(pos, len(buf) - len(b"</sheetData>") + 1)
-                    buf += more
-                end = m.start() if m else buf.find(b"</sheetData>", start)
-                rows = memoryview(buf)[start : end if end >= 0 else len(buf)]
-                doc = b"".join((prolog, rows, b"</sheetData></worksheet>"))
-                yield from walk_buffer(doc, sst)
-            elif self._zip.getinfo(member).file_size <= _FAST_BUFFER_LIMIT:
-                yield from walk_buffer(f.read(), sst)
-            else:
-                yield from walk_rows(f, sst)
+        doc = self._sheet_doc(sheet, span)
+        if doc is not None:
+            yield from walk_buffer(doc, sst)
+            return
+        with self._zip.open(self._member(sheet)) as f:
+            yield from walk_rows(f, sst)
+
+    def sheet_rows(self, sheet: str, span: tuple[int, int, int] | None = None):
+        """The rows a scan decodes: a :class:`ColumnarRows` when the
+        columnar tier proves the buffer, else the row stream of
+        :meth:`iter_rows_str`, from one read of the part."""
+        doc = self._sheet_doc(sheet, span)
+        if doc is None:
+            return self.iter_rows_str(sheet)
+        return walk_buffer(doc, self._shared_strings(), columnar=True)
 
     def first_row_offset(self, sheet: str) -> int | None:
         """Offset of the first ``<row`` in the inflated part, looked for in

@@ -588,6 +588,77 @@ def test_split_ranges_with_r_not_first(tmp_path, monkeypatch):
     assert streamed == [(str(i), f"v{i}") for i in range(3000)]
 
 
+def _read_parts(path, names, spans):
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    return [
+        b
+        for span in spans
+        for b in excel_mod.read_workbook(path, None, None, 0, 1000, names, span)
+    ]
+
+
+def test_machine_sheet_stays_in_the_columnar_tier(tmp_path, monkeypatch):
+    """A machine-written workbook decodes in the columnar tier, whole and
+    as split ranges: no row reaches the find-based decoder or ElementTree
+    (a silent decline would lose the tier's gain), and the rows are the
+    generator's."""
+    import pyarrow as pa
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+    from data_to_parquet_spark.sources import xlsx
+    from perfbench import gen
+
+    path = str(tmp_path / "machine.xlsx")
+    expected = gen.write_machine_xlsx(path, 3000, 5)
+    names = excel_mod.infer_schema(path).fieldNames()
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    spans = excel_mod._split_spans(4, path, None, None, 0, None)
+    assert spans is not None and len(spans) > 1
+
+    def left_the_tier(*args, **kwargs):
+        raise AssertionError("a row left the columnar tier")
+
+    monkeypatch.setattr(xlsx, "_decode_cells", left_the_tier)
+    monkeypatch.setattr(xlsx, "walk_rows", left_the_tier)
+    for parts in ([None], spans):
+        table = pa.Table.from_batches(_read_parts(path, names, parts))
+        assert [c.to_pylist() for c in table.columns] == expected
+
+
+@pytest.mark.parametrize("split", [False, True], ids=["whole", "split"])
+@pytest.mark.parametrize("cut", ["row_boundary", "mid_row"])
+@pytest.mark.parametrize("shape", ["machine", "excel"])
+def test_truncated_sheet_raises(tmp_path, monkeypatch, shape, cut, split):
+    """A sheet part cut short (and re-zipped with a valid CRC) fails the
+    read with an error naming the file and the sheet, on the whole-buffer
+    path and on the split path; no tier returns the rows before the cut.
+    Machine-written sheets take the columnar tier, Excel-written ones the
+    find-based walker."""
+    from data_to_parquet_spark.sources import excel as excel_mod
+    from perfbench import gen
+
+    path = str(tmp_path / "cut.xlsx")
+    write = gen.write_machine_xlsx if shape == "machine" else (
+        lambda p, n, seed: gen.write_excel_xlsx(p, n, seed, comment=False)
+    )
+    write(path, 3000, 9)
+    names = excel_mod.infer_schema(path).fieldNames()
+
+    def truncate(xml):
+        at = xml.index('<row r="2500">')
+        return xml[: at if cut == "row_boundary" else at + 40]
+
+    _rewrite_sheet(path, truncate)
+    spans = [None]
+    if split:
+        monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+        spans = excel_mod._split_spans(4, path, None, None, 0, None)
+        assert spans is not None and len(spans) > 1
+    with pytest.raises(DataToParquetError, match="'Data'.*truncated"):
+        _read_parts(path, names, spans)
+
+
 def test_read_excel_runs_one_python_stage(spark, tmp_path, monkeypatch):
     """A split read and a multi-file read each run ONE Python stage (no
     task-list scan feeding it) with one task per range or file."""
@@ -664,15 +735,17 @@ def test_mismatched_multi_file_headers_rejected(spark, tmp_path):
 
 def test_fast_and_et_walkers_agree(tmp_path):
     """Every decoder tier must emit the ElementTree walker's stream exactly
-    (the fast tiers are only ever an optimization): the find-based walker
-    with its strict per-row tier, and with the strict tier refusing every
-    row, on machine-written and Excel-written cell forms."""
+    (the fast tiers are only ever an optimization): the find-based walker,
+    and the columnar tier with no share of fallback rows declining it, on
+    machine-written and Excel-written cell forms."""
     import io
     from unittest import mock
 
+    from data_to_parquet_spark.sources import xlsx
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
         _fast_path_eligible,
+        decode_columnar,
         walk_rows,
         walk_rows_fast,
     )
@@ -703,13 +776,14 @@ def test_fast_and_et_walkers_agree(tmp_path):
         sst = wb._shared_strings()
         assert _fast_path_eligible(data)
         fast = list(walk_rows_fast(data, sst))
-        with mock.patch(
-            "data_to_parquet_spark.sources.xlsx._decode_strict_cells",
-            return_value=None,
-        ):
-            find_only = list(walk_rows_fast(data, sst))
+        with mock.patch.object(xlsx, "_DECLINE_SHARE", 1.0):
+            columnar = decode_columnar(data, sst)
         et = list(walk_rows(io.BytesIO(data), sst))
-    assert fast == find_only == et
+    assert fast == et
+    assert [
+        (int(r), columnar.cells(i)) for i, r in enumerate(columnar.row_index)
+    ] == et
+    assert columnar._decode(0, len(columnar))[3] == 4  # rows 1, 5, 6, 7
     assert len(fast) == 8
     assert et[5][1] == [(0, "45292.5"), (1, "6"), (2, "a&b <c>"),
                         (3, "bold & plain <x>")]

@@ -30,6 +30,11 @@ _grid = st.lists(
 )
 
 
+def _batch_rows(batches) -> list[list[str | None]]:
+    """Arrow batches -> dense rows (lists of nullable strings)."""
+    return [list(r.values()) for b in batches for r in b.to_pylist()]
+
+
 def _model_cell_to_string(spec) -> str:
     """Executable model of the stringify rules (src/lib.rs:387-400)."""
     if isinstance(spec, tuple):
@@ -91,7 +96,7 @@ def test_scan_matches_model(grid, skip, tmp_path_factory):
     write_xlsx(path, {"S": grid})
     with open_workbook(path) as wb:
         headers, batches = scan_sheet(wb, "S", skip_rows=skip)
-        rows = [row for b in batches for row in b]
+        rows = _batch_rows(batches)
     if model is None:
         assert headers == [] or rows == []
         return
@@ -130,7 +135,7 @@ def test_xlsb_scan_matches_model(grid, skip, tmp_path_factory):
     write_xlsb(path, {"S": grid})
     with open_workbook(path) as wb:
         headers, batches = scan_sheet(wb, "S", skip_rows=skip)
-        rows = [row for b in batches for row in b]
+        rows = _batch_rows(batches)
     if model is None:
         assert headers == [] or rows == []
         return
@@ -160,17 +165,21 @@ _walker_grid = st.lists(
 @settings(max_examples=40, deadline=None)
 @given(grid=_walker_grid)
 def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
-    """Differential fuzz: the find-based fast walker (with its strict
-    per-row tier, and with that tier refusing every row) and the
-    ElementTree walker must emit identical (row, cells) streams for any
-    fixture the writer can produce (sparse cells, unicode, entities,
-    floats, bools, styled numbers, formulas, rich text)."""
+    """Differential fuzz: the find-based fast walker and the ElementTree
+    walker must emit identical (row, cells) streams for any fixture the
+    writer can produce (sparse cells, unicode, entities, floats, bools,
+    styled numbers, formulas, rich text); the columnar tier, with no share
+    of fallback rows declining it, must give the same cells row by row and
+    the same Arrow batches as those rows densified by ``_dense_batches``."""
     import io
     from unittest import mock
 
+    from data_to_parquet_spark.sources import xlsx
+    from data_to_parquet_spark.sources.excel import _dense_batches
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
         _fast_path_eligible,
+        decode_columnar,
         walk_rows,
         walk_rows_fast,
     )
@@ -185,10 +194,17 @@ def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
         sst = wb._shared_strings()
         assert _fast_path_eligible(data)
         fast = list(walk_rows_fast(data, sst))
-        with mock.patch(
-            "data_to_parquet_spark.sources.xlsx._decode_strict_cells",
-            return_value=None,
-        ):
-            find_only = list(walk_rows_fast(data, sst))
         et = list(walk_rows(io.BytesIO(data), sst))
-    assert fast == find_only == et
+        with mock.patch.object(xlsx, "_DECLINE_SHARE", 1.0):
+            columnar = decode_columnar(data, sst)
+    assert fast == et
+    assert columnar is not None
+    assert [
+        (int(r), columnar.cells(i)) for i, r in enumerate(columnar.row_index)
+    ] == et
+    width = max(len(row) for row in grid)
+    names = [f"c{i}" for i in range(width)]
+    got = list(columnar.batches(0, 0, width, 3, names))
+    want = list(_dense_batches(iter(et), 0, width, 3, names))
+    assert [len(b) for b in got] == [len(b) for b in want]
+    assert _batch_rows(got) == _batch_rows(want)

@@ -1,20 +1,63 @@
-"""The r15 strict cell tokenizer (_STRICT_CELL_RE tier inside
-walk_rows_fast) must decode exactly like the generic find-based decoder
-on the three machine-written shapes, and must REFUSE (return None →
-per-row fallback) any body its matches do not tile completely — that
-refusal is what makes the tier safe on escapes, style attributes,
-attribute reorderings and multi-run inline strings.
+"""The columnar tier (``decode_columnar``) must decode exactly like the row
+walkers. On the three machine-written cell shapes it decodes a row itself:
+numbers and booleans by vectorized rules, which these tests pin against
+``decode_value``. Any row holding another shape falls back to
+``_decode_cells`` and must give that decoder's output, while the other
+rows of the buffer stay columnar.
 """
 
 from __future__ import annotations
 
-from data_to_parquet_spark.sources.xlsx import _decode_strict_cells
+from unittest import mock
+from xml.etree.ElementTree import ParseError
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from data_to_parquet_spark.sources import xlsx
+from data_to_parquet_spark.sources.xlsx import (
+    _decode_cells,
+    decode_columnar,
+    decode_value,
+)
 
 SST = ["alpha", "beta"]
+# machine-shaped rows after the row under test keep one refused row below
+# the share of fallback rows that declines a whole buffer
+_FILLER = "".join(
+    f'<row r="{r}"><c r="A{r}"><v>{r}</v></c></row>' for r in range(2, 6)
+)
+
+
+def _rows(body: str):
+    doc = (
+        '<?xml version="1.0" encoding="UTF-8"?><worksheet xmlns="'
+        f'{xlsx._MAIN_NS_URI}"><sheetData><row r="1">{body}</row>{_FILLER}'
+        "</sheetData></worksheet>"
+    ).encode()
+    rows = decode_columnar(doc, SST)
+    assert rows is not None
+    return rows
+
+
+def fallback_rows(body: str) -> int:
+    """How many rows of the test buffer ``_decode_cells`` decoded."""
+    rows = _rows(body)
+    return rows._decode(0, len(rows))[3]
 
 
 def dec(body: str):
-    return _decode_strict_cells(body, SST)
+    """The cells of a row decoded by the columnar tier alone."""
+    with mock.patch.object(
+        xlsx, "_decode_cells", side_effect=AssertionError("row fell back")
+    ):
+        return _rows(body).cells(0)
+
+
+def dec_any(body: str):
+    """The cells of a row, falling back where the tier must."""
+    return _rows(body).cells(0)
 
 
 def test_strict_decodes_the_three_shapes():
@@ -40,6 +83,7 @@ def test_strict_decodes_the_three_shapes():
         (7, ""),
         (9, "raw"),  # explicit column gap honored (J skips I)
     ]
+    assert fallback_rows(body) == 0
 
 
 def test_strict_numeric_renormalization_matches_generic():
@@ -59,9 +103,55 @@ def test_strict_numeric_renormalization_matches_generic():
     ]
 
 
+# numeric texts at the edges of the pass-through rules: non-canonical
+# forms, 18/19-digit and i64-bound ints, and decimals of 15-18 digits,
+# some of which are not the shortest form of their double
+_NUMERIC_EDGES = [
+    "-0", "007", "0", "0.0", "1.50", "0.00001", "1e2", "-1E-2", "+5",
+    ".5", "5.", "-.5", "00.5", "0.5", "-0.5", "123.25", "-4096.75",
+    "123456789012345678", "-123456789012345678", "1234567890123456789",
+    "9223372036854775807", "-9223372036854775808", "9223372036854775808",
+    "-9223372036854775809", "99999999999999999999",
+    "1.23456789012345", "0.12345678901234", "0.123456789012345",
+    "1.234567890123456", "1.2345678901234567", "12345678901234.5",
+    "123456789012345.5", "0.00000000000001", "0.000000000000001",
+    "1.0000000000000002", "0.1000000000000000055511151231257827",
+    "0.30000000000000001", "1.00000000000000001", "0.1000000000000001",
+    "NaN", "inf", "-", "1 ", " 1", "١٢",
+]
+
+
+def test_numeric_edges_match_decode_value():
+    for v in _NUMERIC_EDGES:
+        for t in ("", ' t="n"'):
+            body = f'<c r="A1"{t}><v>{v}</v></c>'
+            assert dec(body) == [(0, decode_value(None, v, SST))], body
+    for v in ("0", "1", "false", "FALSE", "False", "true", "2", "-0"):
+        body = f'<c r="A1" t="b"><v>{v}</v></c>'
+        assert dec(body) == [(0, decode_value("b", v, SST))], body
+    # the pass-through rules do pass these through
+    for v in ("0", "-7", "123456789012345678", "0.00001", "-4096.75",
+              "1.23456789012345"):
+        assert decode_value(None, v, SST) == v
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    v=st.from_regex(r"\A-?[0-9]{1,21}(\.[0-9]{0,19})?\Z")
+    | st.from_regex(r"\A[0-9+\-.eE]{1,8}\Z"),
+    t=st.sampled_from(["", "n", "b", "s", "e", "str", "d", "inlineStr"]),
+)
+def test_value_rules_match_decode_value(v, t):
+    attr = f' t="{t}"' if t else ""
+    assert dec(f'<c r="B1"{attr}><v>{v}</v></c>') == [
+        (1, decode_value(t or None, v, SST))
+    ]
+
+
 def test_strict_refuses_anything_else():
     # escapes, style attrs, reordered attrs, multi-run inline strings,
-    # missing r, trailing junk — every one must defer to the generic path
+    # missing r, trailing junk, columns out of order — each such row falls
+    # back to the find-based decoder and gives exactly its cells
     for body in (
         '<c r="A1"><v>1&amp;2</v></c>',
         '<c r="A1" s="3"><v>1</v></c>',
@@ -71,9 +161,47 @@ def test_strict_refuses_anything_else():
         '<c r="A1"><v>1</v></c>junk',
         'junk<c r="A1"><v>1</v></c>',
         '<c r="A1" t="inlineStr"><is><t xml:space="preserve">a&lt;b</t></is></c>',
+        '<c r="B1"><v>1</v></c><c r="A1"><v>2</v></c>',
+        '<c r="A1"><v>1</v></c><c r="B1"><f>A1</f><v>2</v></c>',
     ):
-        assert dec(body) is None, body
+        assert fallback_rows(body) == 1, body
+        assert dec_any(body) == _decode_cells(body, SST), body
+
+
+def test_repeated_column_falls_back_last_wins():
+    body = '<c r="A1"><v>1</v></c><c r="A1"><v>2</v></c>'
+    assert fallback_rows(body) == 1
+    assert dec_any(body) == [(0, "2")]  # as the densifier assigns in order
+
+
+def test_escaped_cell_falls_back_only_its_row():
+    body = (
+        '<c r="A1"><v>1</v></c>'
+        '<c r="B1" t="inlineStr"><is><t xml:space="preserve">x &amp; y</t></is></c>'
+        '<c r="C1"><v>2.5</v></c>'
+    )
+    rows = _rows(body)
+    assert rows._decode(0, len(rows))[3] == 1  # the four filler rows stay
+    assert rows.cells(0) == [(0, "1"), (1, "x & y"), (2, "2.5")]
+    with mock.patch.object(
+        xlsx, "_decode_cells", side_effect=AssertionError("row fell back")
+    ):
+        assert [rows.cells(i) for i in range(1, 5)] == [
+            [(0, str(r))] for r in range(2, 6)
+        ]
 
 
 def test_strict_empty_row_body():
     assert dec("") == []
+
+
+def test_truncated_buffer_raises():
+    """The tier requires ``</sheetData>``: a buffer cut at a row boundary
+    or inside a row raises instead of decoding the rows before the cut."""
+    doc = (
+        '<?xml version="1.0" encoding="UTF-8"?><worksheet xmlns="'
+        f'{xlsx._MAIN_NS_URI}"><sheetData>{_FILLER}'
+    ).encode()
+    for cut in (len(doc), len(doc) - 10):
+        with pytest.raises(ParseError, match="truncated"):
+            decode_columnar(doc[:cut], SST)
