@@ -16,7 +16,9 @@ Scale design notes (the point of each implementation):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructType
 
 from ..functions.exprs import distinct_tokens, exploded_rows, tokens
 from .base import Registry, load_table, session_memo
@@ -513,10 +515,11 @@ SELECT u AS doc_id, MIN(v) AS cluster_id FROM reach GROUP BY u
 @session_memo("documents")
 def _cc_label_table(spark, sf_dir):
     """The (doc_id, cluster_id) label table, session-memoized. The CC
-    fixpoint runs eager jobs at plan-construction time, so without the
-    memo every query that needs the labels re-runs the most expensive
-    computation in the repo; the cached frame is built on
-    localCheckpoint-ed RDDs, so reuse costs nothing."""
+    fixpoint runs eager jobs at plan-construction time (one bounded
+    collect of the pair graph below ``ops.GRAPH_LOCAL_MAX`` edges, a
+    checkpointed round per iteration above it), so the memo keeps every
+    query that needs the labels from re-running it; reusing the cached
+    frame costs nothing."""
     from ..ops import connected_components
 
     pairs = neardup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -533,19 +536,20 @@ def _cc_label_table(spark, sf_dir):
 @DEDUP.register("dedup_connected_components", oracle=_CC_ORACLE)
 def dedup_connected_components(spark, sf_dir):
     """Near-dup clustering: connected components over the Jaccard-0.9 pair
-    graph via iterative min-label propagation (the dedup step that turns
-    pairwise matches into keep/drop decisions).
+    graph via min-label propagation (the dedup step that turns pairwise
+    matches into keep/drop decisions).
 
-    The algorithm — edge-contraction min-label rounds with pointer jumping
-    and an original-edge fixpoint recheck — lives in
-    :func:`..ops.connected_components` (the parametrized library form); this
-    query feeds it the Jaccard-0.9 pair graph and unions back the
-    edge-less documents as their own singleton clusters. At 100 TB the
+    The algorithm lives in :func:`..ops.connected_components` (the
+    parametrized library form); this query feeds it the Jaccard-0.9 pair
+    graph and unions back the edge-less documents as their own singleton
+    clusters. A pair graph of at most ``ops.GRAPH_LOCAL_MAX`` edges is
+    collected once and labelled in numpy (min-label propagation with
+    pointer jumping); a larger one runs edge-contraction rounds whose
     per-round shuffle is O(|current edges|) and shrinks geometrically as
     clusters contract. The label table is computed once per (application,
-    sf_dir) and shared with `dedup_keep_canonical` via a
-    localCheckpoint-backed memo. Oracle: DuckDB recursive-CTE transitive
-    closure.
+    sf_dir) and shared with `dedup_keep_canonical`,
+    `dedup_chain_depth_report` and `neardup_cluster_purity` via a memo.
+    Oracle: DuckDB recursive-CTE transitive closure.
     """
     return _cc_label_table(spark, sf_dir)
 
@@ -1533,15 +1537,17 @@ def neardup_graph_pagerank(spark, sf_dir):
     (`neardup_jaccard_pairs.memo`), so after any dedup query has run, the graph
     build costs nothing.
 
-    Distributed shape per iteration (the classic): contributions =
-    edges ⋈ ranks on src, summed per dst (one shuffle, map-side
-    combined); dangling mass (isolated docs — roughly half this corpus)
-    follows a driver-side closed-form recurrence (undirected graph ⇒ all
-    degree-0 ranks are equal), folded back uniformly so total rank mass
-    stays 1.0 with zero extra jobs. Lineage is truncated with a localCheckpoint per round (the CC
-    precedent at `dedup_connected_components` — without it the 10th
-    iteration's plan contains all nine predecessors). Fixed 10
-    iterations, damping 0.85.
+    Fixed 10 iterations, damping 0.85. Dangling mass (isolated docs —
+    roughly half this corpus) follows a closed-form recurrence
+    (undirected graph ⇒ all degree-0 ranks are equal), folded back
+    uniformly so total rank mass stays 1.0. A pair graph and document set
+    of at most ``ops.GRAPH_LOCAL_MAX`` rows each are collected once and
+    iterated in numpy (``ops.pagerank_local``, the same arithmetic); the
+    (doc_id, deg, rank) result comes back as one frame for the rounding,
+    ordering and limit below. Above the budget each iteration is the
+    distributed classic: contributions = edges ⋈ ranks on src, summed per
+    dst (one shuffle, map-side combined), lineage truncated with a
+    localCheckpoint per round.
 
     Oracle (round-6 upgrade, rows-only -> full value check): the whole
     power iteration re-runs inside DuckDB as a recursive-CTE fold over
@@ -1557,9 +1563,30 @@ def neardup_graph_pagerank(spark, sf_dir):
     ranks against a dense numpy power iteration of the SAME Google
     matrix (atol 1e-9) plus the mass-conservation invariant.
     """
+    from ..ops import collect_bounded, local_frame, pagerank_local
+
     d = load_table(spark, sf_dir, "documents")
-    n_docs = d.count()
     pairs = neardup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    local = collect_bounded(pairs, "doc_a", "doc_b")
+    docs = collect_bounded(d, "doc_id") if local is not None else None
+    ids = docs.column(0).to_numpy() if docs is not None else None
+    if ids is not None and len(np.unique(ids)) == len(ids):
+        deg, rank = pagerank_local(
+            ids,
+            local.column(0).to_numpy(),
+            local.column(1).to_numpy(),
+            _PR_DAMPING,
+            _PR_ITERS,
+        )
+        ranks = local_frame(
+            spark,
+            {"doc_id": ids, "deg": deg, "rank": rank},
+            StructType([d.schema["doc_id"]])
+            .add("deg", LongType(), False)
+            .add("rank", DoubleType(), False),
+        )
+        return _pagerank_top(ranks, len(ids))
+    n_docs = d.count()
     # Size the iteration shuffles from the graph, not the session default:
     # ten iterations each pay (tasks × fixed overhead), so a near-dup
     # graph of ~10⁵ edges wants a handful of partitions (measured 7.3 s →
@@ -1634,11 +1661,17 @@ def neardup_graph_pagerank(spark, sf_dir):
             .localCheckpoint()
         )
         rank_dangling = base + _PR_DAMPING * dangling / n_docs
-    # Order by the ROUNDED rank (9 decimals), not the raw double: nodes in
-    # symmetric graph positions (e.g. both ends of an isolated near-dup
-    # pair) have mathematically equal ranks whose float sums differ only
-    # in trailing ulps that depend on partition reduce order — rounding
-    # collapses those into true ties broken deterministically by doc_id.
+    return _pagerank_top(ranks, n_docs)
+
+
+def _pagerank_top(ranks, n_docs):
+    """The top ``_PR_TOPK`` of a (doc_id, deg, rank) frame by rank × n.
+
+    Order by the ROUNDED rank (9 decimals), not the raw double: nodes in
+    symmetric graph positions (e.g. both ends of an isolated near-dup
+    pair) have mathematically equal ranks whose float sums differ only in
+    trailing ulps that depend on summation order — rounding collapses
+    those into true ties broken deterministically by doc_id."""
     scaled = F.round(F.col("rank") * n_docs, 9).alias("rank_x_n")
     return (
         ranks.select("doc_id", "deg", scaled)
@@ -1936,17 +1969,22 @@ def dedup_chain_depth_report(spark, sf_dir):
     count (singletons included).
 
     Scale: reuses the memoized pair table and CC label table (zero cost
-    after any dedup query), then 6 frontier rounds — each ONE join
-    of the (shrinking) frontier against the edge list plus an anti-join
-    against visited, lineage truncated per round with the lazy
-    localCheckpoint the CC/pagerank loops use; no per-round driver jobs.
-    Multi-source BFS cannot cross clusters (no inter-cluster edges by
+    after any dedup query). A pair graph and seed set of at most
+    ``ops.GRAPH_LOCAL_MAX`` rows each are collected once and the 6-hop
+    BFS runs in numpy (``ops.bfs_levels_local``); the (doc_id, level)
+    result comes back as one frame for the aggregates below. Above the
+    budget, 6 frontier rounds — each ONE join of the (shrinking) frontier
+    against the edge list plus an anti-join against visited, lineage
+    truncated per round with a lazy localCheckpoint; no per-round driver
+    jobs. Multi-source BFS cannot cross clusters (no inter-cluster edges by
     CC's definition), so per-round work is bounded by |edges|. Every
     output is an integer. Oracle: the _CC_ORACLE closure chain extended
     by a level-synchronous recursive BFS whose UNION dedup bounds the
     working set at |docs|x6 rows; MIN(lvl) per doc equals the
     frontier BFS's first-reach level.
     """
+    from ..ops import bfs_levels_local, collect_bounded, local_frame
+
     labels = _cc_label_table(spark, sf_dir)
     pairs = neardup_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
@@ -1956,24 +1994,43 @@ def dedup_chain_depth_report(spark, sf_dir):
                 F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
             )
         )
-        .localCheckpoint(eager=False)
     )
     seeds = labels.filter(F.col("doc_id") == F.col("cluster_id")).select(
         "doc_id"
     )
     visited = seeds.withColumn("level", F.lit(0))
-    frontier = seeds
-    for k in range(1, _CHAIN_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(edges, frontier["doc_id"] == edges["src"])
-            .select(F.col("dst").alias("doc_id"))
-            .distinct()
-            .join(visited.select("doc_id"), "doc_id", "left_anti")
-            .withColumn("level", F.lit(k))
-            .localCheckpoint(eager=False)
+    local = collect_bounded(pairs, "doc_a", "doc_b")
+    roots = collect_bounded(seeds, "doc_id") if local is not None else None
+    if roots is not None:
+        doc_id, level = bfs_levels_local(
+            roots.column(0).to_numpy(),
+            local.column(0).to_numpy(),
+            local.column(1).to_numpy(),
+            _CHAIN_MAX_HOPS,
         )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt.select("doc_id")
+        # the loop's visited schema: seeds at level 0 ∪ edge ends reached
+        reach = edges.select(
+            F.col("dst").alias("doc_id"), F.lit(1).alias("level")
+        )
+        visited = local_frame(
+            spark,
+            {"doc_id": doc_id, "level": level},
+            visited.unionByName(reach).schema,
+        )
+    else:
+        edges = edges.localCheckpoint(eager=False)
+        frontier = seeds
+        for k in range(1, _CHAIN_MAX_HOPS + 1):
+            nxt = (
+                frontier.join(edges, frontier["doc_id"] == edges["src"])
+                .select(F.col("dst").alias("doc_id"))
+                .distinct()
+                .join(visited.select("doc_id"), "doc_id", "left_anti")
+                .withColumn("level", F.lit(k))
+                .localCheckpoint(eager=False)
+            )
+            visited = visited.unionByName(nxt).localCheckpoint(eager=False)
+            frontier = nxt.select("doc_id")
     d = load_table(spark, sf_dir, "documents")
     reached = visited.groupBy("level").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -2480,10 +2480,12 @@ def dbscan_embedding_clusters(spark, sf_dir):
     density regions emerge naturally; noise is first-class.
 
     Scale: candidate edges from the banded LSH self-join (n²/2^K per
-    band, never a cross join), degree/core as one aggregation, the CC
-    fixpoint from `ops.connected_components` (edge contraction +
-    localCheckpoint per round), and two bounded joins for borders. The
-    whole dataflow — including the LSH bucketing — is replayed by the
+    band, never a cross join), then `ops.dbscan_labels`: below
+    ``ops.GRAPH_LOCAL_MAX`` edges and vectors one collect and a numpy
+    labeling (degree, core, components, borders); above it degree/core as
+    one aggregation, the `ops.connected_components` fixpoint (edge
+    contraction + localCheckpoint per round), and two bounded joins for
+    borders. The whole dataflow — including the LSH bucketing — is replayed by the
     DuckDB oracle with a recursive CTE, so the driver value-hashes every
     role and cluster assignment.
     """

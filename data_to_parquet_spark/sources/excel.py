@@ -257,7 +257,8 @@ def read_workbook(
     the driver.
 
     A sheet part that is not well-formed XML (a truncated one among them)
-    raises ``DataToParquetError`` naming the file and the sheet.
+    or an xlsb sheet part cut inside a record raises
+    ``DataToParquetError`` naming the file and the sheet.
     """
     with open_workbook(path) as wb:
         sheet = wb.resolve_sheet(sheet_name, sheet_index)
@@ -276,7 +277,7 @@ def read_workbook(
                     if rename
                     else batch
                 )
-        except ParseError as e:
+        except (ParseError, EOFError) as e:  # EOFError: a cut xlsb record
             raise DataToParquetError(
                 f"{path!r}: sheet {sheet!r} is not well-formed: {e}"
             ) from e

@@ -72,7 +72,8 @@ _BERR = {
 
 
 def read_record_header(f: BinaryIO) -> tuple[int, int] | None:
-    """(record_id, payload_length), or None at EOF."""
+    """(record_id, payload_length), or None at EOF on a record boundary.
+    A truncated header raises ``EOFError``."""
     b = f.read(1)
     if not b:
         return None
@@ -80,13 +81,13 @@ def read_record_header(f: BinaryIO) -> tuple[int, int] | None:
     if b[0] & 0x80:
         b2 = f.read(1)
         if not b2:
-            return None
+            raise EOFError("record header truncated")
         rid |= (b2[0] & 0x7F) << 7
     length = 0
     for shift in range(0, 28, 7):
         lb = f.read(1)
         if not lb:
-            return None
+            raise EOFError(f"header of record 0x{rid:04X} truncated")
         length |= (lb[0] & 0x7F) << shift
         if not lb[0] & 0x80:
             break
@@ -94,6 +95,9 @@ def read_record_header(f: BinaryIO) -> tuple[int, int] | None:
 
 
 def iter_records(f: BinaryIO) -> Iterator[tuple[int, bytes]]:
+    """(record_id, payload) per record up to EOF, which must fall on a
+    record boundary (a part need not close with ``BrtEndSheetData``); a
+    truncated record raises ``EOFError``."""
     while True:
         hdr = read_record_header(f)
         if hdr is None:
@@ -101,7 +105,10 @@ def iter_records(f: BinaryIO) -> Iterator[tuple[int, bytes]]:
         rid, length = hdr
         payload = f.read(length)
         if len(payload) < length:
-            return
+            raise EOFError(
+                f"record 0x{rid:04X} truncated: {len(payload)} of "
+                f"{length} payload bytes"
+            )
         yield rid, payload
 
 

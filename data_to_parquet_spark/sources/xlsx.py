@@ -175,27 +175,83 @@ _FIRST_ROW_RE = re.compile(rb"<sheetData[\s>].*?(<row[\s/>])", re.S)
 _READ_ON_BYTES = 64 * 1024
 
 
+# Markup that keeps a buffer off the fast tiers, keyed by a byte of each
+# token that machine-written sheet XML seldom holds, so memchr (bytes.find
+# of one byte) jumps from hit to hit; ``(token, first allowed offset)``:
+# the XML declaration may open the buffer, no other processing
+# instruction may appear.
+_REFUSED_MARKUP = {
+    b"!": ((b"<![CDATA[", 0), (b"<!--", 0)),
+    b"?": ((b"<?", 1),),
+    b"L": ((b"<extLst", 0),),  # extension lists may nest any element in <c>
+}
+_CHECKED_HITS = 16  # hits checked in place before a plain find takes over
+_MAIN_VALUE = b'="' + _MAIN_NS_URI.encode() + b'"'
+# bytes that may precede "xmlns" inside a prefix declaration's name
+_PREFIX_BYTES = frozenset(
+    b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789_:"
+)
+
+
+def _holds_refused_markup(data: bytes) -> bool:
+    """Whether any ``_REFUSED_MARKUP`` token occurs at or after its first
+    allowed offset."""
+    for rare, tokens in _REFUSED_MARKUP.items():
+        i = data.find(rare)
+        for _ in range(_CHECKED_HITS):
+            if i == -1:
+                break
+            for token, lo in tokens:
+                at = i - token.index(rare)
+                if at >= lo and data.startswith(token, at):
+                    return True
+            i = data.find(rare, i + 1)
+        else:
+            if any(
+                data.find(token, max(i - token.index(rare), lo)) != -1
+                for token, lo in tokens
+            ):
+                return True
+    return False
+
+
+def _may_bind_main_prefix(data: bytes) -> bool:
+    """False when every occurrence of the quoted main-namespace URI is a
+    default declaration (``xmlns="…"``), so no ``xmlns:p="…"`` can bind
+    it."""
+    q = data.find(_MAIN_VALUE)
+    while q != -1:
+        default = (
+            q >= 5
+            and data.startswith(b"xmlns", q - 5)
+            and (q == 5 or data[q - 6] not in _PREFIX_BYTES)
+        )
+        if not default:
+            return True
+        q = data.find(_MAIN_VALUE, q + 1)
+    return False
+
+
 def _fast_path_eligible(data: bytes) -> bool:
-    # the sheet must actually live in the SpreadsheetML main namespace as
-    # the DEFAULT namespace — otherwise the fast walker would "parse" rows
-    # the namespace-keyed ET walker would (correctly) not recognize at all
-    if data.find(b'xmlns="' + _MAIN_NS_URI.encode() + b'"') == -1:
-        return False
-    if data.find(b"<![CDATA[") != -1 or data.find(b"<!--") != -1:
-        return False
-    if data.find(b"<?", 1) != -1:  # any PI beyond the leading XML decl
-        return False
-    if data.find(b"<extLst") != -1:
-        # extension lists may nest arbitrary elements inside <c>, which the
-        # find-based cell splitter assumes cannot happen
+    """Whether a sheet buffer may take the find-based and columnar tiers:
+    the SpreadsheetML main namespace is the DEFAULT namespace (otherwise
+    the fast walker would "parse" rows the namespace-keyed ET walker
+    would, correctly, not recognize), no prefix binds it (prefixed
+    main-namespace elements are possible), the encoding is UTF-8, and no
+    CDATA, comment, later processing instruction or extension list
+    occurs. Each rule reads the buffer at memchr speed: the exact prefix
+    scan runs only when :func:`_may_bind_main_prefix` says it must."""
+    main = _MAIN_NS_URI.encode()
+    if data.find(b'xmlns="' + main + b'"') == -1:
         return False
     head = data[:200]
     if b"encoding" in head and b"UTF-8" not in head and b"utf-8" not in head:
         return False
-    for m in _XMLNS_PREFIX_RE.finditer(data):
-        if m.group(1) == _MAIN_NS_URI.encode():
-            return False  # prefixed main-ns elements are possible → defer
-    return True
+    if _may_bind_main_prefix(data) and any(
+        m.group(1) == main for m in _XMLNS_PREFIX_RE.finditer(data)
+    ):
+        return False
+    return not _holds_refused_markup(data)
 
 
 def _unescape(s: str) -> str:

@@ -6,6 +6,8 @@ import asyncio
 import os
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from data_to_parquet_spark import (
     DataToParquetError,
@@ -731,6 +733,89 @@ def test_mismatched_multi_file_headers_rejected(spark, tmp_path):
     df = read_excel(spark, [p1, p2])
     with pytest.raises(Exception, match="does not match"):
         df.collect()
+
+
+MAIN_NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+
+
+def _machine_sheet_buffer(tmp_path, n_rows=3000):
+    import zipfile
+
+    from perfbench import gen
+
+    path = str(tmp_path / "machine.xlsx")
+    gen.write_machine_xlsx(path, n_rows, 3)
+    with zipfile.ZipFile(path) as z:
+        return z.read("xl/worksheets/sheet1.xml")
+
+
+@pytest.mark.parametrize("noisy", [False, True], ids=["clean", "noisy"])
+@pytest.mark.parametrize(
+    "markup",
+    ["<![CDATA[x]]>", "<!-- note -->", "<?pi data?>", "<extLst/>",
+     f'<x xmlns:m="{MAIN_NS}"/>'],
+)
+def test_fast_path_refuses_markup_past_64k(tmp_path, markup, noisy):
+    """Each markup the fast tiers refuse, placed between rows past the
+    first 64 KiB of a machine-written sheet, declines the buffer; with
+    ``noisy``, more cells holding ``!``, ``?`` and ``L`` than the scan
+    checks in place come first."""
+    from data_to_parquet_spark.sources.xlsx import _fast_path_eligible
+
+    data = _machine_sheet_buffer(tmp_path)
+    assert len(data) > 2 * 65536 and _fast_path_eligible(data)
+    if noisy:
+        noise = b"".join(
+            b'<c r="Z1" t="inlineStr"><is><t>L!?</t></is></c>'
+            for _ in range(40)
+        )
+        at = data.index(b"</row>")
+        data = data[:at] + noise + data[at:]
+        assert _fast_path_eligible(data)
+    at = data.index(b"<row ", 65536)
+    data = data[:at] + markup.encode() + data[at:]
+    assert not _fast_path_eligible(data)
+
+
+def _eligible_by_five_scans(data: bytes) -> bool:
+    """The fast-path rules written as one scan per rule."""
+    import re
+
+    if data.find(b'xmlns="' + MAIN_NS.encode() + b'"') == -1:
+        return False
+    if data.find(b"<![CDATA[") != -1 or data.find(b"<!--") != -1:
+        return False
+    if data.find(b"<?", 1) != -1:
+        return False
+    if data.find(b"<extLst") != -1:
+        return False
+    head = data[:200]
+    if b"encoding" in head and b"UTF-8" not in head and b"utf-8" not in head:
+        return False
+    for m in re.finditer(rb'xmlns:[A-Za-z0-9_]+="([^"]*)"', data):
+        if m.group(1) == MAIN_NS.encode():
+            return False
+    return True
+
+
+_SCAN_PIECES = [
+    "<?xml version=\"1.0\"?>", ' encoding="UTF-8"', ' encoding="latin-1"',
+    f' xmlns="{MAIN_NS}"', f' xmlns:x="{MAIN_NS}"', ' xmlns:x="other"',
+    f' axmlns="{MAIN_NS}"', f' xmlns:xmlns="{MAIN_NS}"', f'="{MAIN_NS}"',
+    f' xmlns:a="xmlns:b="{MAIN_NS}"', "<!--", "<![CDATA[", "<?", "<extLst",
+    "<ext", "!", "?", "L", "<", "xmlns", '"', "<row r=\"1\"><c/></row>",
+]
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(st.sampled_from(_SCAN_PIECES), max_size=120))
+def test_fast_path_rules_match_five_scans(pieces):
+    """The rare-byte scan accepts exactly the buffers the one-scan-per-rule
+    form accepts, hit-count fallbacks included."""
+    from data_to_parquet_spark.sources.xlsx import _fast_path_eligible
+
+    data = "".join(pieces).encode()
+    assert _fast_path_eligible(data) == _eligible_by_five_scans(data)
 
 
 def test_fast_and_et_walkers_agree(tmp_path):

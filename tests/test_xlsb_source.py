@@ -118,3 +118,67 @@ def test_xlsb_rk_variants(spark, tmp_path):
         ("12.5",),
         ("1234",),
     ]
+
+
+def _record_offsets(part: bytes) -> list[tuple[int, int]]:
+    """(header start, payload start) of every record in an xlsb part."""
+    out, pos = [], 0
+    while pos < len(part):
+        start = pos
+        pos += 2 if part[pos] & 0x80 else 1
+        length, shift = 0, 0
+        while True:
+            b = part[pos]
+            pos += 1
+            length |= (b & 0x7F) << shift
+            shift += 7
+            if not b & 0x80:
+                break
+        out.append((start, pos))
+        pos += length
+    return out
+
+
+@pytest.mark.parametrize("cut", ["boundary", "mid_header", "mid_payload"])
+def test_truncated_xlsb_sheet(tmp_path, cut):
+    """An xlsb sheet part cut inside a record header or payload (and
+    re-zipped with a valid CRC) fails the read with an error naming the
+    file and the sheet; a cut on a record boundary is a clean end (the
+    generator writes no BrtEndSheetData) and reads the rows before it."""
+    import zipfile
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+    from perfbench import gen
+
+    path = str(tmp_path / "cut.xlsb")
+    gen.write_xlsb(path, 400, 3)
+    names = excel_mod.infer_schema(path).fieldNames()
+    member = "xl/worksheets/sheet1.bin"
+    with zipfile.ZipFile(path) as z:
+        parts = {i.filename: z.read(i.filename) for i in z.infolist()}
+    records = _record_offsets(parts[member])
+    # the BrtRowHdr (0x00) of a row in the middle of the sheet
+    head, payload = next(
+        r for r in records[len(records) // 2:] if parts[member][r[0]] == 0x00
+    )
+    at = {"boundary": head, "mid_header": head + 1,
+          "mid_payload": payload + 5}[cut]
+    parts[member] = parts[member][:at]
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        for name, data in parts.items():
+            z.writestr(name, data)
+
+    def read():
+        return [
+            r
+            for b in excel_mod.read_workbook(path, None, None, 0, 1000, names)
+            for r in b.to_pylist()
+        ]
+
+    if cut == "boundary":
+        rows = read()
+        assert 0 < len(rows) < 400
+        assert [r[names[0]] for r in rows] == [str(i) for i in range(len(rows))]
+    else:
+        with pytest.raises(DataToParquetError, match="'Data'.*truncated"):
+            read()
