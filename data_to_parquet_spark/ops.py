@@ -1438,13 +1438,14 @@ def lloyd_centroids(
     # Probe the branch with ids only — never the vector column: collecting
     # budget+1 FULL rows just to discover the corpus is over budget moved
     # multi-hundred-MB of wide embeddings to the driver and discarded them
-    # (ADVICE r7). The id-only CollectLimit still early-exits after
-    # budget+1 rows, so probing a 100 TB corpus costs ~one partition read.
-    # Deliberate trade: an at-or-under-budget corpus now pays a second
-    # (id-only, column-pruned) job before the full fetch — tens of ms on
-    # the small corpora that take this branch, vs the unbounded wide-row
-    # transfer the probe avoids on the corpora that don't.
-    n_probe = len(df.select(id_col).limit(budget + 1).collect())
+    # (ADVICE r7). The id-only limit still early-exits after budget+1 rows,
+    # so probing a 100 TB corpus costs ~one partition read, and as an Arrow
+    # fetch it is one job (a CollectLimit ``.collect()`` runs two).
+    # Deliberate trade: an at-or-under-budget corpus pays this (id-only,
+    # column-pruned) job before the full fetch — tens of ms on the small
+    # corpora that take this branch, vs the unbounded wide-row transfer
+    # the probe avoids on the corpora that don't.
+    n_probe = df.select(id_col).limit(budget + 1).toArrow().num_rows
     if n_probe <= budget:
         head = df.select(id_col, vec_col).limit(budget + 1).collect()
     elif sample_by_hash:

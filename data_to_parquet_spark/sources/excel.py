@@ -35,6 +35,7 @@ from __future__ import annotations
 import glob
 import itertools
 import os
+import struct
 from typing import Iterator
 from xml.etree.ElementTree import ParseError
 
@@ -156,6 +157,12 @@ def _dense_batches(
         yield batch(buf)
 
 
+# what the decoders raise on a malformed part: ElementTree, the find-based
+# cell split, Arrow and the xlsb record reader (a cut record is an
+# EOFError; UnicodeDecodeError and ArrowInvalid are ValueErrors)
+_MALFORMED = (ParseError, EOFError, struct.error, IndexError, ValueError)
+
+
 def scan_sheet(
     wb,
     sheet: str,
@@ -178,50 +185,70 @@ def scan_sheet(
       :func:`_dense_batches` from the row walkers.
 
     ``span`` restricts an .xlsx scan to one byte range of the sheet part
-    (see ``XlsxWorkbook.iter_rows_str``); a range past the header row
+    (see ``XlsxWorkbook.sheet_rows``); a range past the header row
     yields placeholder headers, which the split path ignores.
+
+    A sheet or shared-strings part that is not what its format says (a
+    truncated one among them) raises ``DataToParquetError`` naming the
+    file and the sheet, from the header phase or from the batches: every
+    reader, on the driver and in the tasks, scans through here.
     """
-    start_col, num_cols, header_row_idx = _sheet_geometry(wb, sheet, skip_rows)
+    scan = _scan(wb, sheet, skip_rows, batch_size, span)
+    return next(scan), scan
 
-    rows = wb.sheet_rows(sheet, span)
-    columnar = isinstance(rows, ColumnarRows)
-    # a columnar sheet walks its row indices; "cells" is the row's position
-    stream = zip(map(int, rows.row_index), itertools.count()) if columnar else rows
 
-    # --- header phase -----------------------------------------------------
-    header = pending = None
-    for row, cells in stream:
-        if header_row_idx is None:
-            header_row_idx = row + skip_rows
-        if row < header_row_idx:
-            continue  # leading-row discard (O5)
-        if row == header_row_idx:
-            header = cells
-            continue
-        pending = (row, cells)
-        break
+def _scan(wb, sheet, skip_rows, batch_size, span):
+    """:func:`scan_sheet` as one generator: the headers, then the batches."""
+    try:
+        start_col, num_cols, header_row_idx = _sheet_geometry(wb, sheet, skip_rows)
 
-    if header_row_idx is None:  # empty sheet
-        return [], iter(())
+        rows = wb.sheet_rows(sheet, span)
+        columnar = isinstance(rows, ColumnarRows)
+        # a columnar sheet walks its row indices; "cells" is the row's position
+        stream = zip(map(int, rows.row_index), itertools.count()) if columnar else rows
 
-    if header is None:
-        header_cells: dict[int, str] = {}
-    else:
-        header_cells = dict(rows.cells(header) if columnar else header)
-    if start_col is None:
-        # no dimension element: infer span from the header row extent
-        if not header_cells:
-            return [], iter(())
-        start_col = min(header_cells)
-        num_cols = max(header_cells) - start_col + 1
+        # --- header phase -------------------------------------------------
+        header = pending = None
+        for row, cells in stream:
+            if header_row_idx is None:
+                header_row_idx = row + skip_rows
+            if row < header_row_idx:
+                continue  # leading-row discard (O5)
+            if row == header_row_idx:
+                header = cells
+                continue
+            pending = (row, cells)
+            break
 
-    headers = build_headers(header_cells, num_cols, start_col)
-    names = uniquify(headers)
-    if columnar:
-        first = len(rows) if pending is None else pending[1]
-        return headers, rows.batches(first, start_col, num_cols, batch_size, names)
-    data = itertools.chain([pending] if pending else [], rows)
-    return headers, _dense_batches(data, start_col, num_cols, batch_size, names)
+        if header_row_idx is None:  # empty sheet
+            yield []
+            return
+
+        if header is None:
+            header_cells: dict[int, str] = {}
+        else:
+            header_cells = dict(rows.cells(header) if columnar else header)
+        if start_col is None:
+            # no dimension element: infer span from the header row extent
+            if not header_cells:
+                yield []
+                return
+            start_col = min(header_cells)
+            num_cols = max(header_cells) - start_col + 1
+
+        headers = build_headers(header_cells, num_cols, start_col)
+        names = uniquify(headers)
+        yield headers
+        if columnar:
+            first = len(rows) if pending is None else pending[1]
+            yield from rows.batches(first, start_col, num_cols, batch_size, names)
+        else:
+            data = itertools.chain([pending] if pending else [], rows)
+            yield from _dense_batches(data, start_col, num_cols, batch_size, names)
+    except _MALFORMED as e:
+        raise DataToParquetError(
+            f"{wb.path!r}: sheet {sheet!r} is not well-formed: {e}"
+        ) from e
 
 
 def infer_schema(
@@ -256,31 +283,26 @@ def read_workbook(
     byte-range read skips the check, which the split planner made once on
     the driver.
 
-    A sheet part that is not well-formed XML (a truncated one among them)
-    or an xlsb sheet part cut inside a record raises
-    ``DataToParquetError`` naming the file and the sheet.
+    A malformed sheet or shared-strings part raises
+    ``DataToParquetError`` naming the file and the sheet (see
+    :func:`scan_sheet`).
     """
     with open_workbook(path) as wb:
         sheet = wb.resolve_sheet(sheet_name, sheet_index)
-        try:
-            headers, batches = scan_sheet(wb, sheet, skip_rows, batch_size, span)
-            rename = uniquify(headers) != names
-            if span is None and rename:
-                raise DataToParquetError(
-                    f"{path!r}: header row {headers} does not match the "
-                    f"schema {names}"
-                )
-            for batch in batches:
-                # a byte range's placeholder headers take the schema's names
-                yield (
-                    pa.RecordBatch.from_arrays(batch.columns, names=names)
-                    if rename
-                    else batch
-                )
-        except (ParseError, EOFError) as e:  # EOFError: a cut xlsb record
+        headers, batches = scan_sheet(wb, sheet, skip_rows, batch_size, span)
+        rename = uniquify(headers) != names
+        if span is None and rename:
             raise DataToParquetError(
-                f"{path!r}: sheet {sheet!r} is not well-formed: {e}"
-            ) from e
+                f"{path!r}: header row {headers} does not match the "
+                f"schema {names}"
+            )
+        for batch in batches:
+            # a byte range's placeholder headers take the schema's names
+            yield (
+                pa.RecordBatch.from_arrays(batch.columns, names=names)
+                if rename
+                else batch
+            )
 
 
 def read_excel(
@@ -455,9 +477,9 @@ def _split_spans(
     part's inflated size (``ZipInfo.file_size``) after ``head``, the offset
     of the first ``<row``, which is looked for in the part's first MiB.
     Each task aligns its own range on ``<row r="`` boundaries
-    (``XlsxWorkbook.iter_rows_str``), re-opens the workbook it already needs
+    (``XlsxWorkbook.sheet_rows``), re-opens the workbook it already needs
     for shared strings and parses its rows behind the part's own first
-    ``head`` bytes, so it runs on any master and the same decoder tiers see
+    ``head`` bytes, so it runs on any master and the same decoders see
     the same namespaces as the streaming path — the golden tests run
     through both.
 

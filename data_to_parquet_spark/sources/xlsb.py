@@ -38,6 +38,8 @@ BRT_FMLA_NUM = 0x0009
 BRT_FMLA_BOOL = 0x000A
 BRT_FMLA_ERROR = 0x000B
 BRT_SST_ITEM = 0x0013
+BRT_BEGIN_SHEET_DATA = 0x0091
+BRT_END_SHEET_DATA = 0x0092
 BRT_WS_DIM = 0x0094
 BRT_BUNDLE_SH = 0x009C
 
@@ -96,8 +98,7 @@ def read_record_header(f: BinaryIO) -> tuple[int, int] | None:
 
 def iter_records(f: BinaryIO) -> Iterator[tuple[int, bytes]]:
     """(record_id, payload) per record up to EOF, which must fall on a
-    record boundary (a part need not close with ``BrtEndSheetData``); a
-    truncated record raises ``EOFError``."""
+    record boundary; a truncated record raises ``EOFError``."""
     while True:
         hdr = read_record_header(f)
         if hdr is None:
@@ -220,19 +221,27 @@ class XlsbWorkbook(Workbook):
         return None
 
     def iter_cells(self, sheet: str) -> Iterator[tuple[int, int, CellValue]]:
-        """Sparse row-major cell stream (row, col, CellValue)."""
+        """Sparse row-major cell stream (row, col, CellValue). A part that
+        opens ``BrtBeginSheetData`` must close it with ``BrtEndSheetData``
+        (else ``EOFError``); a part that never opens it may end after any
+        record."""
         sst = self._shared_strings()
         row = 0
+        sheet_data_open = False
         with self._zip.open(self._member(sheet)) as f:
             for rid, payload in iter_records(f):
                 if rid == BRT_ROW_HDR:
                     (row,) = struct.unpack_from("<I", payload, 0)
                     continue
+                if rid in (BRT_BEGIN_SHEET_DATA, BRT_END_SHEET_DATA):
+                    sheet_data_open = rid == BRT_BEGIN_SHEET_DATA
                 if rid not in _CELL_RECORDS:
                     continue
                 # Cell struct: column (4) + iStyleRef:24/flags:8 (4)
                 (col,) = struct.unpack_from("<I", payload, 0)
                 yield row, col, self._cell_value(rid, payload, sst)
+        if sheet_data_open:
+            raise EOFError("no BrtEndSheetData: the sheet part is truncated")
 
     @staticmethod
     def _cell_value(rid: int, payload: bytes, sst: list[str]) -> CellValue:

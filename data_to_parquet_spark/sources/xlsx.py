@@ -8,20 +8,22 @@ present but valueless cells are emitted as Empty (→ ``""`` downstream, while
 absent cells densify to NULL — the reference's critical null-vs-empty-string
 distinction, ``src/lib.rs:398`` vs ``:428-433``).
 
-Decoder tiers. :func:`walk_buffer` picks one per in-memory buffer. When
-:func:`_fast_path_eligible` proves its preconditions, a scan first tries
-the columnar tier (:func:`decode_columnar`): ``pyarrow.compute`` splits
-the rows and cells of machine-written sheets, matches every cell against
-three shapes and densifies straight into Arrow columns; a row holding any
-other cell is decoded by the find-based cell split (:func:`_decode_cells`)
-and the other rows stay columnar. A buffer whose row structure the
-columnar tier cannot prove, or whose first rows mostly fall back
-(Excel-written sheets), goes to the find-based row walker; a buffer that
-fails the preconditions goes to the ElementTree walker. Every tier hands
-the ``<v>`` texts it does not pass through to the one ``t=`` decoder,
-:func:`decode_value`, and must give the ElementTree walker's cells
-exactly (the differential tests pin this). A truncated part raises
-``ParseError`` in every tier: no tier returns fewer rows quietly.
+Decoders. One decoder sits in front of ElementTree. :func:`walk_buffer`
+hands an in-memory buffer to the columnar tier (:class:`ColumnarRows`)
+when :func:`_fast_path_eligible` and :func:`decode_columnar` prove it:
+``pyarrow.compute`` splits the rows and cells, matches every cell against
+three machine-written shapes and densifies straight into Arrow columns. A
+cell of any other shape (a styled number, a formula, escaped text) is
+decoded alone by the find-based cell split (:func:`_decode_cells`) and
+the rest of its row stays columnar; a row whose cells cannot be checked
+one by one (text after its start tag, a cell without a leading ``r=``,
+columns out of order) is decoded whole by that split. Every other buffer,
+and every part too large to buffer, goes to the ElementTree walker
+(:func:`walk_rows`). Both hand the ``<v>`` texts they do not pass through
+to the one ``t=`` decoder, :func:`decode_value`, and the columnar tier
+must give the ElementTree walker's cells exactly (the differential tests
+pin this). A truncated part raises ``ParseError`` in both: neither
+returns fewer rows quietly.
 
 Memory bound: sheet parts up to ``_FAST_BUFFER_LIMIT`` are inflated into
 one buffer, so per-task memory is O(min(sheet, limit) + sst). Larger parts
@@ -146,15 +148,15 @@ def walk_rows(stream, sst: list[str]):
         el.clear()
 
 
-# --- find-based fast path --------------------------------------------------
+# --- eligibility of the columnar tier -----------------------------------------
 # SpreadsheetML from real producers (Excel, openpyxl, this repo's fixture
 # writer) declares the main namespace as the DEFAULT namespace and never by
 # prefix, never uses CDATA/comments/PIs inside sheet parts, and is UTF-8.
 # Under those conditions (cheaply verified over the whole buffer up front),
-# <row>/<c>/<v>/<is> elements can be located with string finds + small
-# regexes — ~2.5× faster than ElementTree iterparse. Anything unusual
-# disqualifies the buffer and the ET walker runs instead, so the fast path
-# can never be silently wrong: it either proves its preconditions or defers.
+# <row>/<c>/<v>/<is> elements can be located by splitting on their start
+# tags instead of parsing XML. Anything unusual disqualifies the buffer and
+# the ElementTree walker runs instead, so the columnar tier can never be
+# silently wrong: it either proves its preconditions or defers.
 
 # Per-task inflate-to-memory bound for whole sheet parts. Deliberately
 # small: with one task per workbook, every concurrent task may hold buffer +
@@ -163,8 +165,6 @@ def walk_rows(stream, sst: list[str]):
 _FAST_BUFFER_LIMIT = 32 * 1024 * 1024
 _MAIN_NS_URI = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _XMLNS_PREFIX_RE = re.compile(rb'xmlns:[A-Za-z0-9_]+="([^"]*)"')
-_ROW_TAIL = " />\t\r\n"
-_ROW_R_RE = re.compile(r'\br="(\d+)"')
 _T_TEXT_RE = re.compile(r"<t(?:\s[^>]*)?>(.*?)</t>", re.S)
 # a cell start tag, not a rich-text run property such as <color>/<charset>
 _CELL_SPLIT_RE = re.compile(r"<c(?=[\s/>])")
@@ -175,7 +175,7 @@ _FIRST_ROW_RE = re.compile(rb"<sheetData[\s>].*?(<row[\s/>])", re.S)
 _READ_ON_BYTES = 64 * 1024
 
 
-# Markup that keeps a buffer off the fast tiers, keyed by a byte of each
+# Markup that keeps a buffer off the columnar tier, keyed by a byte of each
 # token that machine-written sheet XML seldom holds, so memchr (bytes.find
 # of one byte) jumps from hit to hit; ``(token, first allowed offset)``:
 # the XML declaration may open the buffer, no other processing
@@ -233,10 +233,10 @@ def _may_bind_main_prefix(data: bytes) -> bool:
 
 
 def _fast_path_eligible(data: bytes) -> bool:
-    """Whether a sheet buffer may take the find-based and columnar tiers:
-    the SpreadsheetML main namespace is the DEFAULT namespace (otherwise
-    the fast walker would "parse" rows the namespace-keyed ET walker
-    would, correctly, not recognize), no prefix binds it (prefixed
+    """Whether a sheet buffer may take the columnar tier: the
+    SpreadsheetML main namespace is the DEFAULT namespace (otherwise the
+    tier would "parse" rows the namespace-keyed ET walker would,
+    correctly, not recognize), no prefix binds it (prefixed
     main-namespace elements are possible), the encoding is UTF-8, and no
     CDATA, comment, later processing instruction or extension list
     occurs. Each rule reads the buffer at memchr speed: the exact prefix
@@ -265,17 +265,17 @@ def _unescape(s: str) -> str:
 
 
 def _decode_cells(body: str, sst: list[str]) -> list[tuple[int, str]]:
-    """Generic find-based decode of a ``<row>`` body: splitting on ``<c``
-    start tags isolates cells, because inside ``<row>`` the schema-valid
-    children are only ``<c>`` (``<extLst>`` is excluded by eligibility).
-    All parsing after the split is C-speed str.find/slice."""
+    """Generic find-based decode of a ``<row>`` body (or of one cell):
+    splitting on ``<c`` start tags isolates cells, because inside ``<row>``
+    the schema-valid children are only ``<c>`` (``<extLst>`` is excluded by
+    eligibility). All parsing after the split is C-speed str.find/slice."""
     out: list[tuple[int, str]] = []
     col = -1
     for part in _CELL_SPLIT_RE.split(body)[1:]:
         gt = part.find(">")
         attrs = part[:gt]
         ri = attrs.find(' r="')
-        if ri != -1:
+        if ri != -1 and attrs[ri + 4] != '"':  # r="" counts as no r=
             # identical arithmetic to walk_rows' manual A1 parse
             acc = 0
             for ch in attrs[ri + 4 : attrs.index('"', ri + 4)]:
@@ -323,50 +323,6 @@ def _truncated(what: str) -> ET.ParseError:
     return ET.ParseError(f"{what}: the sheet part is truncated")
 
 
-def walk_rows_fast(data: bytes, sst: list[str]):
-    """Find-based row walker over a whole in-memory worksheet document.
-    Same contract as :func:`walk_rows`; only called when
-    ``_fast_path_eligible`` proved the preconditions. Returns None
-    (pre-iteration) if decoding fails; raises ``ParseError`` on a row
-    without its ``>`` or ``</row>`` and on a document without
-    ``</sheetData>``."""
-    try:
-        text = data.decode("utf-8")
-    except UnicodeDecodeError:
-        return None
-
-    def rows():
-        pos = 0
-        row_counter = -1
-        n = len(text)
-        while True:
-            i = text.find("<row", pos)
-            if i < 0:
-                if text.rfind("</sheetData>") < 0 and "<sheetData/>" not in text:
-                    raise _truncated("no </sheetData>")
-                return
-            tail = i + 4
-            if tail < n and text[tail] not in _ROW_TAIL:
-                pos = tail  # e.g. <rowBreaks>
-                continue
-            j = text.find(">", i)
-            if j < 0:
-                raise _truncated(f"row at offset {i} has no '>'")
-            m = _ROW_R_RE.search(text[i:j])
-            row_counter = int(m.group(1)) - 1 if m else row_counter + 1
-            if text[j - 1] == "/":  # self-closing: physically-present, empty
-                yield row_counter, []
-                pos = j + 1
-                continue
-            k = text.find("</row>", j)
-            if k < 0:
-                raise _truncated(f"row at offset {i} has no </row>")
-            yield row_counter, _decode_cells(text[j + 1 : k], sst)
-            pos = k + 6
-
-    return rows()
-
-
 # --- columnar tier -----------------------------------------------------------
 # Machine-written sheets (this repo's writers and most export libraries)
 # use three cell shapes. For a buffer of such rows pyarrow.compute does the
@@ -374,7 +330,8 @@ def walk_rows_fast(data: bytes, sst: list[str]):
 # every cell piece against the shapes with one anchored RE2 pattern, and
 # densify with numpy positions plus take. Python only decodes what the
 # vectorized rules do not pass through: t="s"/t="e" cells, non-canonical
-# numbers and the rows holding any other cell shape.
+# numbers, each cell of another shape (alone) and the rows whose cells
+# cannot be checked one by one (whole).
 
 #: a cell piece after "<c ": self-closing, a ``<v>`` scalar without XML
 #: escapes, or a single-run ``xml:space="preserve"`` inline string without
@@ -397,10 +354,6 @@ _CANONICAL_DEC = r"^-?(?:0|[1-9][0-9]*)\.[0-9]*[1-9]$"
 _NUMERIC_T = pa.array(["", "n"])
 _DECODED_T = pa.array(["s", "e"])
 _FALSE = pa.array(["0", "false", "FALSE"])
-# a buffer's first rows (up to the first </row> past this many bytes)
-# probe it: more than this share of rows outside the shapes declines it
-_PROBE_BYTES = 64 * 1024
-_DECLINE_SHARE = 0.5
 # rows decoded per step; a multiple of the batch size is used
 _STEP_ROWS = 4096
 
@@ -429,10 +382,10 @@ class ColumnarRows:
         return len(self.rows)
 
     def _decode(self, lo: int, hi: int):
-        """Cells of rows ``lo:hi`` as ``(row, col, values, n_fallback)``:
-        numpy row positions (relative to ``lo``) and 0-based columns, an
-        Arrow string array of cell values, each (row, col) at most once, and
-        the number of rows :func:`_decode_cells` decoded."""
+        """Cells of rows ``lo:hi`` as ``(row, col, values)`` in document
+        order: numpy row positions (relative to ``lo``) and 0-based columns,
+        and an Arrow string array of cell values, each (row, col) at most
+        once."""
         split = pc.split_pattern(self.rows.slice(lo, hi - lo), "<c ")
         pieces = split.flatten()
         heads = np.asarray(split.offsets)[:-1]
@@ -443,14 +396,27 @@ class ColumnarRows:
         col = np.asarray(
             pc.fill_null(pc.index_in(letters, _column_letters()), -1)
         ).astype(np.int64)
-        # a row falls back when a cell piece has another shape, text follows
-        # its start tag, or its columns do not strictly increase
-        fallback = np.zeros(hi - lo, bool)
+        # a row falls back whole when text follows its start tag, a cell
+        # piece of another shape lacks a leading r= or is not one cell, or
+        # its columns do not strictly increase; other odd pieces decode
+        # alone and the rest of the row stays columnar
+        head_ok = pc.match_substring_regex(pieces.take(pa.array(heads)), _ROW_HEAD)
+        fallback = ~np.asarray(head_ok)
         odd = ~shaped
         odd[heads] = False
-        fallback[parent[odd]] = True
-        head_ok = pc.match_substring_regex(pieces.take(pa.array(heads)), _ROW_HEAD)
-        fallback[~np.asarray(head_ok)] = True
+        # (row, piece position: the row's document order, col, value)
+        alone: list[tuple[int, int, int, str]] = []
+        odd_at = np.flatnonzero(odd)
+        for i, r, piece in zip(
+            odd_at.tolist(), parent[odd_at].tolist(), pieces.take(odd_at).to_pylist()
+        ):
+            one = _decode_cells("<c " + piece, self.sst) if piece[:3] == 'r="' else ()
+            if len(one) == 1:
+                alone.append((r, i, *one[0]))
+            else:
+                fallback[r] = True
+        if alone:
+            col[[a[1] for a in alone]] = [a[2] for a in alone]
         unordered = (parent[1:] == parent[:-1]) & (col[1:] <= col[:-1])
         fallback[parent[1:][unordered]] = True
 
@@ -484,25 +450,37 @@ class ColumnarRows:
                 values, python, pa.array(decoded, pa.string())
             )
 
-        rows, cols = parent[keep], col[keep]
-        fallback_rows = np.flatnonzero(fallback)
-        if len(fallback_rows):
-            extra: dict[tuple[int, int], str] = {}
-            for i in fallback_rows.tolist():
-                text = self.rows[lo + i].as_py()
-                body = text[text.index(">") + 1 :]
-                for c, value in _decode_cells(body, self.sst):
-                    extra[i, c] = value  # a repeated column: the last wins
-            rows = np.concatenate([rows, [i for i, _ in extra]]).astype(np.int64)
-            cols = np.concatenate([cols, [c for _, c in extra]]).astype(np.int64)
-            values = pa.concat_arrays(
-                [values, pa.array(list(extra.values()), pa.string())]
-            )
-        return rows, cols, values, len(fallback_rows)
+        rows, cols = parent[keep].astype(np.int64), col[keep]
+        fell = fallback.tolist()
+        extra = [cell for cell in alone if not fell[cell[0]]]
+        for i in np.flatnonzero(fallback).tolist():
+            text = self.rows[lo + i].as_py()
+            # a repeated column: the last value wins
+            row = dict(_decode_cells(text[text.index(">") + 1 :], self.sst))
+            extra += [(i, k, *cell) for k, cell in enumerate(row.items())]
+        if extra:
+            r, at, c, x = zip(*extra)
+            rows = np.concatenate([rows, np.array(r, np.int64)])
+            cols = np.concatenate([cols, np.array(c, np.int64)])
+            values = pa.concat_arrays([values, pa.array(x, pa.string())])
+            order = np.lexsort((np.concatenate([np.flatnonzero(keep), at]), rows))
+            rows, cols, values = rows[order], cols[order], values.take(order)
+        return rows, cols, values
+
+    def __iter__(self) -> Iterator[tuple[int, list[tuple[int, str]]]]:
+        """``(row_idx, [(col, value), ...])`` per row, as the row walkers
+        give them, decoding ``_STEP_ROWS`` rows at a time."""
+        for lo in range(0, len(self), _STEP_ROWS):
+            hi = min(lo + _STEP_ROWS, len(self))
+            rows, cols, values = self._decode(lo, hi)
+            cells = list(zip(cols.tolist(), values.to_pylist()))
+            ends = np.searchsorted(rows, np.arange(hi - lo + 1)).tolist()
+            for i, r in enumerate(self.row_index[lo:hi].tolist()):
+                yield r, cells[ends[i] : ends[i + 1]]
 
     def cells(self, i: int) -> list[tuple[int, str]]:
         """Row ``i``'s ``(col, value)`` cells, as the row walkers give them."""
-        _, cols, values, _ = self._decode(i, i + 1)
+        _, cols, values = self._decode(i, i + 1)
         return list(zip(cols.tolist(), values.to_pylist()))
 
     def batches(
@@ -520,7 +498,7 @@ class ColumnarRows:
         step = batch_size * -(-_STEP_ROWS // batch_size)
         for lo in range(first, len(self), step):
             hi = min(lo + step, len(self))
-            rows, cols, values, _ = self._decode(lo, hi)
+            rows, cols, values = self._decode(lo, hi)
             rel = cols - start_col
             inside = (rel >= 0) & (rel < num_cols)
             take = np.full((num_cols, hi - lo), -1, np.int64)
@@ -532,13 +510,20 @@ class ColumnarRows:
                 yield chunk.slice(off, batch_size)
 
 
-def _prove_rows(
-    data: bytes, a: int, b: int, sst: list[str]
-) -> ColumnarRows | None:
-    """The rows of ``data[a:b]`` (bytes between ``<sheetData>`` and
-    ``</sheetData>``) when they are UTF-8 ``<row r="N" …>…</row>``
-    elements back to back: nothing between rows, no self-closing row and
-    no row without a leading ``r=``. None otherwise."""
+def decode_columnar(data: bytes, sst: list[str]) -> ColumnarRows | None:
+    """The columnar tier for one in-memory worksheet document that
+    :func:`_fast_path_eligible` accepted: its rows when the bytes between
+    ``<sheetData>`` and ``</sheetData>`` are UTF-8 ``<row r="N" …>…</row>``
+    elements back to back (nothing between rows, no self-closing row and no
+    row without a leading ``r=``), None otherwise. Raises ``ParseError``
+    for a document without ``</sheetData>``."""
+    a = data.find(b"<sheetData>")
+    if a < 0:
+        return None
+    a += len(b"<sheetData>")
+    b = data.find(b"</sheetData>", a)
+    if b < 0:
+        raise _truncated("no </sheetData>")
     if b - a >= 2**31:
         return None
     text = pa.StringArray.from_buffers(
@@ -561,38 +546,13 @@ def _prove_rows(
     return ColumnarRows(rows, np.asarray(pc.cast(index, pa.int64())) - 1, sst)
 
 
-def decode_columnar(data: bytes, sst: list[str]) -> ColumnarRows | None:
-    """The columnar tier for one in-memory worksheet document that
-    :func:`_fast_path_eligible` accepted. None when :func:`_prove_rows`
-    cannot prove the row structure, or when more than half of the rows
-    in the first ``_PROBE_BYTES`` fall back (an Excel-written sheet, whose
-    styled, formula and escaped cells the shapes never accept, declines
-    after that probe). Raises ``ParseError`` for a document without
-    ``</sheetData>``."""
-    a = data.find(b"<sheetData>")
-    if a < 0:
-        return None
-    a += len(b"<sheetData>")
-    b = data.find(b"</sheetData>", a)
-    if b < 0:
-        raise _truncated("no </sheetData>")
-    cut = data.find(b"</row>", min(a + _PROBE_BYTES, b), b)
-    cut = b if cut < 0 else cut + len(b"</row>")
-    probe = _prove_rows(data, a, cut, sst)
-    if probe is None or probe._decode(0, len(probe))[3] > _DECLINE_SHARE * len(probe):
-        return None
-    return probe if cut == b else _prove_rows(data, a, b, sst)
-
-
-def walk_buffer(data: bytes, sst: list[str], columnar: bool = False):
-    """The tier choice for one in-memory worksheet document: when the
-    buffer proves the find-based preconditions, the columnar tier (with
-    ``columnar``; a :class:`ColumnarRows`) or else the find-based walker;
-    otherwise ElementTree."""
+def walk_buffer(data: bytes, sst: list[str]):
+    """The decoder choice for one in-memory worksheet document: a
+    :class:`ColumnarRows` when :func:`_fast_path_eligible` and
+    :func:`decode_columnar` prove the buffer, else the ElementTree
+    walker's row stream."""
     if _fast_path_eligible(data):
-        rows = decode_columnar(data, sst) if columnar else None
-        if rows is None:
-            rows = walk_rows_fast(data, sst)
+        rows = decode_columnar(data, sst)
         if rows is not None:
             return rows
     return walk_rows(io.BytesIO(data), sst)
@@ -741,7 +701,7 @@ class XlsxWorkbook(Workbook):
         self, sheet: str, span: tuple[int, int, int] | None
     ) -> bytes | None:
         """The in-memory worksheet document a scan decodes: one split range
-        behind the part's own head (see :meth:`iter_rows_str`), or the whole
+        behind the part's own head (see :meth:`sheet_rows`), or the whole
         part up to ``_FAST_BUFFER_LIMIT``; None for a larger part, which
         streams. Raises ``ParseError`` when the last range reaches the end
         of the part without ``</sheetData>``."""
@@ -773,12 +733,13 @@ class XlsxWorkbook(Workbook):
         rows = memoryview(buf)[start:end]
         return b"".join((prolog, rows, b"</sheetData></worksheet>"))
 
-    def iter_rows_str(
-        self, sheet: str, span: tuple[int, int, int] | None = None
-    ) -> Iterator[tuple[int, list[tuple[int, str]]]]:
-        """Yields (row_idx, [(col, normalized_string), ...]) for each
-        physically-present row, cells already normalized per the reference
-        stringify rules (``src/lib.rs:387-400``), from the row walkers.
+    def sheet_rows(self, sheet: str, span: tuple[int, int, int] | None = None):
+        """The rows a scan decodes, from one read of the part: a
+        :class:`ColumnarRows` when the columnar tier proves the buffer, else
+        the ElementTree walker's stream of (row_idx, [(col,
+        normalized_string), ...]) per physically-present row. Either
+        iterates as that stream, cells normalized per the reference
+        stringify rules (``src/lib.rs:387-400``).
 
         ``span = (head, lo, hi)`` is one nominal byte range of the inflated
         part (the split path's task unit). The task aligns it itself: it
@@ -790,25 +751,25 @@ class XlsxWorkbook(Workbook):
         rows are parsed as a document of their own, the part's first
         ``head`` bytes (XML declaration, ``<worksheet …>`` start tag with
         its namespace declarations, up to ``<sheetData>``) + the rows + the
-        closing tags, so every tier sees the same namespaces as the whole
+        closing tags, so both decoders see the same namespaces as the whole
         part.
         """
         sst = self._shared_strings()
         doc = self._sheet_doc(sheet, span)
         if doc is not None:
-            yield from walk_buffer(doc, sst)
-            return
-        with self._zip.open(self._member(sheet)) as f:
-            yield from walk_rows(f, sst)
+            return walk_buffer(doc, sst)
 
-    def sheet_rows(self, sheet: str, span: tuple[int, int, int] | None = None):
-        """The rows a scan decodes: a :class:`ColumnarRows` when the
-        columnar tier proves the buffer, else the row stream of
-        :meth:`iter_rows_str`, from one read of the part."""
-        doc = self._sheet_doc(sheet, span)
-        if doc is None:
-            return self.iter_rows_str(sheet)
-        return walk_buffer(doc, self._shared_strings(), columnar=True)
+        def streamed():
+            with self._zip.open(self._member(sheet)) as f:
+                yield from walk_rows(f, sst)
+
+        return streamed()
+
+    def iter_rows_str(
+        self, sheet: str, span: tuple[int, int, int] | None = None
+    ) -> Iterator[tuple[int, list[tuple[int, str]]]]:
+        """:meth:`sheet_rows` as one row stream."""
+        yield from self.sheet_rows(sheet, span)
 
     def first_row_offset(self, sheet: str) -> int | None:
         """Offset of the first ``<row`` in the inflated part, looked for in

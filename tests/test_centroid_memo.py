@@ -194,3 +194,45 @@ def test_distinct_hyperparameters_train_separately(spark, tmp_path):
     c_k4 = sim._corpus_centroids(spark, root, k=4, iterations=2)
     assert c_k3.shape[0] == 3 and c_k4.shape[0] == 4
     assert len(sim._corpus_centroids.memo) == 2
+
+
+def test_local_training_jobs_and_centroids(spark):
+    """Below the budget, training costs the id-only probe (one Arrow job)
+    plus the bounded fetch of (id, vector) on a multi-partition frame, and
+    the centroids are the numpy replay's: k lowest ids as seeds,
+    lowest-index argmin ties."""
+    from data_to_parquet_spark.ops import lloyd_centroids
+
+    mat = np.array(
+        [[(i * (7 + j)) % 23 for j in range(3)] for i in range(240)], "float64"
+    )
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(mat)],
+        "vec_id long, embedding array<double>",
+    )
+    assert df.rdd.getNumPartitions() > 1
+    sc = spark.sparkContext
+    group = "lloyd-local-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got, _ = lloyd_centroids(df, "vec_id", "embedding", k=5, iterations=3)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # probe: one Arrow job; fetch: a CollectLimit collect, two jobs
+    assert len(jobs) == 3
+
+    cents = mat[:5].copy()
+    for _ in range(3):
+        d2 = (
+            (mat**2).sum(axis=1, keepdims=True)
+            - 2 * mat @ cents.T
+            + (cents**2).sum(axis=1)[None, :]
+        )
+        assign = d2.argmin(axis=1)
+        cents = cents.copy()
+        for c in range(5):
+            members = mat[assign == c]
+            if len(members):
+                cents[c] = members.mean(axis=0)
+    assert np.array_equal(got, cents)

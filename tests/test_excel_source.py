@@ -628,15 +628,45 @@ def test_machine_sheet_stays_in_the_columnar_tier(tmp_path, monkeypatch):
         assert [c.to_pylist() for c in table.columns] == expected
 
 
+def test_excel_sheet_stays_in_the_columnar_tier(tmp_path, monkeypatch):
+    """An Excel-written workbook (styled serials, formulas, escaped text
+    and shared strings) decodes in the columnar tier too, whole and as
+    split ranges: each odd cell decodes alone, no range reaches
+    ElementTree, and the rows are the generator's."""
+    import pyarrow as pa
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+    from data_to_parquet_spark.sources import xlsx
+    from perfbench import gen
+
+    path = str(tmp_path / "excel.xlsx")
+    expected = gen.write_excel_xlsx(path, 3000, 7, comment=False)
+    names = excel_mod.infer_schema(path).fieldNames()
+    monkeypatch.setattr(excel_mod, "SPLIT_THRESHOLD_BYTES", 10_000)
+    spans = excel_mod._split_spans(4, path, None, None, 0, None)
+    assert spans is not None and len(spans) > 1
+
+    def left_the_tier(*args, **kwargs):
+        raise AssertionError("a range left the columnar tier")
+
+    monkeypatch.setattr(xlsx, "walk_rows", left_the_tier)
+    with xlsx.XlsxWorkbook(path) as wb:
+        for span in [None, *spans]:
+            assert isinstance(wb.sheet_rows("Data", span), xlsx.ColumnarRows)
+    for parts in ([None], spans):
+        table = pa.Table.from_batches(_read_parts(path, names, parts))
+        assert [c.to_pylist() for c in table.columns] == expected
+
+
 @pytest.mark.parametrize("split", [False, True], ids=["whole", "split"])
 @pytest.mark.parametrize("cut", ["row_boundary", "mid_row"])
 @pytest.mark.parametrize("shape", ["machine", "excel"])
 def test_truncated_sheet_raises(tmp_path, monkeypatch, shape, cut, split):
     """A sheet part cut short (and re-zipped with a valid CRC) fails the
     read with an error naming the file and the sheet, on the whole-buffer
-    path and on the split path; no tier returns the rows before the cut.
-    Machine-written sheets take the columnar tier, Excel-written ones the
-    find-based walker."""
+    path and on the split path; no decoder returns the rows before the
+    cut. Both shapes take the columnar tier, which finds no
+    ``</sheetData>``."""
     from data_to_parquet_spark.sources import excel as excel_mod
     from perfbench import gen
 
@@ -659,6 +689,81 @@ def test_truncated_sheet_raises(tmp_path, monkeypatch, shape, cut, split):
         assert spans is not None and len(spans) > 1
     with pytest.raises(DataToParquetError, match="'Data'.*truncated"):
         _read_parts(path, names, spans)
+
+
+_MUTATED: dict[str, tuple] = {}
+
+
+def _mutation_base(shape: str, tmp_path_factory):
+    """(path suffix, zip parts, schema names, mutable members) of one small
+    generated workbook per shape, built once."""
+    import zipfile
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+    from perfbench import gen
+
+    if shape not in _MUTATED:
+        write, ext = {
+            "machine": (lambda p: gen.write_machine_xlsx(p, 60, 11), ".xlsx"),
+            "excel": (lambda p: gen.write_excel_xlsx(p, 60, 12, comment=False), ".xlsx"),
+            "nonfast": (lambda p: gen.write_excel_xlsx(p, 60, 13, comment=True), ".xlsx"),
+            "xlsb": (lambda p: gen.write_xlsb(p, 60, 14), ".xlsb"),
+        }[shape]
+        path = str(tmp_path_factory.mktemp("mutation") / f"base{ext}")
+        write(path)
+        with zipfile.ZipFile(path) as z:
+            parts = {i.filename: z.read(i.filename) for i in z.infolist()}
+        members = sorted(
+            m for m in parts if "worksheets/sheet1" in m or "sharedStrings" in m
+        )
+        names = excel_mod.infer_schema(path).fieldNames()
+        _MUTATED[shape] = (ext, parts, names, members)
+    return _MUTATED[shape]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    shape=st.sampled_from(["machine", "excel", "nonfast", "xlsb"]),
+    member=st.integers(0, 1),
+    op=st.sampled_from(["truncate", "flip", "delete", "duplicate"]),
+    where=st.floats(0, 1, exclude_max=True),
+    n=st.integers(1, 16),
+    mask=st.integers(1, 255),
+)
+def test_mutated_workbook_reads_or_raises(
+    tmp_path_factory, shape, member, op, where, n, mask
+):
+    """A sheet or shared-strings part with bytes cut off, flipped, deleted
+    or duplicated (re-zipped with a valid CRC) either reads or fails with
+    ``DataToParquetError``, on the driver's schema scan and in the task
+    reader: no raw ``ParseError``, ``struct.error``, ``ValueError`` or
+    ``IndexError`` escapes."""
+    import zipfile
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+
+    ext, parts, names, members = _mutation_base(shape, tmp_path_factory)
+    target = members[member % len(members)]
+    data = parts[target]
+    at = int(where * len(data))
+    data = {
+        "truncate": lambda: data[:at],
+        "flip": lambda: data[:at] + bytes([data[at] ^ mask]) + data[at + 1 :],
+        "delete": lambda: data[:at] + data[at + n :],
+        "duplicate": lambda: data[: at + n] + data[at : at + n] + data[at + n :],
+    }[op]()
+    path = str(tmp_path_factory.getbasetemp() / f"mutated{ext}")
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        for name, part in parts.items():
+            z.writestr(name, data if name == target else part)
+    for read in (
+        lambda: excel_mod.infer_schema(path),
+        lambda: list(excel_mod.read_workbook(path, None, None, 0, 50, names)),
+    ):
+        try:
+            read()
+        except DataToParquetError:
+            pass
 
 
 def test_read_excel_runs_one_python_stage(spark, tmp_path, monkeypatch):
@@ -756,7 +861,7 @@ def _machine_sheet_buffer(tmp_path, n_rows=3000):
      f'<x xmlns:m="{MAIN_NS}"/>'],
 )
 def test_fast_path_refuses_markup_past_64k(tmp_path, markup, noisy):
-    """Each markup the fast tiers refuse, placed between rows past the
+    """Each markup the columnar tier refuses, placed between rows past the
     first 64 KiB of a machine-written sheet, declines the buffer; with
     ``noisy``, more cells holding ``!``, ``?`` and ``L`` than the scan
     checks in place come first."""
@@ -819,20 +924,20 @@ def test_fast_path_rules_match_five_scans(pieces):
 
 
 def test_fast_and_et_walkers_agree(tmp_path):
-    """Every decoder tier must emit the ElementTree walker's stream exactly
-    (the fast tiers are only ever an optimization): the find-based walker,
-    and the columnar tier with no share of fallback rows declining it, on
-    machine-written and Excel-written cell forms."""
+    """The columnar tier must emit the ElementTree walker's stream exactly
+    (it is only ever an optimization) on machine-written and Excel-written
+    cell forms, decoding each cell outside its three shapes alone and no
+    row whole."""
     import io
     from unittest import mock
 
     from data_to_parquet_spark.sources import xlsx
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
+        _decode_cells,
         _fast_path_eligible,
         decode_columnar,
         walk_rows,
-        walk_rows_fast,
     )
 
     from .xlsx_fixture import write_xlsx
@@ -860,16 +965,24 @@ def test_fast_and_et_walkers_agree(tmp_path):
         data = wb._zip.read(member)
         sst = wb._shared_strings()
         assert _fast_path_eligible(data)
-        fast = list(walk_rows_fast(data, sst))
-        with mock.patch.object(xlsx, "_DECLINE_SHARE", 1.0):
-            columnar = decode_columnar(data, sst)
+        columnar = decode_columnar(data, sst)
         et = list(walk_rows(io.BytesIO(data), sst))
-    assert fast == et
+    seen = []
+
+    def spy(text, sst):
+        seen.append(text)
+        return _decode_cells(text, sst)
+
+    with mock.patch.object(xlsx, "_decode_cells", side_effect=spy):
+        assert list(columnar) == et
     assert [
         (int(r), columnar.cells(i)) for i, r in enumerate(columnar.row_index)
     ] == et
-    assert columnar._decode(0, len(columnar))[3] == 4  # rows 1, 5, 6, 7
-    assert len(fast) == 8
+    # escaped text (D2, D7), styled serials, formulas and rich text (rows
+    # 6-8), one cell per call
+    assert len(seen) == 11
+    assert all(len(_decode_cells(text, sst)) == 1 for text in seen)
+    assert len(et) == 8
     assert et[5][1] == [(0, "45292.5"), (1, "6"), (2, "a&b <c>"),
                         (3, "bold & plain <x>")]
 

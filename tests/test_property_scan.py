@@ -165,23 +165,19 @@ _walker_grid = st.lists(
 @settings(max_examples=40, deadline=None)
 @given(grid=_walker_grid)
 def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
-    """Differential fuzz: the find-based fast walker and the ElementTree
-    walker must emit identical (row, cells) streams for any fixture the
-    writer can produce (sparse cells, unicode, entities, floats, bools,
-    styled numbers, formulas, rich text); the columnar tier, with no share
-    of fallback rows declining it, must give the same cells row by row and
-    the same Arrow batches as those rows densified by ``_dense_batches``."""
+    """Differential fuzz: the columnar tier and the ElementTree walker must
+    emit identical (row, cells) streams for any fixture the writer can
+    produce (sparse cells, unicode, entities, floats, bools, styled
+    numbers, formulas, rich text), row by row and iterated, and the tier's
+    Arrow batches must equal those rows densified by ``_dense_batches``."""
     import io
-    from unittest import mock
 
-    from data_to_parquet_spark.sources import xlsx
     from data_to_parquet_spark.sources.excel import _dense_batches
     from data_to_parquet_spark.sources.xlsx import (
         XlsxWorkbook,
         _fast_path_eligible,
         decode_columnar,
         walk_rows,
-        walk_rows_fast,
     )
 
     path = str(
@@ -193,15 +189,13 @@ def test_fast_walker_matches_et_walker(grid, tmp_path_factory):
         data = wb._zip.read(member)
         sst = wb._shared_strings()
         assert _fast_path_eligible(data)
-        fast = list(walk_rows_fast(data, sst))
         et = list(walk_rows(io.BytesIO(data), sst))
-        with mock.patch.object(xlsx, "_DECLINE_SHARE", 1.0):
-            columnar = decode_columnar(data, sst)
-    assert fast == et
+        columnar = decode_columnar(data, sst)
     assert columnar is not None
     assert [
         (int(r), columnar.cells(i)) for i, r in enumerate(columnar.row_index)
     ] == et
+    assert list(columnar) == et
     width = max(len(row) for row in grid)
     names = [f"c{i}" for i in range(width)]
     got = list(columnar.batches(0, 0, width, 3, names))

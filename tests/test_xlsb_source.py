@@ -182,3 +182,52 @@ def test_truncated_xlsb_sheet(tmp_path, cut):
     else:
         with pytest.raises(DataToParquetError, match="'Data'.*truncated"):
             read()
+
+
+@pytest.mark.parametrize("closed", [True, False], ids=["closed", "cut"])
+def test_xlsb_sheet_data_must_close(tmp_path, closed):
+    """A part that opens BrtBeginSheetData must close it with
+    BrtEndSheetData: a part cut on a record boundary after the opening
+    fails the read with an error naming the file and the sheet, and the
+    closed part reads every row."""
+    import zipfile
+
+    from data_to_parquet_spark.sources import excel as excel_mod
+    from perfbench import gen
+
+    path = str(tmp_path / "paired.xlsb")
+    gen.write_xlsb(path, 400, 5)
+    names = excel_mod.infer_schema(path).fieldNames()
+    member = "xl/worksheets/sheet1.bin"
+    with zipfile.ZipFile(path) as z:
+        parts = {i.filename: z.read(i.filename) for i in z.infolist()}
+    part = parts[member]
+    records = _record_offsets(part)
+    # BrtBeginSheetData after the dimension record, BrtEndSheetData last
+    first_row = records[1][0]
+    body = part[first_row:]
+    if not closed:
+        body = body[: next(
+            h - first_row for h, _ in records[len(records) // 2:] if part[h] == 0x00
+        )]
+    parts[member] = (
+        part[:first_row] + gen._brt(0x91, b"") + body
+        + (gen._brt(0x92, b"") if closed else b"")
+    )
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
+        for name, data in parts.items():
+            z.writestr(name, data)
+
+    def read():
+        return [
+            r
+            for b in excel_mod.read_workbook(path, None, None, 0, 1000, names)
+            for r in b.to_pylist()
+        ]
+
+    if closed:
+        rows = read()
+        assert [r[names[0]] for r in rows] == [str(i) for i in range(400)]
+    else:
+        with pytest.raises(DataToParquetError, match="'Data'.*truncated"):
+            read()

@@ -1,9 +1,12 @@
 """The columnar tier (``decode_columnar``) must decode exactly like the row
-walkers. On the three machine-written cell shapes it decodes a row itself:
+walkers. On the three machine-written cell shapes it decodes a cell itself:
 numbers and booleans by vectorized rules, which these tests pin against
-``decode_value``. Any row holding another shape falls back to
-``_decode_cells`` and must give that decoder's output, while the other
-rows of the buffer stay columnar.
+``decode_value``. A cell of another shape is decoded alone by
+``_decode_cells`` while the rest of its row stays columnar; a row whose
+cells cannot be checked one by one (no leading ``r=``, text after the start
+tag, columns out of order, a bare ``<c>``) is decoded whole by
+``_decode_cells``. Either way the cells must be that decoder's output, and
+the other rows of the buffer stay columnar.
 """
 
 from __future__ import annotations
@@ -23,8 +26,7 @@ from data_to_parquet_spark.sources.xlsx import (
 )
 
 SST = ["alpha", "beta"]
-# machine-shaped rows after the row under test keep one refused row below
-# the share of fallback rows that declines a whole buffer
+# machine-shaped rows after the row under test, which must stay columnar
 _FILLER = "".join(
     f'<row r="{r}"><c r="A{r}"><v>{r}</v></c></row>' for r in range(2, 6)
 )
@@ -41,10 +43,19 @@ def _rows(body: str):
     return rows
 
 
-def fallback_rows(body: str) -> int:
-    """How many rows of the test buffer ``_decode_cells`` decoded."""
+def decoded_by_split(body: str) -> list[str]:
+    """The texts ``_decode_cells`` decoded while the tier decoded the whole
+    test buffer: single cells, or a row body that fell back whole."""
+    seen = []
+
+    def spy(text, sst):
+        seen.append(text)
+        return _decode_cells(text, sst)
+
     rows = _rows(body)
-    return rows._decode(0, len(rows))[3]
+    with mock.patch.object(xlsx, "_decode_cells", side_effect=spy):
+        rows._decode(0, len(rows))
+    return seen
 
 
 def dec(body: str):
@@ -83,7 +94,7 @@ def test_strict_decodes_the_three_shapes():
         (7, ""),
         (9, "raw"),  # explicit column gap honored (J skips I)
     ]
-    assert fallback_rows(body) == 0
+    assert decoded_by_split(body) == []
 
 
 def test_strict_numeric_renormalization_matches_generic():
@@ -149,40 +160,74 @@ def test_value_rules_match_decode_value(v, t):
 
 
 def test_strict_refuses_anything_else():
-    # escapes, style attrs, reordered attrs, multi-run inline strings,
-    # missing r, trailing junk, columns out of order — each such row falls
-    # back to the find-based decoder and gives exactly its cells
-    for body in (
-        '<c r="A1"><v>1&amp;2</v></c>',
-        '<c r="A1" s="3"><v>1</v></c>',
-        '<c t="b" r="A1"><v>1</v></c>',
-        '<c r="A1" t="inlineStr"><is><t>a</t><t>b</t></is></c>',
-        "<c><v>1</v></c>",
-        '<c r="A1"><v>1</v></c>junk',
-        'junk<c r="A1"><v>1</v></c>',
-        '<c r="A1" t="inlineStr"><is><t xml:space="preserve">a&lt;b</t></is></c>',
-        '<c r="B1"><v>1</v></c><c r="A1"><v>2</v></c>',
-        '<c r="A1"><v>1</v></c><c r="B1"><f>A1</f><v>2</v></c>',
+    # escapes, style attrs, multi-run inline strings, formulas and text
+    # after a cell: each such cell is decoded alone by the find-based
+    # decoder, and its neighbours stay columnar
+    for odd in (
+        '<c r="B1"><v>1&amp;2</v></c>',
+        '<c r="B1" s="3"><v>1</v></c>',
+        '<c r="B1" s="1" t="s"><v>1</v></c>',
+        '<c r="B1" t="inlineStr"><is><t>a</t><t>b</t></is></c>',
+        '<c r="B1"><v>1</v></c>junk',
+        '<c r="B1" t="inlineStr"><is><t xml:space="preserve">a&lt;b</t></is></c>',
+        '<c r="B1"><f>A1</f><v>2</v></c>',
     ):
-        assert fallback_rows(body) == 1, body
+        body = f'<c r="A1"><v>0</v></c>{odd}<c r="C1"><v>2</v></c>'
+        assert decoded_by_split(body) == [odd], body
         assert dec_any(body) == _decode_cells(body, SST), body
+    # reordered attrs, missing r, a bare <c>, junk after the start tag,
+    # columns out of order (also when an odd cell carries the column):
+    # the row falls back whole and gives exactly its cells
+    for body in (
+        '<c t="b" r="A1"><v>1</v></c><c r="B1"><v>2</v></c>',
+        '<c r="A1" s="1"><v>1</v></c><c s="1"><v>2</v></c>',
+        "<c><v>1</v></c>",
+        '<c r="A1"><v>1</v></c><c><v>2</v></c>',
+        'junk<c r="A1"><v>1</v></c>',
+        '<c r="B1"><v>1</v></c><c r="A1"><v>2</v></c>',
+        '<c r="B1" s="1"><v>1</v></c><c r="A1"><v>2</v></c>',
+    ):
+        seen = decoded_by_split(body)
+        assert seen[-1] == body and all(text in body for text in seen), body
+        assert dec_any(body) == _decode_cells(body, SST), body
+
+
+def test_empty_cell_ref_counts_as_absent():
+    """``r=""`` numbers its cell like a missing ``r=`` (the previous column
+    plus one), as ElementTree does, decoded alone or in a whole row."""
+    import io
+
+    for body in (
+        '<c r=""><v>1</v></c><c r="C1"><v>2</v></c>',
+        '<c r="B1"><v>1</v></c><c r=""><v>2</v></c>',
+    ):
+        doc = (
+            '<?xml version="1.0" encoding="UTF-8"?><worksheet xmlns="'
+            f'{xlsx._MAIN_NS_URI}"><sheetData><row r="1">{body}</row>'
+            "</sheetData></worksheet>"
+        ).encode()
+        et = list(xlsx.walk_rows(io.BytesIO(doc), SST))
+        assert list(decode_columnar(doc, SST)) == et, body
+        assert dec_any(body) == et[0][1] == _decode_cells(body, SST), body
 
 
 def test_repeated_column_falls_back_last_wins():
     body = '<c r="A1"><v>1</v></c><c r="A1"><v>2</v></c>'
-    assert fallback_rows(body) == 1
+    assert decoded_by_split(body) == [body]
     assert dec_any(body) == [(0, "2")]  # as the densifier assigns in order
 
 
 def test_escaped_cell_falls_back_only_its_row():
-    body = (
-        '<c r="A1"><v>1</v></c>'
+    """Only the escaped cell leaves the vectorized rules: it decodes alone,
+    its row's other cells and the other rows stay columnar."""
+    escaped = (
         '<c r="B1" t="inlineStr"><is><t xml:space="preserve">x &amp; y</t></is></c>'
-        '<c r="C1"><v>2.5</v></c>'
     )
+    body = f'<c r="A1"><v>1</v></c>{escaped}<c r="C1"><v>2.5</v></c>'
+    assert decoded_by_split(body) == [escaped]  # the four filler rows stay
     rows = _rows(body)
-    assert rows._decode(0, len(rows))[3] == 1  # the four filler rows stay
     assert rows.cells(0) == [(0, "1"), (1, "x & y"), (2, "2.5")]
+    assert rows.cells(0) == _decode_cells(body, SST)
     with mock.patch.object(
         xlsx, "_decode_cells", side_effect=AssertionError("row fell back")
     ):
